@@ -36,14 +36,28 @@ _IP_DATACENTER = [
 ]
 
 
-def default_repo_project(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        _REPO_PROJECT, "repo_slug string, project_key string, project_name string"
+def _values_table(spark: SparkSession, rows: list[tuple], columns: str) -> DataFrame:
+    """A literal ``VALUES`` table. It plans as a LocalRelation
+    (LocalTableScan), so broadcasting it starts no Python worker —
+    ``createDataFrame(list)`` parallelizes a Python RDD, and each of its
+    tasks forks one. Values bind as NAMED parameters: positional ``?``
+    markers in a VALUES list bind out of order on Spark 4.1."""
+    values = ", ".join(
+        "(" + ", ".join(f":v{i}_{j}" for j in range(len(r))) + ")"
+        for i, r in enumerate(rows)
+    )
+    return spark.sql(
+        f"SELECT * FROM VALUES {values} AS t({columns})",
+        args={f"v{i}_{j}": v for i, r in enumerate(rows) for j, v in enumerate(r)},
     )
 
 
+def default_repo_project(spark: SparkSession) -> DataFrame:
+    return _values_table(spark, _REPO_PROJECT, "repo_slug, project_key, project_name")
+
+
 def default_ip_datacenter(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(_IP_DATACENTER, "ip_prefix string, datacenter string")
+    return _values_table(spark, _IP_DATACENTER, "ip_prefix, datacenter")
 
 
 def ip_prefix_expr(ip: Column) -> Column:

@@ -20,9 +20,9 @@ lineage commits is repaired by an idempotent rewrite.
 Scale design: per-day aggregates are MERGEABLE partials — global
 repositoryStats / protocolStats roll up from the daily sinks without
 touching raw data; exact global percentiles come from the routed
-request_durations raw sink. Lineage row-counts come from the write
-job itself (Observation); an Iceberg backend would read them from the
-commit snapshot instead.
+request_durations raw sink. Lineage row-counts come from the parquet
+footers of the files each write left behind (SinkCatalog.day_rows),
+read on the driver; an Iceberg backend counts with a Spark aggregate.
 """
 
 from __future__ import annotations
@@ -262,8 +262,6 @@ def run_pipeline(
     # (the heavy tokens column is only read by the routed raw-row sink).
     # The stage is lineage-committed per day, so a resume never re-parses
     # committed days - the parsed table is itself a useful artifact.
-    from pyspark.sql import Observation
-
     stage_days = [d for d in days_needed if ("parsed_stage", d) not in committed]
     t0 = time.perf_counter()
     if stage_days:
@@ -305,25 +303,11 @@ def run_pipeline(
         # moves O(tasks) files. A round-robin-sharded input instead
         # yields tasks×days files; we accept that rather than paying a
         # full-payload reshuffle here.
-        obs = Observation()
-        stage_df = stage_df.observe(obs, F.count(F.lit(1)).alias("rows"))
         catalog.write_partitions(stage_df, "parsed_stage")
-        summary["stage_rows"] = int(obs.get["rows"])
-        # per-day lineage counts from the written partitions (footer
-        # metadata only — no data columns scanned); every discovered day
-        # has >= 1 row by construction, but guard the empty case anyway
-        stage_counts = {}
-        if summary["stage_rows"]:
-            stage_counts = {
-                r["day"]: r["n"]
-                for r in catalog.read("parsed_stage")
-                .filter(F.col("day").isin(stage_days))
-                .groupBy(F.col("day").cast("string").alias("day"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
+        stage_counts = catalog.day_rows("parsed_stage", stage_days)
+        summary["stage_rows"] = sum(stage_counts.values())
         catalog.commit(
-            [("parsed_stage", d, int(stage_counts.get(d, 0))) for d in stage_days],
+            [("parsed_stage", d, n) for d, n in stage_counts.items()],
             run_id,
         )
     mark("parse_stage", t0)
@@ -360,29 +344,16 @@ def run_pipeline(
         # safety net against a sink emitting days outside its commit set
         # (such rows could never be resumed).
         df = df.filter(F.col("day").isin(days))
-        obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         catalog.write_partitions(df, name, days=days)
-        batch_rows = int(obs.get["rows"])
-        # lineage carries TRUE per-day counts: a groupBy(day) over the
-        # freshly written, day-partitioned sink is footer-metadata work
-        # (no data columns are read). An all-empty write leaves only
-        # _SUCCESS behind (no readable parquet) — commit explicit zeros.
-        per_day = {}
-        if batch_rows:
-            per_day = {
-                r["day"]: r["n"]
-                for r in catalog.read(name)
-                .filter(F.col("day").isin(days))
-                .groupBy(F.col("day").cast("string").alias("day"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-        entries = [(name, d, int(per_day.get(d, 0))) for d in days]
-        catalog.commit(entries, run_id)
-        return name, {"days_written": len(days), "rows": batch_rows}, time.perf_counter() - t0
+        # lineage carries TRUE per-day counts from the written files; a
+        # day the sink emitted no rows for (no files) commits an
+        # explicit zero
+        per_day = catalog.day_rows(name, days)
+        catalog.commit([(name, d, n) for d, n in per_day.items()], run_id)
+        info = {"days_written": len(days), "rows": sum(per_day.values())}
+        return name, info, time.perf_counter() - t0
 
-    with ThreadPoolExecutor(max_workers=min(8, max(1, len(sinks)))) as ex:
+    with ThreadPoolExecutor(max_workers=len(sinks)) as ex:
         for name, info, dt in ex.map(_run_sink, sinks.items()):
             summary["sinks"][name] = info
             timings[f"sink_{name}"] = round(dt, 2)

@@ -288,6 +288,57 @@ class SinkCatalog:
         self.recover_compactions(sink)
         return self.spark.read.parquet(self._path(sink))
 
+    def day_rows(
+        self, sink: str, days: list | None = None, batch_id: int | None = None
+    ) -> dict[str, int]:
+        """{day: rows} of a sink's written day partitions — the lineage
+        row counts. The parquet backend sums ``num_rows`` from the
+        footers of the files a Spark read would list under ``day=D/``
+        and ``batch=*/day=D/`` (only ``batch=<batch_id>/`` when given),
+        on the driver: no Spark job, and the count is what the files
+        hold, not what a write job observed (a retried task would count
+        twice). ``days`` limits the result to those days and gives a day
+        without files an explicit 0; without it every written day is
+        listed. The Iceberg backend counts with a Spark aggregate."""
+        if self.use_iceberg:
+            df = self.spark.read.table(f"{self.base}.{sink}")
+            if batch_id is not None:
+                df = df.filter(F.col("batch") == batch_id)
+            if days is not None:
+                df = df.filter(F.col("day").isin(days))
+            got = {
+                r["day"]: r["count"]
+                for r in df.groupBy(F.col("day").cast("string").alias("day")).count().collect()
+            }
+            return got if days is None else {d: got.get(d, 0) for d in days}
+        import pyarrow.parquet as pq
+
+        # same repair a read runs first: a compaction crash can leave a
+        # day only in a dot-prefixed aside dir that listings skip
+        self.recover_compactions(sink)
+        root = self._path(sink)
+        if batch_id is not None:
+            parents = [os.path.join(root, f"batch={batch_id}")]
+        elif os.path.isdir(root):
+            parents = [root] + [e.path for e in os.scandir(root) if e.name.startswith("batch=")]
+        else:
+            parents = []
+        counts: dict[str, int] = {} if days is None else dict.fromkeys(days, 0)
+        for parent in parents:
+            if not os.path.isdir(parent):
+                continue
+            for part in os.scandir(parent):
+                day = part.name[len("day="):]
+                if not part.name.startswith("day=") or (days is not None and day not in counts):
+                    continue
+                counts[day] = counts.get(day, 0) + sum(
+                    pq.read_metadata(f.path).num_rows
+                    for f in os.scandir(part.path)
+                    # Spark's file listing skips _SUCCESS and .crc files
+                    if f.is_file() and not f.name.startswith(("_", "."))
+                )
+        return counts
+
     def exists(self, sink: str) -> bool:
         if self.use_iceberg:
             return self.spark.catalog.tableExists(f"{self.base}.{sink}")

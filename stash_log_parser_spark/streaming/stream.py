@@ -581,27 +581,14 @@ def streaming_ingest(
                     skipped = progress["order_sensitive_skipped"].setdefault(name, [])
                     skipped[:] = sorted(set(skipped) | spanning)
                 catalog.write_batch_partitions(out_df, name, batch_id)
-                root = catalog._path(name)
-                has_rows = os.path.isdir(root) and any(
-                    f.endswith(".parquet")
-                    for b, _, fs in os.walk(root)
-                    for f in fs
-                )
-                if not has_rows:  # e.g. every day purged as spanning
-                    return name, {}
-                return name, {
-                    r["day"]: r["n"]
-                    for r in catalog.read(name)
-                    .filter(F.col("batch") == batch_id)
-                    .groupBy(F.col("day").cast("string").alias("day"))
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
+                # every day this batch wrote; none when, e.g., every day
+                # was purged as spanning
+                return name, catalog.day_rows(name, batch_id=batch_id)
 
             from concurrent.futures import ThreadPoolExecutor
 
             entries = []
-            with ThreadPoolExecutor(max_workers=min(8, len(sinks))) as ex:
+            with ThreadPoolExecutor(max_workers=len(sinks)) as ex:
                 for name, per_day in ex.map(_write, sinks.items()):
                     entries += [(name, d, n) for d, n in sorted(per_day.items())]
             if spanning:

@@ -2,7 +2,13 @@
 
 from pyspark.sql import functions as F
 
-from stash_log_parser_spark.operators.enrich import enrich
+from stash_log_parser_spark.operators.enrich import (
+    _IP_DATACENTER,
+    _REPO_PROJECT,
+    default_ip_datacenter,
+    default_repo_project,
+    enrich,
+)
 
 
 def test_enrichment_goldens(parsed):
@@ -25,6 +31,22 @@ def test_enrichment_plans_as_broadcast_join(parsed):
     plan = enrich(parsed)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_default_dimensions_are_local_relations(spark, parsed):
+    """The default lookups are literal tables: broadcasting them runs no
+    Python-worker task (a createDataFrame(list) dimension is a Python
+    RDD scan), and enrich still broadcasts them."""
+    for dim, rows in (
+        (default_repo_project(spark), _REPO_PROJECT),
+        (default_ip_datacenter(spark), _IP_DATACENTER),
+    ):
+        plan = dim._jdf.queryExecution().executedPlan().toString()
+        assert plan.startswith("LocalTableScan"), plan
+        assert [tuple(r) for r in dim.collect()] == rows
+    plan = enrich(parsed)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BroadcastHashJoin") == 2
+    assert plan.count("LocalTableScan") == 2, plan
 
 
 class TestCidrEnrich:

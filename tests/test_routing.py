@@ -183,6 +183,31 @@ def test_lineage_rows_are_true_per_day_counts(spark, corpus_path, tmp_path):
         }
         for day, n in actual.items():
             assert lineage[(name, day)] == n, (name, day, lineage[(name, day)], n)
+        assert cat.day_rows(name) == actual, name
+
+
+def test_unforced_append_reads_only_the_stage(spark, corpus_path, tmp_path, monkeypatch):
+    """A one-day append takes its lineage counts from the written files'
+    footers: the only sink it reads through Spark is the parsed stage
+    its sinks fan out from, never a sink it has just written."""
+    df = spark.read.parquet(corpus_path)
+    day = F.regexp_extract("source", r"(\d{4}-\d{2}-\d{2})", 1)
+    last = max(r.d for r in df.select(day.alias("d")).distinct().collect())
+    inp = str(tmp_path / "input")
+    df.filter(day != last).write.parquet(inp)
+    out = str(tmp_path / "sinks")
+    run_pipeline(spark, inp, out, run_id="history")
+    df.filter(day == last).write.mode("append").parquet(inp)
+
+    reads = []
+    read = SinkCatalog.read
+    monkeypatch.setattr(
+        SinkCatalog, "read", lambda self, sink: reads.append(sink) or read(self, sink)
+    )
+    s = run_pipeline(spark, inp, out, run_id="append")
+    assert s["days_parsed"] == 1
+    assert reads == ["parsed_stage"]
+    assert s["stage_rows"] == df.filter(day == last).count()
 
 
 def test_cross_midnight_rows_route_to_file_day(spark, tmp_path):
@@ -348,6 +373,8 @@ def test_all_malformed_corpus_zero_row_sinks_and_lineage(spark, tmp_path):
     assert s["sinks"]["git_operations"]["rows"] == 0
     lin = cat.read("_lineage").filter("sink = 'git_operations'").collect()
     assert [(str(r.day), r.rows) for r in lin] == [("2012-09-08", 0)]
+    # the aggregate sinks wrote no files: the footer count is an explicit 0
+    assert cat.day_rows("git_operations", ["2012-09-08"]) == {"2012-09-08": 0}
     s2 = run_pipeline(spark, inp, out, run_id="bad-resume")
     assert s2["days_parsed"] == 0
 
@@ -434,6 +461,12 @@ def test_compaction_crash_windows_never_double_rows(spark, tmp_path):
     shutil.copytree(day_dir, aside)
     assert cat.recover_compactions("s") == {"day=2012-09-08": "finished_swap"}
     assert rows() == truth and not os.path.exists(aside)
+
+    # the footer row count repairs first, as a read does: with the day
+    # only in the aside dir it still counts the day's rows
+    os.rename(day_dir, aside)
+    assert cat.day_rows("s") == {"2012-09-08": len(truth)}
+    assert not os.path.exists(aside) and rows() == truth
 
     # and compact_partitions itself self-heals stale state, then
     # compacts the 6-file day into one file with identical rows

@@ -412,6 +412,16 @@ def test_auto_backfill_on_partially_spanning_days(spark, day_aligned_dir, tmp_pa
     committed = SinkCatalog(spark, sout).committed()
     for n in ORDER_SENSITIVE_SINKS:
         assert (n, split_day) in committed
+    # footer row counts sum each day over batch=N and the batch=-1 backfill
+    for name in SINKS:
+        want = {
+            r.day: r["count"]
+            for r in spark.read.parquet(f"{sout}/{name}")
+            .groupBy(F.col("day").cast("string").alias("day"))
+            .count()
+            .collect()
+        }
+        assert SinkCatalog(spark, sout).day_rows(name) == want, name
 
     bout = str(tmp_path / "batch_twin")
     run_pipeline(spark, day_aligned_dir, bout, run_id="twin")
