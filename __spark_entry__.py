@@ -1,6 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``queries()`` exposes every implemented operator from SURVEY.md §2/§3:
+``queries()`` exposes every implemented operator from SURVEY.md §2/§3.
+Every module-level ``_q_<name>`` function is registered as ``<name>``:
 
 * ``log_*`` — the stash-log-parser analyses, run end-to-end on a
   deterministic tokenized access-log corpus committed at
@@ -6612,359 +6613,7 @@ def _q_log_repo_gini(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        # stash-log-parser analyses (SURVEY.md §3.5/§3.4)
-        "log_count_requests": _q_log_count_requests,
-        "log_protocol_counts": _q_log_protocol_counts,
-        "log_protocol_by_hour": _q_log_protocol_by_hour,
-        "log_git_operations": _q_log_git_operations,
-        "log_repository_stats": _q_log_repository_stats,
-        "log_repository_stats_salted": _q_log_repository_stats_salted,
-        "log_request_durations": _q_log_request_durations,
-        "log_duration_percentiles": _q_log_duration_percentiles,
-        "log_duration_percentiles_sketch": _q_log_duration_percentiles_sketch,
-        "log_latency_heatmap": _q_log_latency_heatmap,
-        "log_max_concurrent": _q_log_max_concurrent,
-        "log_concurrency_by_hour": _q_log_concurrency_by_hour,
-        "log_concurrency_by_minute": _q_log_concurrency_by_minute,
-        "log_pairing_stats": _q_log_pairing_stats,
-        "log_top_users": _q_log_top_users,
-        "log_cache_stats": _q_log_cache_stats,
-        "log_git_client_versions": _q_log_git_client_versions,
-        "log_referrer_stats": _q_log_referrer_stats,
-        "log_session_stats": _q_log_session_stats,
-        "log_unique_users_daily": _q_log_unique_users_daily,
-        "log_malformed_by_source": _q_log_malformed_by_source,
-        "log_enrich_project": _q_log_enrich_project,
-        "log_pipeline_e2e": _q_log_pipeline_e2e,
-        "log_stream_ingest": _q_log_stream_ingest,
-        "log_stream_duration_sketch": _q_log_stream_duration_sketch,
-        # operator shapes over driver tables
-        "events_hourly_type_counts": _q_events_hourly_type_counts,
-        "events_running_max": _q_events_running_max,
-        "events_percentiles": _q_events_percentiles,
-        "events_sessionize": _q_events_sessionize,
-        "events_gap_detection": _q_events_gap_detection,
-        "events_rolling_1h": _q_events_rolling_1h,
-        "events_dau_wau": _q_events_dau_wau,
-        "docs_length_histogram": _q_docs_length_histogram,
-        "events_last_touch": _q_events_last_touch,
-        "log_token_integrity": _q_log_token_integrity,
-        "log_sketch_error_audit": _q_log_sketch_error_audit,
-        "emb_int8_recall_audit": _q_emb_int8_recall_audit,
-        "log_weekday_profile": _q_log_weekday_profile,
-        "docs_source_jaccard": _q_docs_source_jaccard,
-        "log_burstiness": _q_log_burstiness,
-        "log_autocorr_lag1": _q_log_autocorr_lag1,
-        "events_markov_transitions": _q_events_markov_transitions,
-        "events_mad_outliers": _q_events_mad_outliers,
-        "docs_zorder_key": _q_docs_zorder_key,
-        "docs_dup_ngram_spans": _q_docs_dup_ngram_spans,
-        "docs_source_kl_drift": _q_docs_source_kl_drift,
-        "tpch_waiting_suppliers": _q_tpch_waiting_suppliers,
-        "tpch_important_parts": _q_tpch_important_parts,
-        "tpch_product_profit": _q_tpch_product_profit,
-        "tpch_min_cost_supplier": _q_tpch_min_cost_supplier,
-        "tpch_dominant_suppliers": _q_tpch_dominant_suppliers,
-        "emb_pca_power": _q_emb_pca_power,
-        "docs_length_quartiles": _q_docs_length_quartiles,
-        "docs_length_quartiles_hist": _q_docs_length_quartiles_hist,
-        "log_templates": _q_log_templates,
-        "log_skew_report": _q_log_skew_report,
-        "events_retention_weekly": _q_events_retention_weekly,
-        "events_psi_drift": _q_events_psi_drift,
-        "events_ab_funnel": _q_events_ab_funnel,
-        "events_survival_km": _q_events_survival_km,
-        "events_did": _q_events_did,
-        "tpch_salted_join": _q_tpch_salted_join,
-        "tpch_basket_rules": _q_tpch_basket_rules,
-        "log_token_vocab_census": _q_log_token_vocab_census,
-        "log_token_cdc_dedup": _q_log_token_cdc_dedup,
-        "emb_pq_codebook": _q_emb_pq_codebook,
-        "emb_pq_recall": _q_emb_pq_recall,
-        "emb_ivfpq_topk": _q_emb_ivfpq_topk,
-        "events_stream_topk": _q_events_stream_topk,
-        "events_uplift_segments": _q_events_uplift_segments,
-        "log_token_bigram_novelty": _q_log_token_bigram_novelty,
-        "log_token_surprisal": _q_log_token_surprisal,
-        "log_token_pmi": _q_log_token_pmi,
-        "events_funnel_windowed": _q_events_funnel_windowed,
-        "log_jsonl_front_door": _q_log_jsonl_front_door,
-        "events_hourly_densified": _q_events_hourly_densified,
-        "events_holt_forecast": _q_events_holt_forecast,
-        "events_ipw_ate": _q_events_ipw_ate,
-        "log_token_coverage_curve": _q_log_token_coverage_curve,
-        "log_dpp_prune": _q_log_dpp_prune,
-        "log_erlang_capacity": _q_log_erlang_capacity,
-        "events_obrien_fleming": _q_events_obrien_fleming,
-        "log_burn_multiwindow": _q_log_burn_multiwindow,
-        "events_winsorized_lift": _q_events_winsorized_lift,
-        "events_stream_ewma": _q_events_stream_ewma,
-        "events_holt_winters": _q_events_holt_winters,
-        "events_shapley_attribution": _q_events_shapley_attribution,
-        "events_rate_limit": _q_events_rate_limit,
-        "events_did_pretrends": _q_events_did_pretrends,
-        "log_autoscale_sim": _q_log_autoscale_sim,
-        "log_repo_gini": _q_log_repo_gini,
-        "log_token_prefix_groups": _q_log_token_prefix_groups,
-        "docs_topic_tags": _q_docs_topic_tags,
-        "docs_shard_rebalance": _q_docs_shard_rebalance,
-        "events_stream_late_drop": _q_events_stream_late_drop,
-        "events_stream_window_final": _q_events_stream_window_final,
-        "docs_heavy_hitters": _q_docs_heavy_hitters,
-        "docs_incremental_dedup": _q_docs_incremental_dedup,
-        "tpch_scd2_asof": _q_tpch_scd2_asof,
-        "log_token_decontam": _q_log_token_decontam,
-        "log_token_drift": _q_log_token_drift,
-        "log_token_truncation": _q_log_token_truncation,
-        "docs_quality_calibration": _q_docs_quality_calibration,
-        "docs_label_agreement": _q_docs_label_agreement,
-        "docs_zipf_topk": _q_docs_zipf_topk,
-        "emb_cosine_lag_hist": _q_emb_cosine_lag_hist,
-        "tpch_join_size_stats": _q_tpch_join_size_stats,
-        "events_user_segments": _q_events_user_segments,
-        "tpch_pricing_summary": _q_tpch_pricing_summary,
-        "tpch_top_customers": _q_tpch_top_customers,
-        "events_type_hour_cube": _q_events_type_hour_cube,
-        "events_outliers": _q_events_outliers,
-        "tpch_shipping_priority": _q_tpch_shipping_priority,
-        "tpch_local_supplier_volume": _q_tpch_local_supplier_volume,
-        "events_orders_asof": _q_events_orders_asof,
-        "parts_balance_range_join": _q_parts_balance_range_join,
-        "events_intersect_except": _q_events_intersect_except,
-        # training-data operators
-        "docs_text_stats": _q_docs_text_stats,
-        "docs_langid": _q_docs_langid,
-        "docs_fingerprint": _q_docs_fingerprint,
-        "docs_exact_dedup": _q_docs_exact_dedup,
-        "docs_dedup_corpus": _q_docs_dedup_corpus,
-        "docs_dedup_clusters": _q_docs_dedup_clusters,
-        "docs_cluster_survivors": _q_docs_cluster_survivors,
-        "docs_train_test_split": _q_docs_train_test_split,
-        "docs_pii_scrub": _q_docs_pii_scrub,
-        "docs_repetition": _q_docs_repetition,
-        "docs_cross_dedup": _q_docs_cross_dedup,
-        "docs_stream_dedup": _q_docs_stream_dedup,
-        "events_sliding_rate": _q_events_sliding_rate,
-        "events_pivot_types": _q_events_pivot_types,
-        "docs_subsample_k": _q_docs_subsample_k,
-        "docs_decontaminate": _q_docs_decontaminate,
-        "docs_word_rarity": _q_docs_word_rarity,
-        "docs_segment_dedup": _q_docs_segment_dedup,
-        "docs_boilerplate": _q_docs_boilerplate,
-        "events_pattern_match": _q_events_pattern_match,
-        "docs_curate_v2": _q_docs_curate_v2,
-        "docs_gopher_quality": _q_docs_gopher_quality,
-        "docs_tfidf_terms": _q_docs_tfidf_terms,
-        "docs_sample_mixture": _q_docs_sample_mixture,
-        "docs_quality_sampled": _q_docs_quality_sampled,
-        "docs_bigram_lm": _q_docs_bigram_lm,
-        "docs_kneser_ney": _q_docs_kneser_ney,
-        "docs_shard_balance": _q_docs_shard_balance,
-        "docs_vocab_growth": _q_docs_vocab_growth,
-        "docs_zipf_fit": _q_docs_zipf_fit,
-        "log_hourly_trend": _q_log_hourly_trend,
-        "docs_language_mix": _q_docs_language_mix,
-        "corpus_pack_efficiency": _q_corpus_pack_efficiency,
-        "events_mode_by_type": _q_events_mode_by_type,
-        "emb_norm_stats": _q_emb_norm_stats,
-        "docs_dup_ratio_by_source": _q_docs_dup_ratio_by_source,
-        "corpus_pack_boundary": _q_corpus_pack_boundary,
-        "corpus_pack_greedy": _q_corpus_pack_greedy,
-        "docs_simhash_pairs": _q_docs_simhash_pairs,
-        "events_retention_cohorts": _q_events_retention_cohorts,
-        "tpch_returned_items": _q_tpch_returned_items,
-        "tpch_priority_semi": _q_tpch_priority_semi,
-        "tpch_revenue_forecast": _q_tpch_revenue_forecast,
-        "tpch_order_count_dist": _q_tpch_order_count_dist,
-        "tpch_promo_revenue": _q_tpch_promo_revenue,
-        "tpch_top_supplier": _q_tpch_top_supplier,
-        "tpch_small_qty_revenue": _q_tpch_small_qty_revenue,
-        "tpch_large_orders": _q_tpch_large_orders,
-        "tpch_nation_volume": _q_tpch_nation_volume,
-        "tpch_idle_rich_customers": _q_tpch_idle_rich_customers,
-        "tpch_disjunctive_revenue": _q_tpch_disjunctive_revenue,
-        "tpch_market_share": _q_tpch_market_share,
-        "tpch_supplier_census": _q_tpch_supplier_census,
-        "tpch_priority_shipping": _q_tpch_priority_shipping,
-        "events_funnel": _q_events_funnel,
-        "docs_top_ngrams": _q_docs_top_ngrams,
-        "docs_curate_corpus": _q_docs_curate_corpus,
-        "docs_curate_corpus_clustered": _q_docs_curate_corpus_clustered,
-        "docs_contamination": _q_docs_contamination,
-        "log_stream_pairs": _q_log_stream_pairs,
-        "log_stream_interval_join": _q_log_stream_interval_join,
-        "log_stream_outer_join": _q_log_stream_outer_join,
-        "log_stream_pairs_multibatch": _q_log_stream_pairs_multibatch,
-        "docs_jaccard_top_pairs": _q_docs_jaccard_top_pairs,
-        "docs_prefix_filter_pairs": _q_docs_prefix_filter_pairs,
-        "docs_minhash_lsh_pairs": _q_docs_minhash_lsh_pairs,
-        "docs_simhash": _q_docs_simhash,
-        "emb_knn_bruteforce": _q_emb_knn_bruteforce,
-        "emb_mutual_knn": _q_emb_mutual_knn,
-        "emb_lsh_topk": _q_emb_lsh_topk,
-        "emb_ivf_topk": _q_emb_ivf_topk,
-        "emb_mutual_knn_ivf": _q_emb_mutual_knn_ivf,
-        "emb_ivf_kmeans_topk": _q_emb_ivf_kmeans_topk,
-        "emb_silhouette": _q_emb_silhouette,
-        "emb_label_centroids": _q_emb_label_centroids,
-        "emb_centroid_sims": _q_emb_centroid_sims,
-        "emb_quantize_int8": _q_emb_quantize_int8,
-        "emb_knn_int8": _q_emb_knn_int8,
-        "emb_near_dup_pairs": _q_emb_near_dup_pairs,
-        "emb_near_dup_bruteforce": _q_emb_near_dup_bruteforce,
-        "media_features": _q_media_features,
-        "media_resize": _q_media_resize,
-        "media_frames": _q_media_frames,
-        "docs_dsir_importance": _q_docs_dsir_importance,
-        "corpus_token_budget": _q_corpus_token_budget,
-        "emb_hard_negatives": _q_emb_hard_negatives,
-        "log_top_repo_p99": _q_log_top_repo_p99,
-        "events_hll_users": _q_events_hll_users,
-        "events_stream_sessionize": _q_events_stream_sessionize,
-        "log_repo_coaccess": _q_log_repo_coaccess,
-        "docs_token_counts": _q_docs_token_counts,
-        "docs_quantile_norm": _q_docs_quantile_norm,
-        "events_cusum_drift": _q_events_cusum_drift,
-        "events_pettitt": _q_events_pettitt,
-        "docs_weighted_sample": _q_docs_weighted_sample,
-        "events_stream_dedup_native": _q_events_stream_dedup_native,
-        "docs_kmv_vocab": _q_docs_kmv_vocab,
-        "log_repo_pagerank": _q_log_repo_pagerank,
-        "log_repo_triangles": _q_log_repo_triangles,
-        "docs_cms_tokens": _q_docs_cms_tokens,
-        "docs_chunk_stride": _q_docs_chunk_stride,
-        "docs_char_entropy": _q_docs_char_entropy,
-        "events_seasonal_naive": _q_events_seasonal_naive,
-        "emb_matryoshka_recall": _q_emb_matryoshka_recall,
-        "docs_url_domains": _q_docs_url_domains,
-        "events_session_paths": _q_events_session_paths,
-        "docs_winsorized": _q_docs_winsorized,
-        "events_hll_sliding": _q_events_hll_sliding,
-        "docs_lsh_recall_audit": _q_docs_lsh_recall_audit,
-        "docs_ngram_novelty": _q_docs_ngram_novelty,
-        "log_fuzzy_users": _q_log_fuzzy_users,
-        "docs_token_pmi": _q_docs_token_pmi,
-        "docs_tokenizer_fertility": _q_docs_tokenizer_fertility,
-        "log_benford_durations": _q_log_benford_durations,
-        "log_slo_burn": _q_log_slo_burn,
-        "events_key_skew": _q_events_key_skew,
-        "docs_bpe_merges": _q_docs_bpe_merges,
-        "log_repo_kcore": _q_log_repo_kcore,
-        "log_repo_hits": _q_log_repo_hits,
-        "log_repo_adamic_adar": _q_log_repo_adamic_adar,
-        "docs_vocab_coverage": _q_docs_vocab_coverage,
-        "docs_bpe_compression": _q_docs_bpe_compression,
-        "events_scd2": _q_events_scd2,
-        "log_apdex": _q_log_apdex,
-        "emb_mmr_topk": _q_emb_mmr_topk,
-        "docs_pair_edit": _q_docs_pair_edit,
-        "docs_bm25_topk": _q_docs_bm25_topk,
-        "docs_retrieval_ndcg": _q_docs_retrieval_ndcg,
-        "emb_rrf_fusion": _q_emb_rrf_fusion,
-        "log_repo_lpa": _q_log_repo_lpa,
-        "log_repo_assoc": _q_log_repo_assoc,
-        "tpch_bloom_prune": _q_tpch_bloom_prune,
-        "log_theil_sen": _q_log_theil_sen,
-        "events_ab_lift": _q_events_ab_lift,
-        "events_fdr_bh": _q_events_fdr_bh,
-        "docs_quality_auc": _q_docs_quality_auc,
-        "docs_hill_tail": _q_docs_hill_tail,
-        "corpus_curriculum_order": _q_corpus_curriculum_order,
-        "log_littles_law": _q_log_littles_law,
-        "emb_class_separability": _q_emb_class_separability,
-        "emb_jl_recall_audit": _q_emb_jl_recall_audit,
-        "events_markov_entropy": _q_events_markov_entropy,
-        "docs_norm_dedup": _q_docs_norm_dedup,
-        "log_cidr_enrich": _q_log_cidr_enrich,
-        "docs_lang_confusion": _q_docs_lang_confusion,
-        "log_p_chart": _q_log_p_chart,
-        "events_cohort_ltv": _q_events_cohort_ltv,
-        "events_seasonality_strength": _q_events_seasonality_strength,
-        "tpch_incremental_agg": _q_tpch_incremental_agg,
-        "events_srm_check": _q_events_srm_check,
-        "events_conversion_lag": _q_events_conversion_lag,
-        "docs_cdc_apply": _q_docs_cdc_apply,
-        "tpch_dq_expectations": _q_tpch_dq_expectations,
-        "log_k_anonymity": _q_log_k_anonymity,
-        "events_cum_users": _q_events_cum_users,
-        "docs_oov_rate": _q_docs_oov_rate,
-        "log_identity_clusters": _q_log_identity_clusters,
-        "events_stream_hll": _q_events_stream_hll,
-        "docs_source_temperature": _q_docs_source_temperature,
-        "log_ewma_smooth": _q_log_ewma_smooth,
-        "tpch_zonemap_prune": _q_tpch_zonemap_prune,
-        "log_repo_jaccard": _q_log_repo_jaccard,
-        "docs_readability": _q_docs_readability,
-        "events_decay_engagement": _q_events_decay_engagement,
-        "emb_nprobe_sweep": _q_emb_nprobe_sweep,
-        "docs_ppl_buckets": _q_docs_ppl_buckets,
-        "emb_semdedup": _q_emb_semdedup,
-        "events_bootstrap_ci": _q_events_bootstrap_ci,
-        "events_seasonal_anomaly": _q_events_seasonal_anomaly,
-        "events_hll_overlap": _q_events_hll_overlap,
-        "corpus_epoch_plan": _q_corpus_epoch_plan,
-        "log_stream_enrich": _q_log_stream_enrich,
-        "docs_pair_bleu": _q_docs_pair_bleu,
-        "events_linear_attribution": _q_events_linear_attribution,
-        "events_cuped": _q_events_cuped,
-        "log_bot_flags": _q_log_bot_flags,
-        "events_props_variant": _q_events_props_variant,
-        "events_unpivot": _q_events_unpivot,
-        "log_concurrency_twa": _q_log_concurrency_twa,
-        "events_rfm_segments": _q_events_rfm_segments,
-        "log_p99_ci": _q_log_p99_ci,
-        "tpch_revenue_pareto": _q_tpch_revenue_pareto,
-        "emb_knn_outliers": _q_emb_knn_outliers,
-        "events_ab_power": _q_events_ab_power,
-        "docs_pair_containment": _q_docs_pair_containment,
-        "docs_token_linear_probe": _q_docs_token_linear_probe,
-        "docs_loo_probe_influence": _q_docs_loo_probe_influence,
-        "docs_signal_spearman": _q_docs_signal_spearman,
-        "docs_chi2_independence": _q_docs_chi2_independence,
-        "emb_intrinsic_dim": _q_emb_intrinsic_dim,
-        "events_mann_whitney": _q_events_mann_whitney,
-        "events_ks_two_sample": _q_events_ks_two_sample,
-        "docs_vocab_richness": _q_docs_vocab_richness,
-        "docs_pmi_collocations": _q_docs_pmi_collocations,
-        "docs_token_burstiness": _q_docs_token_burstiness,
-        "events_js_divergence": _q_events_js_divergence,
-        "log_arrival_dispersion": _q_log_arrival_dispersion,
-        "docs_word_cond_entropy": _q_docs_word_cond_entropy,
-        "docs_incremental_near_dedup": _q_docs_incremental_near_dedup,
-        "docs_neyman_allocation": _q_docs_neyman_allocation,
-        "emb_kcenter_coreset": _q_emb_kcenter_coreset,
-        "events_sprt": _q_events_sprt,
-        "log_user_entropy": _q_log_user_entropy,
-        "events_xcorr_lag": _q_events_xcorr_lag,
-        "docs_data_card": _q_docs_data_card,
-        "docs_token_runs": _q_docs_token_runs,
-        "corpus_unimax": _q_corpus_unimax,
-        "docs_split_leakage": _q_docs_split_leakage,
-        "docs_near_split_leakage": _q_docs_near_split_leakage,
-        "docs_dup_size_pareto": _q_docs_dup_size_pareto,
-        "corpus_shuffle_order": _q_corpus_shuffle_order,
-        "corpus_interleave_order": _q_corpus_interleave_order,
-        "corpus_order_audit": _q_corpus_order_audit,
-        "docs_lsh_s_curve": _q_docs_lsh_s_curve,
-        "tpch_rollup_sales": _q_tpch_rollup_sales,
-        "tpch_sql_grouping_sets": _q_tpch_sql_grouping_sets,
-        "events_stream_scd2_enrich": _q_events_stream_scd2_enrich,
-        "docs_winnow_fingerprints": _q_docs_winnow_fingerprints,
-        "docs_winnow_shared_pairs": _q_docs_winnow_shared_pairs,
-        "log_shadow_diff": _q_log_shadow_diff,
-        "docs_dup_span_removal": _q_docs_dup_span_removal,
-        "events_session_gap_sweep": _q_events_session_gap_sweep,
-        "docs_jaccard_threshold_sweep": _q_docs_jaccard_threshold_sweep,
-        "docs_domain_cap": _q_docs_domain_cap,
-        "docs_conformal_bounds": _q_docs_conformal_bounds,
-        "events_wasserstein_drift": _q_events_wasserstein_drift,
-        "emb_rbo_overlap": _q_emb_rbo_overlap,
-        "docs_length_gini": _q_docs_length_gini,
-        "events_qq_shift": _q_events_qq_shift,
-        "events_stream_psi": _q_events_stream_psi,
-        "events_logrank": _q_events_logrank,
-    }
+    return {name[3:]: fn for name, fn in globals().items() if name.startswith("_q_")}
 
 
 # ---------------------------------------------------------------------------
@@ -8156,10 +7805,10 @@ SELECT CAST(s AS INTEGER) AS s, CAST(code AS INTEGER) AS code,
        floor(CAST(sum(CAST(floor(d * 1e6 + 0.5) AS BIGINT)) AS DOUBLE)
              / (count(*) * 1000000.0) * 1000000 + 0.5) / 1000000 AS mean_dist
 FROM a1 GROUP BY s, code ORDER BY s, code""",
-        "log_token_vocab_census": """
+        "log_token_vocab_census": f"""
 WITH tok AS (
   SELECT source, doc_id, unnest(tokens) AS t
-  FROM read_parquet('/root/repo/data/log_corpus_small.parquet')),
+  FROM read_parquet('{CORPUS}')),
 census AS (
   SELECT source, t, CAST(count(*) AS BIGINT) AS c
   FROM tok GROUP BY source, t),
@@ -8169,7 +7818,7 @@ ranked AS (
   FROM census),
 nd AS (
   SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-  FROM read_parquet('/root/repo/data/log_corpus_small.parquet')
+  FROM read_parquet('{CORPUS}')
   GROUP BY source),
 agg AS (
   SELECT source,
@@ -8186,8 +7835,8 @@ SELECT agg.source, n_docs, n_tokens, n_distinct_ids, min_id, max_id,
        floor(topk::DOUBLE / n_tokens * 1000000 + 0.5) / 1000000 AS coverage_topk
 FROM agg JOIN nd ON agg.source = nd.source
 ORDER BY agg.source""",
-        "log_token_cdc_dedup": """
-WITH c AS (SELECT * FROM read_parquet('/root/repo/data/log_corpus_small.parquet')),
+        "log_token_cdc_dedup": f"""
+WITH c AS (SELECT * FROM read_parquet('{CORPUS}')),
 tok AS (
   SELECT source, doc_id, p, tokens[p] AS t,
          CASE WHEN p >= 4 AND md5(concat_ws(',', tokens[p-3], tokens[p-2],
@@ -8221,8 +7870,8 @@ SELECT source,
        floor(sum(dup * chunk_len)::DOUBLE / sum(chunk_len)
              * 1000000 + 0.5) / 1000000 AS dup_token_share
 FROM occ GROUP BY source ORDER BY source""",
-        "log_token_bigram_novelty": """
-WITH c AS (SELECT * FROM read_parquet('/root/repo/data/log_corpus_small.parquet')),
+        "log_token_bigram_novelty": f"""
+WITH c AS (SELECT * FROM read_parquet('{CORPUS}')),
 bg AS (
   SELECT source, unnest(list_transform(generate_series(1, n_tok - 1),
                                        k -> tokens[k] * 256 + tokens[k + 1])) AS b
@@ -8242,8 +7891,8 @@ SELECT p.source, n_docs, n_bigrams,
        END AS novelty
 FROM per_doc p LEFT JOIN agg a ON p.source = a.source
 ORDER BY p.source""",
-        "log_token_surprisal": """
-WITH c AS (SELECT * FROM read_parquet('/root/repo/data/log_corpus_small.parquet')
+        "log_token_surprisal": f"""
+WITH c AS (SELECT * FROM read_parquet('{CORPUS}')
            WHERE n_tok > 0),
 tok AS (SELECT doc_id, unnest(tokens) AS t FROM c),
 census AS (SELECT t, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY t),
@@ -8268,8 +7917,8 @@ SELECT source, CAST(rank AS INTEGER) AS rank, doc_id, n_tok, surprisal_e6,
        floor(surprisal_e6::DOUBLE / n_tok / 1000000 * 1000000 + 0.5)
          / 1000000 AS mean_surprisal
 FROM ranked WHERE rank <= 5 ORDER BY source, rank""",
-        "log_token_pmi": """
-WITH c AS (SELECT * FROM read_parquet('/root/repo/data/log_corpus_small.parquet')
+        "log_token_pmi": f"""
+WITH c AS (SELECT * FROM read_parquet('{CORPUS}')
            WHERE n_tok > 0),
 bg AS (
   SELECT source, tokens[p] AS t1, tokens[p + 1] AS t2,
@@ -8374,11 +8023,11 @@ SELECT * FROM (
   SELECT '_malformed',
          CAST((SELECT count(*) FROM parsed WHERE NOT is_parsed)
               + 2 * (SELECT count(DISTINCT day)
-                     FROM read_parquet('/root/repo/data/log_corpus_small.parquet'))
+                     FROM read_parquet('{CORPUS}'))
               AS BIGINT))
 ORDER BY protocol""",
-        "log_token_prefix_groups": """
-WITH c AS (SELECT * FROM read_parquet('/root/repo/data/log_corpus_small.parquet')
+        "log_token_prefix_groups": f"""
+WITH c AS (SELECT * FROM read_parquet('{CORPUS}')
            WHERE n_tok >= 16),
 g AS (
   SELECT md5(array_to_string(list_transform(tokens[1:16],
@@ -8478,10 +8127,10 @@ SELECT window_start, n_final FROM (
   WHERE we <= mall - INTERVAL 2 HOUR)
 WHERE n_final > 0
 ORDER BY window_start""",
-        "log_token_drift": """
+        "log_token_drift": f"""
 WITH tok AS (
   SELECT day, unnest(tokens) AS t
-  FROM read_parquet('/root/repo/data/log_corpus_small.parquet')),
+  FROM read_parquet('{CORPUS}')),
 census AS (
   SELECT day, t, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY day, t),
 d0 AS (SELECT min(day) AS d0 FROM census),
@@ -8506,8 +8155,8 @@ SELECT day,
        CAST(sum(CASE WHEN n_b IS NULL THEN 1 ELSE 0 END) AS BIGINT)
          AS n_skipped_ids
 FROM cur GROUP BY day ORDER BY day""",
-        "log_token_truncation": """
-WITH c AS (SELECT * FROM read_parquet('/root/repo/data/log_corpus_small.parquet'))
+        "log_token_truncation": f"""
+WITH c AS (SELECT * FROM read_parquet('{CORPUS}'))
 SELECT source,
        CAST(count(*) AS BIGINT) AS n_docs,
        CAST(sum(CASE WHEN n_tok > 150 THEN 1 ELSE 0 END) AS BIGINT)
@@ -8517,8 +8166,8 @@ SELECT source,
        floor(sum(greatest(n_tok - 150, 0))::DOUBLE / sum(n_tok)
              * 1000000 + 0.5) / 1000000 AS loss_rate
 FROM c GROUP BY source ORDER BY source""",
-        "log_token_decontam": """
-WITH c AS (SELECT * FROM read_parquet('/root/repo/data/log_corpus_small.parquet')),
+        "log_token_decontam": f"""
+WITH c AS (SELECT * FROM read_parquet('{CORPUS}')),
 md AS (SELECT max(day) AS d FROM c),
 g AS (
   SELECT doc_id, source, day,
@@ -14121,10 +13770,10 @@ SELECT t AS event_type, n_hours,
        floor((l + 2.0 * b) * 1000000 + 0.5) / 1000000.0 AS fc_2,
        floor((l + 3.0 * b) * 1000000 + 0.5) / 1000000.0 AS fc_3
 FROM fin ORDER BY event_type"""
-    d["log_token_coverage_curve"] = """
+    d["log_token_coverage_curve"] = f"""
 WITH tok AS (
   SELECT unnest(tokens) AS t
-  FROM read_parquet('/root/repo/data/log_corpus_small.parquet')),
+  FROM read_parquet('{CORPUS}')),
 census AS (SELECT t, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY t),
 ranked AS (
   SELECT row_number() OVER (ORDER BY c DESC, t ASC) AS rk,

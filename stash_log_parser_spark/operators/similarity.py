@@ -11,8 +11,8 @@
 * :func:`embedding_near_dup_pairs` — near-duplicate detection by cosine
   over LSH-bucketed candidate pairs.
 
-Hyperplanes are seeded numpy constants baked into the plan as literal
-arrays — deterministic across runs and engines, no UDF anywhere.
+Hyperplanes are seeded numpy constants — deterministic across runs
+and engines.
 """
 
 from __future__ import annotations
@@ -95,70 +95,20 @@ def with_lsh_buckets(
     tables: int = 2,
     seed: int = 42,
     vec_col: str = "embedding",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Attach (table, bucket) LSH keys — one output row per (row, table).
 
-    Default path: ONE Arrow-vectorized ``mapInArrow`` stage computing
-    every table's bucket per row with a single numpy matmul
-    (rows × dim @ dim × (tables·planes) → signs → bucket ints). No
-    explode, no groupBy, and NO Exchange anywhere in bucket assembly;
-    embarrassingly parallel at any scale. Chosen after measurement: the
-    pure-Catalyst form below spends ~70 µs per (row, table) in
-    interpreted higher-order-function eval (HOFs don't codegen), which
-    dominated the LSH queries; BLAS does the same arithmetic ~100×
-    faster. Sign(dot) is robust to the summation-order difference —
-    a flip would need |dot| below accumulation error (~1e-13·‖v‖‖p‖) —
-    and a test pins both paths to identical buckets.
-
-    ``use_arrow=False`` keeps the pure-JVM expression twin (no Python
-    workers): the bucket id is assembled in a single projection per
-    (row, table) — an ``aggregate`` over a broadcast array-of-planes
-    column summing ``2^j`` for every plane with a positive dot product.
-    (Round-1 review flagged a still-earlier groupBy form for shuffling
-    the full vector as part of the grouping key.)"""
-    if use_arrow:
-        return _with_lsh_buckets_arrow(embeddings, dim, n_planes, tables, seed, vec_col)
-    spark = embeddings.sparkSession
-    rows = [
-        (
-            t,
-            [[float(x) for x in plane] for plane in _hyperplanes(dim, n_planes, seed + t)],
-        )
-        for t in range(tables)
-    ]
-    planes = spark.createDataFrame(rows, "table int, planes array<array<double>>")
-    v = F.col(vec_col).cast("array<double>")
-    idx = F.sequence(F.lit(0), F.lit(n_planes - 1))
-    bucket = F.aggregate(
-        idx,
-        F.lit(0).cast("long"),
-        lambda acc, j: acc
-        + F.when(
-            _dot(v, F.get("planes", j.cast("int"))) > 0,
-            F.pow(F.lit(2.0), j).cast("long"),
-        ).otherwise(F.lit(0).cast("long")),
-    )
-    return (
-        embeddings.join(F.broadcast(planes))
-        .withColumn("bucket", bucket)
-        .drop("planes")
-    )
-
-
-def _with_lsh_buckets_arrow(
-    embeddings: DataFrame,
-    dim: int,
-    n_planes: int,
-    tables: int,
-    seed: int,
-    vec_col: str,
-) -> DataFrame:
-    """Arrow path of :func:`with_lsh_buckets`: one numpy matmul per batch.
+    ONE Arrow-vectorized ``mapInArrow`` stage computes every table's
+    bucket per row with a single numpy matmul (rows × dim @ dim ×
+    (tables·planes) → signs → bucket ints). No explode, no groupBy, and
+    NO Exchange anywhere in bucket assembly; embarrassingly parallel at
+    any scale. Chosen after measurement: a pure-Catalyst form spent
+    ~70 µs per (row, table) in interpreted higher-order-function eval
+    (HOFs don't codegen); BLAS does the same arithmetic ~100× faster.
 
     Passenger columns pass through as untouched Arrow buffers; the
     output is the input batch repeated once per table with (table,
-    bucket) appended — the same exploded shape the JVM twin produces."""
+    bucket) appended."""
     from pyspark.sql import types as T
 
     planes_t = np.vstack(
@@ -169,13 +119,12 @@ def _with_lsh_buckets_arrow(
         list(embeddings.schema.fields)
         + [T.StructField("table", T.IntegerType()), T.StructField("bucket", T.LongType())]
     )
-    vec_name = vec_col
 
     def assign(batches):
         import pyarrow as pa
 
         for b in batches:
-            col = b.column(b.schema.get_field_index(vec_name))
+            col = b.column(b.schema.get_field_index(vec_col))
             flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
             v = flat.reshape(b.num_rows, dim)
             bits = (v @ planes_t) > 0

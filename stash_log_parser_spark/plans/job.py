@@ -47,7 +47,6 @@ def main(argv: list[str] | None = None) -> dict:
     ap.add_argument("--master", default=None)
     ap.add_argument("--run-id", default="run-0")
     ap.add_argument("--force", action="store_true")
-    ap.add_argument("--sql-decode", action="store_true")
     ap.add_argument("--gen-requests", type=int, default=0,
                     help="if >0 and --input missing, generate a corpus first")
     ap.add_argument("--gen-days", type=int, default=3)
@@ -88,7 +87,6 @@ def main(argv: list[str] | None = None) -> dict:
             spark, args.input, args.output,
             run_id=f"{args.run_id}-{rep}",
             force=args.force or args.reps > 1,
-            use_sql_decode=args.sql_decode,
         )
         elapsed_all.append(time.perf_counter() - t0)
     elapsed = median_rep_time(elapsed_all)

@@ -214,7 +214,6 @@ def run_pipeline(
     output: str,
     run_id: str = "run-0",
     force: bool = False,
-    use_sql_decode: bool = False,
     sinks: dict | None = None,
 ) -> dict:
     """Parse → enrich → route the corpus at ``input_path`` into per-analysis
@@ -288,9 +287,9 @@ def run_pipeline(
         # stage cost ~5s of the 14s stage build — and at scale would
         # store the 100 TB payload twice. The tokens are consumed INSIDE
         # the Arrow decode stage and never emitted from it.
-        parsed = enrich(
-            parse_corpus(scoped, use_sql_decode=bool(use_sql_decode))
-        ).withColumn("file_day", F.regexp_extract("source", _FILE_DAY_RE, 1))
+        parsed = enrich(parse_corpus(scoped)).withColumn(
+            "file_day", F.regexp_extract("source", _FILE_DAY_RE, 1)
+        )
         stage_df = parsed.select(
             "doc_id", "n_tok", "source", "is_parsed",
             "protocol", "req_dir", "req_counter", "username", "client_ip",

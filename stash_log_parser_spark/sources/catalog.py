@@ -29,6 +29,27 @@ BACKFILL_BATCH_ID = -1
 LINEAGE_SCHEMA = "sink string, day string, rows long, run_id string, seq long"
 
 
+def _live_lineage(rows: list[tuple[str, str, str]]) -> list[bool]:
+    """Per (sink, day, run_id) lineage row: False where the row is an
+    original superseded by its ``retracted:`` twin, else True (retracted
+    rows themselves stay live — they record that the day was written).
+
+    A retraction SUPERSEDES its original even if the original row is
+    still on disk: :meth:`SinkCatalog.retract` writes the rewritten log
+    before deleting the old files, so a crash in between leaves both the
+    (sink, day, run_id) original and its "retracted:"+run_id twin.
+    Without this rule that crash window was PERMANENT (round-3 advice):
+    the full-key lineage dedup keeps both rows forever and the purged day
+    counted as committed, re-enabling the silent-skip-on-backfill bug
+    retraction exists to prevent."""
+    retracted = {
+        (s, d, r[len("retracted:"):]) for s, d, r in rows if r.startswith("retracted:")
+    }
+    return [
+        r.startswith("retracted:") or (s, d, r) not in retracted for s, d, r in rows
+    ]
+
+
 class SinkCatalog:
     """Catalog of per-analysis sinks rooted at ``base`` (dir or Iceberg ns)."""
 
@@ -172,7 +193,7 @@ class SinkCatalog:
                 f"('{self.base}.{sink}') — the snapshot-atomic form of this op."
             )
         path = self._path(sink)
-        self.recover_compactions(sink, partition_col)
+        self.recover_compactions(sink)
         todo: dict[str, tuple[list[str], int]] = {}
         for name in os.listdir(path):
             if not name.startswith(f"{partition_col}="):
@@ -214,7 +235,7 @@ class SinkCatalog:
             out[day] = (len(old_files), n_new)
         return out
 
-    def recover_compactions(self, sink: str, partition_col: str | None = None) -> dict:
+    def recover_compactions(self, sink: str) -> dict:
         """Repair partially-applied :meth:`compact_partitions` swaps.
 
         Scans for the generic ``.compact-aside-`` / ``.compact-stage-``
@@ -225,8 +246,6 @@ class SinkCatalog:
         (round-3 advice: the old form took the column as an argument and
         defaulted to ``day``, leaving e.g. an ``hour=``-compacted sink's
         partition invisible until someone guessed the right column).
-        ``partition_col`` is accepted for backward compatibility and
-        ignored.
 
         Crash windows and their repairs (all idempotent):
         * after the staging write, before the aside rename → live dir
@@ -373,46 +392,26 @@ class SinkCatalog:
                 .collect()
             )
             rows = [(r.sink, r.day, str(r.run_id)) for r in recs]
-            retracted = {
-                (s, d, r[len("retracted:"):])
-                for s, d, r in rows
-                if r.startswith("retracted:")
-            }
-            return {
-                (s, d)
-                for s, d, r in rows
-                if not r.startswith("retracted:") and (s, d, r) not in retracted
-            }
-        path = self._path("_lineage")
-        if not os.path.isdir(path):
-            return set()
-        import pyarrow.dataset as ds
+        else:
+            path = self._path("_lineage")
+            if not os.path.isdir(path):
+                return set()
+            import pyarrow.dataset as ds
 
-        t = ds.dataset(path, format="parquet").to_table(
-            columns=["sink", "day", "run_id"]
-        )
-        rows = list(
-            zip(
-                t.column("sink").to_pylist(),
-                t.column("day").to_pylist(),
-                (str(r) for r in t.column("run_id").to_pylist()),
+            t = ds.dataset(path, format="parquet").to_table(
+                columns=["sink", "day", "run_id"]
             )
-        )
-        # A retraction SUPERSEDES its original even if the original row
-        # is still on disk: retract() writes the rewritten log before
-        # deleting the old files, so a crash in between leaves both the
-        # (sink, day, run_id) original and its "retracted:"+run_id twin.
-        # Without this rule that crash window was PERMANENT (round-3
-        # advice): the full-key lineage dedup keeps both rows forever and
-        # the purged day counted as committed, re-enabling the
-        # silent-skip-on-backfill bug retraction exists to prevent.
-        retracted = {
-            (s, d, r[len("retracted:"):]) for s, d, r in rows if r.startswith("retracted:")
-        }
+            rows = list(
+                zip(
+                    t.column("sink").to_pylist(),
+                    t.column("day").to_pylist(),
+                    (str(r) for r in t.column("run_id").to_pylist()),
+                )
+            )
         return {
             (s, d)
-            for s, d, r in rows
-            if not r.startswith("retracted:") and (s, d, r) not in retracted
+            for (s, d, r), live in zip(rows, _live_lineage(rows))
+            if live and not r.startswith("retracted:")
         }
 
     def retract(self, pairs: set[tuple[str, str]]) -> int:
@@ -542,24 +541,14 @@ class SinkCatalog:
         # a crash inside retract()'s write-then-delete window) so the
         # inconsistency heals permanently instead of relying on every
         # reader to re-apply the supersede rule
-        runs = [str(r) for r in t.column("run_id").to_pylist()]
-        sinks_l = t.column("sink").to_pylist()
-        days_l = t.column("day").to_pylist()
-        retracted = {
-            (s, d, r[len("retracted:"):])
-            for s, d, r in zip(sinks_l, days_l, runs)
-            if r.startswith("retracted:")
-        }
-        if retracted:
+        runs = (str(r) for r in t.column("run_id").to_pylist())
+        live = _live_lineage(
+            list(zip(t.column("sink").to_pylist(), t.column("day").to_pylist(), runs))
+        )
+        if not all(live):
             import pyarrow as pa
 
-            mask = pa.array(
-                [
-                    r.startswith("retracted:") or (s, d, r) not in retracted
-                    for s, d, r in zip(sinks_l, days_l, runs)
-                ]
-            )
-            t = t.filter(mask)
+            t = t.filter(pa.array(live))
         pq.write_table(
             t, os.path.join(path, f"commit-compact-{uuid.uuid4().hex}.parquet")
         )

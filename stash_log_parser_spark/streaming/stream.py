@@ -229,31 +229,12 @@ def streaming_pair_requests(
     )
 
 
-def streaming_interval_join(
-    parsed_stream: DataFrame,
-    watermark: str = "1 hour",
-    max_lag: str = "1 hour",
+def _interval_join(
+    parsed_stream: DataFrame, watermark: str, max_lag: str, how: str
 ) -> DataFrame:
-    """Watermarked STREAM-STREAM interval join (T3c): the ``i`` leg of
-    each request joins its ``o`` leg with the same (day, req_counter)
-    key arriving within ``[ts_in, ts_in + max_lag]`` — Spark's native
-    stream-stream join, the declarative sibling of the GroupState
-    pairing operator above.
-
-    State bound: with both sides watermarked and the join range closed
-    on both ends, each side buffers only rows younger than
-    watermark + max_lag of event time — the engine drops older join
-    state automatically, so a forever-running job holds
-    O(arrival_rate × (watermark + lag)) rows, never the full history.
-    Compare streaming_pair_requests, which owns its eviction via
-    setTimeoutTimestamp; here Catalyst derives it from the watermark +
-    range condition.
-
-    Emits one row per matched pair: (day, req_counter, ts_in, ts_out,
-    duration_ms). Unmatched legs never emit (inner join semantics);
-    duplicate ids on a side would cross-product exactly as the batch
-    twin does, keeping the oracle equality honest.
-    """
+    """Shared body of the two interval joins: watermarked ``i`` and ``o``
+    legs joined on (day, req_counter) with ts_out in [ts_in, ts_in +
+    max_lag]; ``how`` is the Spark join type."""
     base = parsed_stream.filter(
         F.col("is_parsed") & F.col("req_dir").isin("i", "o")
     )
@@ -282,7 +263,7 @@ def streaming_interval_join(
             & (F.col("rc") == F.col("rc_o"))
             & (F.col("ts_out") >= F.col("ts_in"))
             & (F.col("ts_out") <= F.expr(f"ts_in + interval {max_lag}")),
-            "inner",
+            how,
         )
         .select(
             "day",
@@ -292,6 +273,34 @@ def streaming_interval_join(
             (F.unix_millis("ts_out") - F.unix_millis("ts_in")).alias("duration_ms"),
         )
     )
+
+
+def streaming_interval_join(
+    parsed_stream: DataFrame,
+    watermark: str = "1 hour",
+    max_lag: str = "1 hour",
+) -> DataFrame:
+    """Watermarked STREAM-STREAM interval join (T3c): the ``i`` leg of
+    each request joins its ``o`` leg with the same (day, req_counter)
+    key arriving within ``[ts_in, ts_in + max_lag]`` — Spark's native
+    stream-stream join, the declarative sibling of the GroupState
+    pairing operator above.
+
+    State bound: with both sides watermarked and the join range closed
+    on both ends, each side buffers only rows younger than
+    watermark + max_lag of event time — the engine drops older join
+    state automatically, so a forever-running job holds
+    O(arrival_rate × (watermark + lag)) rows, never the full history.
+    Compare streaming_pair_requests, which owns its eviction via
+    setTimeoutTimestamp; here Catalyst derives it from the watermark +
+    range condition.
+
+    Emits one row per matched pair: (day, req_counter, ts_in, ts_out,
+    duration_ms). Unmatched legs never emit (inner join semantics);
+    duplicate ids on a side would cross-product exactly as the batch
+    twin does, keeping the oracle equality honest.
+    """
+    return _interval_join(parsed_stream, watermark, max_lag, "inner")
 
 
 def streaming_exact_dedup(docs_stream: DataFrame, text_col: str = "text") -> DataFrame:
@@ -794,41 +803,4 @@ def streaming_outer_interval_join(
     range closed on both ends, so state is
     O(arrival_rate × (watermark + max_lag)).
     """
-    base = parsed_stream.filter(
-        F.col("is_parsed") & F.col("req_dir").isin("i", "o")
-    )
-    ins = (
-        base.filter(F.col("req_dir") == "i")
-        .select(
-            F.col("day").cast("string").alias("day"),
-            F.col("req_counter").alias("rc"),
-            F.col("ts").alias("ts_in"),
-        )
-        .withWatermark("ts_in", watermark)
-    )
-    outs = (
-        base.filter(F.col("req_dir") == "o")
-        .select(
-            F.col("day").cast("string").alias("day_o"),
-            F.col("req_counter").alias("rc_o"),
-            F.col("ts").alias("ts_out"),
-        )
-        .withWatermark("ts_out", watermark)
-    )
-    return (
-        ins.join(
-            outs,
-            (F.col("day") == F.col("day_o"))
-            & (F.col("rc") == F.col("rc_o"))
-            & (F.col("ts_out") >= F.col("ts_in"))
-            & (F.col("ts_out") <= F.expr(f"ts_in + interval {max_lag}")),
-            "leftOuter",
-        )
-        .select(
-            "day",
-            F.col("rc").alias("req_counter"),
-            "ts_in",
-            "ts_out",
-            (F.unix_millis("ts_out") - F.unix_millis("ts_in")).alias("duration_ms"),
-        )
-    )
+    return _interval_join(parsed_stream, watermark, max_lag, "leftOuter")

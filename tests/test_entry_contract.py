@@ -2,6 +2,9 @@
 representative subset at sf0.001 (the full 125-query sweep runs via
 tools/check_contract.py at sf0.01, mirroring the driver)."""
 
+import hashlib
+import json
+
 import duckdb
 import pytest
 
@@ -58,10 +61,25 @@ def test_entry_smoke(spark):
     assert set(df.columns) == {"hour", "n_events", "clicks", "views", "n_users", "n_segments"}
 
 
+# Pinned registry: the sorted query names, and every oracle string with
+# the checkout path replaced by a fixed token (oracles embed the corpus
+# path). A changed oracle counts as a regression, not a refresh.
+QUERY_NAMES_SHA256 = "419f3565274770e28dc4133d5e5511db919039a724f3cdcc14a2eebfd0ccd304"
+ORACLE_SQL_SHA256 = "6e5339f237d32ce610cd12f8a5493c29531e623fc2497060d0cc620f68d5697f"
+
+
 def test_every_oracle_has_a_query():
-    qs, os_ = set(E.queries()), set(E.oracle_sql())
+    queries, oracles = E.queries(), E.oracle_sql()
+    qs, os_ = set(queries), set(oracles)
     assert os_ <= qs
     assert len(os_) >= 25  # the vast majority of operators are oracle-checked
+    for name, fn in queries.items():
+        assert fn is getattr(E, "_q_" + name)
+    names = "\n".join(sorted(queries))
+    assert hashlib.sha256(names.encode()).hexdigest() == QUERY_NAMES_SHA256
+    normalized = sorted((k, v.replace(E._REPO, "<repo>")) for k, v in oracles.items())
+    digest = hashlib.sha256(json.dumps(normalized).encode()).hexdigest()
+    assert digest == ORACLE_SQL_SHA256
 
 
 @pytest.mark.parametrize("name", SUBSET)

@@ -136,20 +136,6 @@ def test_resume_reuses_stage_without_reparse(spark, corpus_path, tmp_path):
     assert s["sinks"]["git_operations"]["days_written"] == 3
 
 
-def test_sql_decode_pipeline_equals_default(spark, corpus_path, tmp_path):
-    """Arrow-decode and pure-JVM-decode stage builds produce
-    byte-identical sink contents (the pipeline defaults to the JVM path
-    for the tokens-through stage; the Arrow path must stay equivalent)."""
-    out_a, out_b = str(tmp_path / "a"), str(tmp_path / "b")
-    run_pipeline(spark, corpus_path, out_a, run_id="arrow", use_sql_decode=False)
-    run_pipeline(spark, corpus_path, out_b, run_id="sql", use_sql_decode=True)
-    ca, cb = SinkCatalog(spark, out_a), SinkCatalog(spark, out_b)
-    for name in SINKS:
-        a = sorted(map(tuple, ca.read(name).drop("tokens").collect()))
-        b = sorted(map(tuple, cb.read(name).drop("tokens").collect()))
-        assert a == b, f"sink {name} differs between decode paths"
-
-
 def _tokenize_lines(spark, lines, source, day):
     """Tiny tokenized-corpus frame from raw log lines (contract columns
     plus the oracle convenience columns, like corpus._day_rows)."""
