@@ -59,44 +59,17 @@ def _parsed(spark: SparkSession, slim: bool = True) -> DataFrame:
     return parse_corpus(spark.read.parquet(_ensure_corpus()), slim=slim)
 
 
-_SCAN_SPLITS: dict[tuple[str, int], int] = {}
-
-
-def _spread(df: DataFrame, path: str, *key_cols: str) -> DataFrame:
-    """Guard against pathologically under-split inputs (optimization guide
-    §2.5 "input skew: one huge unsplittable file — repartition immediately
-    after the read"). Parquet scans split at row-group granularity and the
-    driver's sf tables are single-row-group files, so every narrow pipeline
-    above the first exchange — shingling, MinHash, SimHash votes, PII
-    regexes, pair scoring — otherwise runs as ONE task regardless of core
-    count (measured r6: docs_minhash_lsh_pairs 11.4 s at sf1.0 with 31 idle
-    cores). When the scan plans fewer splits than half the cores,
-    hash-repartition on the table's unique key to defaultParallelism:
-    scale-adaptive (derived from the master's core count, never a
-    constant), deterministic under task retry (hash of a stable unique id,
-    not rand() — guide §2.5 / SPARK-38388), and a no-op for any healthily
-    split input (a real 100 TB table is thousands of files and never takes
-    the branch — the split count is memoized per path to keep the guard
-    itself off the per-query cost)."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    key = (path, target)
-    if key not in _SCAN_SPLITS:
-        _SCAN_SPLITS[key] = df.rdd.getNumPartitions()
-    if _SCAN_SPLITS[key] >= max(2, target // 2):
-        return df
-    return df.repartition(target, *[F.col(c) for c in key_cols])
-
-
 def _docs(spark: SparkSession, sf_dir: str, spread: bool = False) -> DataFrame:
     # spread=True is opt-in per query: it wins where the pre-shuffle
     # per-row compute dominates (shingling, regexes, votes) and loses
     # where the exchange would outweigh it (cheap projections,
     # multi-pass operators that would pay it per pass) — r6 measured
     # both directions at sf1.0, see OPTIMIZATION_r06.md.
+    from stash_log_parser_spark.plans.routing import spread_scan
+
     path = f"{sf_dir}/documents.parquet"
     df = spark.read.parquet(path)
-    return _spread(df, path, "doc_id") if spread else df
+    return spread_scan(df, path, "doc_id") if spread else df
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -104,9 +77,11 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _emb(spark: SparkSession, sf_dir: str, spread: bool = False) -> DataFrame:
+    from stash_log_parser_spark.plans.routing import spread_scan
+
     path = f"{sf_dir}/embeddings.parquet"
     df = spark.read.parquet(path)
-    return _spread(df, path, "vec_id") if spread else df
+    return spread_scan(df, path, "vec_id") if spread else df
 
 
 def _cents(col):
@@ -5400,6 +5375,7 @@ def _q_tpch_salted_join(spark, sf_dir):
     differs. See operators/joins.py:salted_join for why the salt must
     be deterministic (retry idempotency) and how to size n_salt."""
     from stash_log_parser_spark.operators.joins import salted_join
+    from stash_log_parser_spark.plans.routing import spread_scan
 
     # r6 (guide §2.3 "project before the exchange"): the per-row revenue
     # cents are computed BEFORE the salted join, so the fact shuffle
@@ -5418,7 +5394,7 @@ def _q_tpch_salted_join(spark, sf_dir):
     # could satisfy the join's clustering on the orderkey subset and let
     # the planner co-partition on orderkey alone — which would silently
     # undo the (key, salt) scatter the query exists to demonstrate.
-    orders = _spread(orders, f"{sf_dir}/orders.parquet")
+    orders = spread_scan(orders, f"{sf_dir}/orders.parquet")
     j = salted_join(li, orders, "l_orderkey", "o_orderkey", "l_linenumber", 8)
     return (
         j.groupBy("o_orderpriority")

@@ -1,6 +1,5 @@
 from .parse import (  # noqa: F401
     PARSED_COLUMNS,
-    decode_tokens,
     decode_tokens_sql,
     op_type_expr,
     parse_corpus,

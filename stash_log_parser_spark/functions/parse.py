@@ -37,7 +37,6 @@ paths agree field-for-field.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -90,25 +89,6 @@ def _decode_list_array(arr: pa.Array) -> pa.Array:
             (b.decode("utf-8", "replace") for b in binary.to_pylist()),
             type=pa.string(),
         )
-
-
-def _decode_series(tokens: pd.Series) -> pd.Series:
-    arr = pa.Array.from_pandas(tokens, type=pa.list_(pa.int32()))
-    return _decode_list_array(arr).to_pandas()
-
-
-@F.pandas_udf(T.StringType())
-def _decode_tokens_udf(tokens: pd.Series) -> pd.Series:
-    return _decode_series(tokens)
-
-
-# deterministic in fact; the flag is an optimizer barrier (see module doc)
-_decode_tokens_udf = _decode_tokens_udf.asNondeterministic()
-
-
-def decode_tokens(tokens: Column) -> Column:
-    """Arrow-vectorized UDF: array<int32> of UTF-8 byte values → string."""
-    return _decode_tokens_udf(tokens)
 
 
 def decode_tokens_sql(tokens: Column) -> Column:

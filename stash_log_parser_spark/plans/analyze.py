@@ -8,9 +8,12 @@ Spark: same mode names, same input (raw, optionally gzipped log files —
 or a tokenized-sequence parquet table, autodetected), pipe-separated
 stdout by default.
 
-    python -m stash_log_parser_spark.plans.analyze gitOperations \
+    python -m stash_log_parser_spark gitOperations \
         'logs/atlassian-stash-access-*.log*' [--since 2012-09-08] \
         [--until 2012-09-09] [--format pipe|csv|table]
+
+``python -m stash_log_parser_spark.plans.analyze`` is the same command:
+the package's ``__main__`` runs this module's :func:`main`.
 
 The big-corpus path remains plans/job.py (parse once → all sinks); this
 CLI recomputes one analysis per invocation exactly like the reference —

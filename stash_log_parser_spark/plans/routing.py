@@ -33,45 +33,61 @@ from ..functions.parse import parse_corpus
 from ..operators import analyses as A
 from ..operators.enrich import enrich
 from ..sources.catalog import SinkCatalog
-
-_FILE_DAY_RE = r"(\d{4}-\d{2}-\d{2})"
-
-
-def _parse_size(v: str) -> int:
-    """Spark size-conf string → bytes ('16m', '128MB', '134217728')."""
-    v = str(v).strip().lower()
-    for suf, mult in (
-        ("kb", 1024), ("mb", 1024**2), ("gb", 1024**3),
-        ("k", 1024), ("m", 1024**2), ("g", 1024**3), ("b", 1),
-    ):
-        if v.endswith(suf):
-            return int(float(v[: -len(suf)]) * mult)
-    return int(v)
+from ..sources.logfiles import FILENAME_DATE_RE
 
 
-def estimate_scan_splits(spark: SparkSession, input_path: str) -> int:
-    """Estimate how many splits a parquet scan of ``input_path`` yields,
-    replicating FilePartition's packing math: each file contributes
-    size + openCostInBytes, and splits are sized to
-    min(maxPartitionBytes, max(openCost, bytesPerCore)). One driver-side
-    FS metadata call — no plan or RDD conversion (round-1 note). Pinned
-    against Spark's actual partition count in tests/test_routing.py."""
+def estimate_scan_splits(df: DataFrame, input_path: str) -> int:
+    """Estimate how many splits the parquet scan behind ``df`` (reading
+    ``input_path``) yields, replicating FilePartition's packing math:
+    each file contributes size + openCostInBytes, and splits are sized to
+    min(maxPartitionBytes, max(openCost, bytesPerCore)). The file count
+    comes from the scan's own file index, which, like Spark, leaves out
+    hidden ``_SUCCESS`` / ``.crc`` files; the byte total is one
+    driver-side FS metadata call. No physical plan or RDD conversion
+    (round-1 note). Pinned against Spark's actual partition count in
+    tests/test_routing.py."""
+    spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
-    max_part = _parse_size(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
-    open_cost = _parse_size(
-        spark.conf.get("spark.sql.files.openCostInBytes", "4194304")
-    )
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(input_path)
+    conf = spark._jsparkSession.sessionState().conf()
+    max_part = conf.filesMaxPartitionBytes()
+    open_cost = conf.filesOpenCostInBytes()
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(input_path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs_summary = fs.getContentSummary(jpath)
-    total_bytes = fs_summary.getLength()
-    n_files = max(1, fs_summary.getFileCount())
+    total_bytes = fs.getContentSummary(jpath).getLength()
+    n_files = max(1, len(df._jdf.inputFiles()))
     padded = total_bytes + n_files * open_cost
     max_split = min(max_part, max(open_cost, padded // max(par, 1)))
     return max(1, padded // max(max_split, 1))
+
+
+def spread_scan(df: DataFrame, path: str, *key_cols: str) -> DataFrame:
+    """Spread a pathologically under-split scan before a CPU-bound stage
+    (optimization guide §2.5 "input skew: one huge unsplittable file —
+    repartition immediately after the read").
+
+    Parquet scans split at row-group granularity, so one big gzip or a
+    single-row-group table (the driver's sf tables) otherwise runs every
+    narrow stage above the first exchange — the parse, shingling,
+    MinHash, SimHash votes, PII regexes, pair scoring — as ONE task
+    regardless of core count (measured r6: docs_minhash_lsh_pairs 11.4 s
+    at sf1.0 with 31 idle cores). When ``estimate_scan_splits`` plans
+    fewer splits than ``max(2, defaultParallelism // 2)``, repartition to
+    defaultParallelism: scale-adaptive (derived from the master's core
+    count, never a constant), and a no-op for any healthily split input.
+    Spark already spreads SMALL inputs across cores (the bytesPerCore
+    term), so packed many-small-file inputs never take the branch — a
+    byte-count-only rule once shuffled their whole token payload for
+    nothing.
+
+    With ``key_cols`` the rows are hashed on the input's stable unique
+    key, so a retried task sees the same rows (deterministic under task
+    retry — guide §2.5 / SPARK-38388; never ``rand()``). Without keys it
+    round-robins, for callers whose key partitioning the planner could
+    reuse to co-partition a later join on a subset of its keys."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if estimate_scan_splits(df, path) >= max(2, par // 2):
+        return df
+    return df.repartition(par, *[F.col(c) for c in key_cols])
 
 
 # Every routed sink is partitioned on FILE_DAY (the date in the source
@@ -240,7 +256,7 @@ def run_pipeline(
 
     t0 = time.perf_counter()
     raw = spark.read.parquet(input_path).select("doc_id", "tokens", "n_tok", "source")
-    raw = raw.withColumn("file_day", F.regexp_extract("source", _FILE_DAY_RE, 1))
+    raw = raw.withColumn("file_day", F.regexp_extract("source", FILENAME_DATE_RE, 1))
     all_days = sorted(r.file_day for r in raw.select("file_day").distinct().collect())
     mark("discover_days", t0)
 
@@ -265,18 +281,10 @@ def run_pipeline(
     t0 = time.perf_counter()
     if stage_days:
         scoped = raw.filter(F.col("file_day").isin(stage_days))
-        # Defend against under-partitioned inputs: the parse stage is
-        # CPU-bound, so fewer input splits than cores leaves the cluster
-        # idle. Spark already spreads SMALL inputs across cores (the
-        # bytesPerCore term in estimate_scan_splits), so this repartition
-        # only fires for genuinely unsplittable shapes (one giant gzip);
-        # a byte-count-only estimate here once caused a spurious
-        # full-payload shuffle of packed many-small-file inputs. A
-        # production Iceberg table is range-partitioned into many files
-        # and never hits this branch.
-        target = spark.sparkContext.defaultParallelism * 2
-        if estimate_scan_splits(spark, input_path) < target // 2:
-            scoped = scoped.repartition(target)
+        # The parse stage is CPU-bound: spread an unsplittable input
+        # (one giant gzip) across the cores first. A production Iceberg
+        # table is range-partitioned into many files and never spreads.
+        scoped = spread_scan(scoped, input_path, "doc_id")
         # The stage stores only PARSED columns — the token payload stays
         # in the input table and re-attaches to the one sink that needs
         # it by a doc_id join (_sink_request_durations). Two measured
@@ -288,7 +296,7 @@ def run_pipeline(
         # store the 100 TB payload twice. The tokens are consumed INSIDE
         # the Arrow decode stage and never emitted from it.
         parsed = enrich(parse_corpus(scoped)).withColumn(
-            "file_day", F.regexp_extract("source", _FILE_DAY_RE, 1)
+            "file_day", F.regexp_extract("source", FILENAME_DATE_RE, 1)
         )
         stage_df = parsed.select(
             "doc_id", "n_tok", "source", "is_parsed",

@@ -497,8 +497,9 @@ def streaming_ingest(
     "order_sensitive_skipped": {sink: [days]}}.
     """
     from ..operators.enrich import enrich
-    from ..plans.routing import _FILE_DAY_RE, SINKS
+    from ..plans.routing import SINKS
     from ..sources.catalog import SinkCatalog
+    from ..sources.logfiles import FILENAME_DATE_RE
 
     sinks = sinks or SINKS
     # same defence as run_pipeline: small Arrow batches for the
@@ -547,7 +548,7 @@ def streaming_ingest(
 
     def handle(raw_batch: DataFrame, batch_id: int) -> None:
         raw_batch = raw_batch.withColumn(
-            "file_day", F.regexp_extract("source", _FILE_DAY_RE, 1)
+            "file_day", F.regexp_extract("source", FILENAME_DATE_RE, 1)
         )
         raw_batch.persist()
         stage = None
@@ -571,7 +572,7 @@ def streaming_ingest(
                         stacklevel=2,
                     )
             parsed = enrich(parse_corpus(raw_batch)).withColumn(
-                "file_day", F.regexp_extract("source", _FILE_DAY_RE, 1)
+                "file_day", F.regexp_extract("source", FILENAME_DATE_RE, 1)
             )
             # the stage contract routing sinks expect: day = file_day
             stage = parsed.drop("day").withColumn("day", F.col("file_day"))

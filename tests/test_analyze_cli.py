@@ -8,6 +8,12 @@ import pytest
 
 from stash_log_parser_spark.plans import analyze
 
+CORPUS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "data",
+    "log_corpus_small.parquet",
+)
+
 
 @pytest.fixture(scope="module")
 def log_dir(spark, tmp_path_factory):
@@ -40,30 +46,48 @@ def test_cli_since_filters_files(spark, log_dir, capsys):
         {n.split("access-")[1][:10] for n in os.listdir(log_dir)}
     )
     analyze.main(["countRequests", os.path.join(log_dir, "*")])
-    total = int(capsys.readouterr().out.strip().split("|")[0])
+    total, parsed, malformed = map(int, capsys.readouterr().out.strip().split("|"))
+    assert total == parsed + malformed and parsed > 0
     analyze.main(
         ["countRequests", os.path.join(log_dir, "*"), "--since", days[1]]
     )
     later = int(capsys.readouterr().out.strip().split("|")[0])
     assert 0 < later < total
+    # a --since past every file prints no rows at all
+    analyze.main(["gitOperations", os.path.join(log_dir, "*"), "--since", "2099-01-01"])
+    assert capsys.readouterr().out.strip() == ""
+    analyze.main(["maxConn", os.path.join(log_dir, "*")])
+    assert int(capsys.readouterr().out.strip()) >= 1
 
 
 def test_cli_parquet_input_matches_operator(spark, capsys):
-    corpus = "data/log_corpus_small.parquet"
-    analyze.main(["protocolStats", corpus, "--format", "csv"])
+    analyze.main(["protocolStats", CORPUS, "--format", "csv"])
     out = dict(
         l.split(",") for l in capsys.readouterr().out.splitlines() if l
     )
     from stash_log_parser_spark.functions.parse import parse_corpus
     from stash_log_parser_spark.operators import analyses as A
 
-    want = {
-        r.protocol: str(r.n)
-        for r in A.protocol_counts(
-            parse_corpus(spark.read.parquet(corpus))
-        ).collect()
-    }
+    parsed = parse_corpus(spark.read.parquet(CORPUS))
+    want = {r.protocol: str(r.n) for r in A.protocol_counts(parsed).collect()}
     assert out == want
+
+    # `python -m stash_log_parser_spark` is this CLI; its --since keeps
+    # the malformed lines (null ts) because it filters on the filename day
+    from pyspark.sql import functions as F
+
+    from stash_log_parser_spark import __main__ as pkg_main
+    from stash_log_parser_spark.sources.logfiles import FILENAME_DATE_RE
+
+    assert pkg_main.main is analyze.main
+    first_day = parsed.agg(
+        F.min(F.regexp_extract("source", FILENAME_DATE_RE, 1))
+    ).first()[0]
+    pkg_main.main(["countRequests", CORPUS, "--since", first_day])
+    got = capsys.readouterr().out.strip()
+    counts = A.count_requests(parsed).first()
+    assert counts.malformed_lines > 0
+    assert got == "|".join(map(str, counts))
 
 
 def test_cli_rejects_table_format_with_output(tmp_path):
@@ -74,8 +98,7 @@ def test_cli_rejects_table_format_with_output(tmp_path):
     out = str(tmp_path / "plot.dat")
     with pytest.raises(SystemExit) as e:
         analyze.main(
-            ["protocolStats", "data/log_corpus_small.parquet",
-             "--format", "table", "--output", out]
+            ["protocolStats", CORPUS, "--format", "table", "--output", out]
         )
     assert e.value.code == 2
     import os
@@ -85,14 +108,18 @@ def test_cli_rejects_table_format_with_output(tmp_path):
 
 def test_cli_top_limits_rows(spark, log_dir, capsys):
     """--top N (SURVEY §3.6 O2): first N rows of the mode's own
-    ordering — the full run's prefix, not a different ordering."""
-    rc = analyze.main(["repositoryStats", os.path.join(log_dir, "*")])
-    assert rc == 0
-    full = [l for l in capsys.readouterr().out.splitlines() if l]
-    rc = analyze.main(["repositoryStats", os.path.join(log_dir, "*"), "--top", "3"])
-    assert rc == 0
-    top = [l for l in capsys.readouterr().out.splitlines() if l]
-    assert top == full[:3]
+    ordering — the full run's prefix, not a different ordering. Run over
+    the whole archive and over its single .gz file."""
+    for files in ("*", "*.log.gz"):
+        rc = analyze.main(["repositoryStats", os.path.join(log_dir, files)])
+        assert rc == 0
+        full = [l for l in capsys.readouterr().out.splitlines() if l]
+        # repo_slug + clones|fetches|shallow_clones|pushes|ref_advertisements
+        assert len(full) > 3 and all(len(l.split("|")) == 6 for l in full)
+        rc = analyze.main(["repositoryStats", os.path.join(log_dir, files), "--top", "3"])
+        assert rc == 0
+        top = [l for l in capsys.readouterr().out.splitlines() if l]
+        assert top == full[:3]
 
 
 def test_cli_top_rejects_nonpositive(log_dir):

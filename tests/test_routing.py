@@ -272,8 +272,12 @@ def test_estimate_scan_splits_matches_spark_packing(spark, tmp_path):
     it within 2x of Spark's ACTUAL scan partitioning for both shapes
     that matter: many packed small files and one splittable big file.
     (A byte-count-only estimate undercounted the small-file case 30x and
-    triggered a spurious full-payload repartition — round-2 regression.)"""
-    from stash_log_parser_spark.plans.routing import estimate_scan_splits
+    triggered a spurious full-payload repartition — round-2 regression.)
+    spread_scan hashes the one-file input across the cores on its key
+    and leaves the packed many-file input as it is."""
+    import re
+
+    from stash_log_parser_spark.plans.routing import estimate_scan_splits, spread_scan
 
     many = str(tmp_path / "many")
     spark.range(0, 200_000).selectExpr(
@@ -284,10 +288,18 @@ def test_estimate_scan_splits_matches_spark_packing(spark, tmp_path):
         "cast(id as string) doc_id", "repeat('x', 64) pad"
     ).coalesce(1).write.mode("overwrite").parquet(one)
 
+    par = spark.sparkContext.defaultParallelism
     for path in (many, one):
-        actual = spark.read.parquet(path).rdd.getNumPartitions()
-        est = estimate_scan_splits(spark, path)
+        df = spark.read.parquet(path)
+        actual = df.rdd.getNumPartitions()
+        est = estimate_scan_splits(df, path)
         assert actual / 2 <= est <= actual * 2, (path, est, actual)
+
+    df = spark.read.parquet(many)
+    assert spread_scan(df, many, "doc_id") is df
+    spread = spread_scan(spark.read.parquet(one), one, "doc_id")
+    plan = spread._jdf.queryExecution().executedPlan().toString()
+    assert re.search(rf"hashpartitioning\(doc_id#\d+, {par}\)", plan), plan
 
 
 def test_fanout_scans_are_column_pruned(spark, corpus_path, tmp_path):

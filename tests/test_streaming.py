@@ -728,11 +728,14 @@ def test_streaming_psi_equals_batch_psi(spark, tmp_path):
     micro-batches, first half static) must equal the batch
     psi_value_drift output exactly — count additivity across batches."""
     import importlib.util
+    import os
     import sys
 
-    spec = importlib.util.spec_from_file_location(
-        "slp_entry_psi_test", "/root/repo/__spark_entry__.py"
+    entry = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "__spark_entry__.py",
     )
+    spec = importlib.util.spec_from_file_location("slp_entry_psi_test", entry)
     mod = importlib.util.module_from_spec(spec)
     sys.modules["slp_entry_psi_test"] = mod
     spec.loader.exec_module(mod)

@@ -149,10 +149,11 @@ def test_top_ngrams(spark):
 def test_text_queries_prune_scan_columns(spark):
     """Column pruning reaches the parquet scan for the text operators:
     a 2-column projection must not read the whole documents table."""
+    import os
     import re
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as E
 
     want = {
