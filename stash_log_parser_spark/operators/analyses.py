@@ -75,7 +75,7 @@ def count_requests(parsed: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def concurrency_timeline(parsed: DataFrame, two_level: bool = False) -> DataFrame:
+def concurrency_timeline(parsed: DataFrame) -> DataFrame:
     """Running concurrent-connection gauge, reconstructed from event order.
 
     The reference folds +1 on ``i`` / −1 on ``o`` in stream order
@@ -86,23 +86,16 @@ def concurrency_timeline(parsed: DataFrame, two_level: bool = False) -> DataFram
     timestamps the incoming event is counted first (zero-duration
     requests still register — SURVEY.md §8.3 tie-break).
 
-    ``two_level=True`` is the scale path: the classic parallel scan.
-    A single day's window is otherwise ONE task; instead, (1) sum the
-    deltas per (day, hour) block, (2) prefix-scan the per-block sums
-    over the tiny blocks frame, (3) broadcast the block offsets back and
-    prefix-scan WITHIN each block. Identical results (tested), but the
-    heavy windows parallelize over days × 24 blocks instead of days.
+    The scan is the classic two-level parallel scan, because a single
+    day's window would be ONE task: (1) sum the deltas per (day, hour)
+    block, (2) prefix-scan the per-block sums over the tiny blocks
+    frame, (3) broadcast the block offsets back and prefix-scan WITHIN
+    each block. The heavy windows parallelize over days × 24 blocks
+    instead of days; the result equals the server's own embedded gauge
+    (tests/test_corpus.py).
     """
     events = _parsed(parsed).filter(F.col("req_dir").isin("i", "o"))
     delta = F.when(F.col("req_dir") == "i", 1).otherwise(-1)
-    if not two_level:
-        w = (
-            Window.partitionBy("day")
-            .orderBy("ts", "req_dir", "req_counter")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return events.withColumn("concurrent", F.sum(delta).over(w))
-
     events = events.withColumn("_blk", F.date_trunc("hour", "ts"))
     block_sums = events.groupBy("day", "_blk").agg(F.sum(delta).alias("_bsum"))
     w_blocks = (
@@ -125,18 +118,16 @@ def concurrency_timeline(parsed: DataFrame, two_level: bool = False) -> DataFram
     )
 
 
-def max_concurrent(parsed: DataFrame, two_level: bool = False) -> DataFrame:
+def max_concurrent(parsed: DataFrame) -> DataFrame:
     """A2 maxConn: peak concurrent connections across the corpus."""
-    return concurrency_timeline(parsed, two_level=two_level).agg(
+    return concurrency_timeline(parsed).agg(
         F.max("concurrent").alias("max_concurrent")
     )
 
 
-def concurrency_by_hour(
-    parsed: DataFrame, bucket: str = "hour", two_level: bool = False
-) -> DataFrame:
+def concurrency_by_hour(parsed: DataFrame, bucket: str = "hour") -> DataFrame:
     """A3: per-hour (or per-minute) peak of the running gauge."""
-    tl = concurrency_timeline(parsed, two_level=two_level)
+    tl = concurrency_timeline(parsed)
     bucket_col = F.date_trunc(bucket, "ts").alias(bucket)
     return (
         tl.groupBy(bucket_col)
@@ -255,16 +246,16 @@ def request_durations(parsed: DataFrame, keep_tokens: bool = True) -> DataFrame:
     )
 
 
-def duration_percentiles(parsed: DataFrame, approx: bool = False) -> DataFrame:
-    """Per-op-type duration percentiles. Exact (interpolated) at test scale
-    for golden stability; ``approx=True`` switches to the mergeable
-    ``percentile_approx`` sketch for the 10^12-row path (SURVEY.md §3.5 A7).
+def duration_percentiles(parsed: DataFrame) -> DataFrame:
+    """Per-op-type duration percentiles, exact (interpolated) for golden
+    stability. The mergeable path for the 10^12-row scale is the
+    duration histogram (duration_histogram → percentiles_from_histogram;
+    SURVEY.md §3.5 A7).
     """
     durs = request_durations(parsed, keep_tokens=False)
     pcts = [0.5, 0.9, 0.95, 0.99]
     names = ["p50", "p90", "p95", "p99"]
-    fn = F.percentile_approx if approx else F.percentile
-    agg = fn(F.col("duration_ms"), F.array(*[F.lit(p) for p in pcts]))
+    agg = F.percentile(F.col("duration_ms"), F.array(*[F.lit(p) for p in pcts]))
     exploded = [F.get(F.col("_p"), i).cast("double").alias(n) for i, n in enumerate(names)]
     return (
         durs.groupBy("op_type")

@@ -321,7 +321,7 @@ def select_token_budget(
     The global prefix sum over a TOTAL order is the scale hazard: a
     naive ``Window.orderBy(...)`` with no partition key collapses to
     one task. This runs the same two-level parallel scan as
-    concurrency_timeline(two_level=True): (1) block key = the score
+    concurrency_timeline: (1) block key = the score
     quantized into ``n_blocks`` descending strata (score is already
     round6-quantized upstream, so block membership is engine-exact);
     (2) per-block totals -> a <= n_blocks-row dimension whose own

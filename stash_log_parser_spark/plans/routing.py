@@ -8,6 +8,13 @@ it (SURVEY.md §8.1 M6). The stage is lineage-committed like any sink,
 so incremental runs never re-parse committed days, and it doubles as a
 queryable artifact (the "parsed logs" table a log platform would keep).
 
+Batch and streaming share one core: ``parse_stage`` builds the stage
+frame (parse → enrich → project, ``day`` = the filename day) and
+``fan_out`` runs every sink on its own thread and scheduler pool.
+``run_pipeline`` writes the stage to parquet and fans out over pruned
+scans of it; streaming_ingest (streaming/stream.py) fans out over each
+micro-batch's cached stage.
+
 Incremental / resumable semantics mirror the reference's "progressive"
 file-level resume (File.hs:~50 createPredicate [K]) at day granularity:
 the routing day is the date embedded in the source *filename*
@@ -90,36 +97,79 @@ def spread_scan(df: DataFrame, path: str, *key_cols: str) -> DataFrame:
     return df.repartition(par, *[F.col(c) for c in key_cols])
 
 
-# Every routed sink is partitioned on FILE_DAY (the date in the source
-# filename — the same notion the resume/lineage protocol is keyed on).
-# Analytic columns derived from the event timestamp (hour buckets) keep
-# their true ts values, so a row whose timestamp spills across midnight
-# (log-rotation boundary) is WRITTEN — under its file's day partition —
-# rather than silently dropped by a day mismatch; global per-hour
-# rollups merge the (file_day, hour) partials. Round-1 review flagged
-# the previous ts-derived day keys for losing exactly those rows.
+# The stage's ``day`` is the FILE day (the date in the source filename —
+# the same notion the resume/lineage protocol is keyed on), and every
+# routed sink is partitioned on it. Analytic columns derived from the
+# event timestamp (hour buckets) keep their true ts values, so a row
+# whose timestamp spills across midnight (log-rotation boundary) is
+# WRITTEN — under its file's day partition — rather than silently
+# dropped by a day mismatch; global per-hour rollups merge the
+# (day, hour) partials. Round-1 review flagged the previous ts-derived
+# day keys for losing exactly those rows.
+
+
+def parse_stage(raw: DataFrame) -> DataFrame:
+    """Parse → enrich a raw token frame into the stage every sink reads,
+    with ``day`` = the filename day. The one parse path of the batch
+    pipeline and the streaming ingest.
+
+    The stage holds only PARSED columns — the token payload stays in
+    the raw input and re-attaches to the one sink that needs it by a
+    doc_id join (_sink_request_durations). Two measured reasons: (a)
+    shipping token arrays through the Python stage as Arrow passengers
+    was 2.5x slower than leaving them behind (payload roundtrip
+    serialization, not decode, is the cost); (b) parquet-list-encoding
+    the arrays a second time into the stage cost ~5s of the 14s stage
+    build — and at scale would store the 100 TB payload twice."""
+    # defensive: callers may bring their own session (driver harness);
+    # small Arrow batches are required for the tokens-through parse
+    raw.sparkSession.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+    return enrich(parse_corpus(raw)).select(
+        "doc_id", "n_tok", "source", "is_parsed",
+        "protocol", "req_dir", "req_counter", "username", "client_ip",
+        "ts", "ts_raw", "repo_slug", "duration_ms", "op_type", "cache_hit",
+        "hour", "project_key", "datacenter",
+        # last, where a day-partitioned read of the stage puts it
+        F.regexp_extract("source", FILENAME_DATE_RE, 1).alias("day"),
+    )
+
+
+def fan_out(spark: SparkSession, sinks: dict, route_one) -> list:
+    """Run ``route_one(name, fn)`` for every sink CONCURRENTLY, one thread
+    per sink, and return the results in sink order.
+
+    At bench scale each sink job underutilizes the cluster and the e2e
+    was scheduling-bound (round-1 profile: 33 s of 63 s), while on a
+    real cluster concurrent scheduling overlaps the many small stages.
+    Each thread runs in its own scheduler pool: with FAIR mode
+    (session.py) the long payload-join sink cannot starve the small
+    aggregates. setLocalProperty is per-thread, which is exactly the
+    scope of one sink."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def _run(item):
+        name, fn = item
+        spark.sparkContext.setLocalProperty("spark.scheduler.pool", name)
+        return route_one(name, fn)
+
+    with ThreadPoolExecutor(max_workers=len(sinks)) as ex:
+        return list(ex.map(_run, sinks.items()))
 
 
 def _sink_git_operations(p: DataFrame, _raw: DataFrame) -> DataFrame:
-    """Per-(file_day, hour) git-op hit/miss counts (A5, mergeable)."""
+    """Per-(day, hour) git-op hit/miss counts (A5, mergeable)."""
     ops = p.filter(F.col("is_parsed") & F.col("op_type").isNotNull())
     aggs = []
     for op in A.OP_TYPES:
         is_op = F.col("op_type") == op
         aggs.append(F.sum((is_op & F.col("cache_hit")).cast("long")).alias(f"{op}_hit"))
         aggs.append(F.sum((is_op & ~F.col("cache_hit")).cast("long")).alias(f"{op}_miss"))
-    return ops.groupBy(
-        F.col("file_day").alias("day"),
-        F.date_format("hour", "yyyy-MM-dd HH").alias("hour"),
-    ).agg(*aggs)
+    return ops.groupBy("day", F.date_format("hour", "yyyy-MM-dd HH").alias("hour")).agg(*aggs)
 
 
 def _sink_protocol_by_hour(p: DataFrame, _raw: DataFrame) -> DataFrame:
     ops = p.filter(F.col("is_parsed") & F.col("op_type").isNotNull())
-    return ops.groupBy(
-        F.col("file_day").alias("day"),
-        F.date_format("hour", "yyyy-MM-dd HH").alias("hour"),
-    ).agg(
+    return ops.groupBy("day", F.date_format("hour", "yyyy-MM-dd HH").alias("hour")).agg(
         F.sum((F.col("protocol") == "ssh").cast("long")).alias("ssh"),
         F.sum(F.col("protocol").isin("http", "https").cast("long")).alias("http"),
     )
@@ -127,23 +177,17 @@ def _sink_protocol_by_hour(p: DataFrame, _raw: DataFrame) -> DataFrame:
 
 def _sink_concurrency_by_hour(p: DataFrame, _raw: DataFrame) -> DataFrame:
     """Per-hour peak of the running gauge. The gauge itself is windowed
-    by the stage's ``day`` (= file_day: one file sequence per day, the
+    by the stage's ``day`` (the file day: one file sequence per day, the
     reference's reset boundary), so spill rows extend their own file's
     gauge and land in that file's partition."""
-    tl = A.concurrency_timeline(p, two_level=True)
+    tl = A.concurrency_timeline(p)
     return tl.groupBy(
-        F.col("file_day").alias("day"),
-        F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH").alias("hour"),
+        "day", F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH").alias("hour")
     ).agg(F.max("concurrent").alias("max_concurrent"))
 
 
 def _sink_protocol_counts_daily(p: DataFrame, _raw: DataFrame) -> DataFrame:
-    return (
-        p.filter(F.col("is_parsed"))
-        .groupBy("file_day", "protocol")
-        .agg(F.count("*").alias("n"))
-        .withColumnRenamed("file_day", "day")
-    )
+    return p.filter(F.col("is_parsed")).groupBy("day", "protocol").agg(F.count("*").alias("n"))
 
 
 def _sink_repository_stats_daily(p: DataFrame, _raw: DataFrame) -> DataFrame:
@@ -152,9 +196,7 @@ def _sink_repository_stats_daily(p: DataFrame, _raw: DataFrame) -> DataFrame:
         F.sum((F.col("op_type") == op).cast("long")).alias(plural)
         for op, plural in A._OP_PLURAL.items()
     ]
-    return (
-        ops.groupBy("file_day", "repo_slug").agg(*aggs).withColumnRenamed("file_day", "day")
-    )
+    return ops.groupBy("day", "repo_slug").agg(*aggs)
 
 
 def _sink_request_durations(p: DataFrame, raw: DataFrame) -> DataFrame:
@@ -171,19 +213,18 @@ def _sink_request_durations(p: DataFrame, raw: DataFrame) -> DataFrame:
         F.col("op_type").isNotNull() & F.col("duration_ms").isNotNull()
     ).select(
         "doc_id", "op_type", "duration_ms", "username", "client_ip",
-        "project_key", "datacenter", "ts_raw",
-        F.col("file_day").alias("day"),
+        "project_key", "datacenter", "ts_raw", "day",
     )
     return ops.join(raw.select("doc_id", "tokens"), "doc_id")
 
 
 def _sink_duration_hist(p: DataFrame, _raw: DataFrame) -> DataFrame:
-    """Per-(file_day, op_type, bucket) duration histogram — the
+    """Per-(day, op_type, bucket) duration histogram — the
     MERGEABLE percentile partial: a few hundred rows per day replace
     re-scanning the raw durations sink for global percentiles
     (duration_percentiles_global_sketch; error ≤ 1/16 by bucket
     construction, see analyses.duration_bucket)."""
-    return A.duration_histogram(p, extra_keys=(F.col("file_day").alias("day"),))
+    return A.duration_histogram(p, extra_keys=("day",))
 
 
 def _sink_pairing_daily(p: DataFrame, _raw: DataFrame) -> DataFrame:
@@ -202,7 +243,7 @@ def _sink_metrics(p: DataFrame, _raw: DataFrame) -> DataFrame:
     """Per-(day, source) parse metrics — malformed lines are counted here,
     never silently dropped (SURVEY.md §3.3 F5)."""
     return (
-        p.groupBy(F.col("file_day").alias("day"), "source")
+        p.groupBy("day", "source")
         .agg(
             F.count("*").alias("total_lines"),
             F.sum(F.col("is_parsed").cast("long")).alias("parsed_lines"),
@@ -239,26 +280,13 @@ def run_pipeline(
     (``force=True`` reprocesses everything). Days still pending for ANY
     sink are parsed once into the stage table and fanned out.
     """
-    import time
-
-    t_start = time.perf_counter()
-    timings: dict[str, float] = {}
-
-    def mark(name: str, t0: float) -> None:
-        timings[name] = round(time.perf_counter() - t0, 2)
-
     sinks = sinks or SINKS
-    # defensive: callers may bring their own session (driver harness);
-    # small Arrow batches are required for the tokens-through parse
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
     catalog = SinkCatalog(spark, output)
     committed = set() if force else catalog.committed()
 
-    t0 = time.perf_counter()
     raw = spark.read.parquet(input_path).select("doc_id", "tokens", "n_tok", "source")
     raw = raw.withColumn("file_day", F.regexp_extract("source", FILENAME_DATE_RE, 1))
     all_days = sorted(r.file_day for r in raw.select("file_day").distinct().collect())
-    mark("discover_days", t0)
 
     pending: dict[str, list[str]] = {
         name: [d for d in all_days if (name, d) not in committed] for name in sinks
@@ -270,86 +298,50 @@ def run_pipeline(
 
     # ---- phase 1: the parsed STAGE table --------------------------------
     # One full parse materialized as a day-partitioned parquet/Iceberg
-    # table (tokens included, array intermediates dropped). Chosen over
-    # DataFrame caching after measurement: the columnar cache build cost
-    # ~3x the parse itself and did not scale with cores, while a parquet
-    # stage writes in parallel and gives every sink a column-PRUNED scan
-    # (the heavy tokens column is only read by the routed raw-row sink).
-    # The stage is lineage-committed per day, so a resume never re-parses
+    # table (array intermediates dropped). Chosen over DataFrame caching
+    # after measurement: the columnar cache build cost ~3x the parse
+    # itself and did not scale with cores, while a parquet stage writes
+    # in parallel and gives every sink a column-PRUNED scan. The stage
+    # is lineage-committed per day, so a resume never re-parses
     # committed days - the parsed table is itself a useful artifact.
     stage_days = [d for d in days_needed if ("parsed_stage", d) not in committed]
-    t0 = time.perf_counter()
     if stage_days:
         scoped = raw.filter(F.col("file_day").isin(stage_days))
         # The parse stage is CPU-bound: spread an unsplittable input
         # (one giant gzip) across the cores first. A production Iceberg
         # table is range-partitioned into many files and never spreads.
         scoped = spread_scan(scoped, input_path, "doc_id")
-        # The stage stores only PARSED columns — the token payload stays
-        # in the input table and re-attaches to the one sink that needs
-        # it by a doc_id join (_sink_request_durations). Two measured
-        # reasons: (a) shipping token arrays through the Python stage as
-        # Arrow passengers was 2.5x slower than leaving them behind
-        # (payload roundtrip serialization, not decode, is the cost);
-        # (b) parquet-list-encoding the arrays a second time into the
-        # stage cost ~5s of the 14s stage build — and at scale would
-        # store the 100 TB payload twice. The tokens are consumed INSIDE
-        # the Arrow decode stage and never emitted from it.
-        parsed = enrich(parse_corpus(scoped)).withColumn(
-            "file_day", F.regexp_extract("source", FILENAME_DATE_RE, 1)
-        )
-        stage_df = parsed.select(
-            "doc_id", "n_tok", "source", "is_parsed",
-            "protocol", "req_dir", "req_counter", "username", "client_ip",
-            "ts", "ts_raw", "repo_slug", "duration_ms", "op_type", "cache_hit",
-            "hour", F.col("file_day").alias("day"), "project_key", "datacenter",
-        )
         # File-count note: input shards are expected day-aligned (a real
         # ingest table is range-partitioned by date — SURVEY.md S3), so
         # each write task emits into ONE day-partition and the commit
         # moves O(tasks) files. A round-robin-sharded input instead
         # yields tasks×days files; we accept that rather than paying a
         # full-payload reshuffle here.
-        catalog.write_partitions(stage_df, "parsed_stage")
+        catalog.write_partitions(parse_stage(scoped), "parsed_stage")
         stage_counts = catalog.day_rows("parsed_stage", stage_days)
         summary["stage_rows"] = sum(stage_counts.values())
         catalog.commit(
             [("parsed_stage", d, n) for d, n in stage_counts.items()],
             run_id,
         )
-    mark("parse_stage", t0)
     summary["stage_days_written"] = len(stage_days)
 
-    stage = catalog.read("parsed_stage").withColumn("file_day", F.col("day"))
+    stage = catalog.read("parsed_stage")
 
     # ---- phase 2: fan-out over pruned stage scans ------------------------
-    # Sinks are submitted CONCURRENTLY (one thread per sink): at bench
-    # scale each sink job underutilizes the cluster and the e2e was
-    # scheduling-bound (round-1 profile: 33 s of 63 s), while on a real
-    # cluster concurrent scheduling overlaps the many small stages.
-    # Every sink frame is day-partitioned on file_day, so the jobs write
-    # disjoint directories; the lineage commit log appends uniquely-named
-    # files and is safe to write from worker threads.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _run_sink(item):
-        name, fn = item
-        t0 = time.perf_counter()
+    # Every sink frame is day-partitioned, so the concurrent sink jobs
+    # write disjoint directories; the lineage commit log appends
+    # uniquely-named files and is safe to write from worker threads.
+    def _route(name, fn):
         days = pending[name]
         if not days:
-            return name, {"days_written": 0, "rows": 0}, 0.0
-        # one scheduler pool per sink: with FAIR mode (session.py) the
-        # long payload-join sink cannot starve the small aggregates.
-        # setLocalProperty is per-thread, which is exactly the scope of
-        # this worker.
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", name)
+            return {"days_written": 0, "rows": 0}
         df = fn(
-            stage.filter(F.col("file_day").isin(days)),
+            stage.filter(F.col("day").isin(days)),
             raw.filter(F.col("file_day").isin(days)),
         )
-        # day is always file_day-derived now; the isin is kept as a
-        # safety net against a sink emitting days outside its commit set
-        # (such rows could never be resumed).
+        # a safety net against a sink emitting days outside its commit
+        # set (such rows could never be resumed)
         df = df.filter(F.col("day").isin(days))
         catalog.write_partitions(df, name, days=days)
         # lineage carries TRUE per-day counts from the written files; a
@@ -357,13 +349,9 @@ def run_pipeline(
         # explicit zero
         per_day = catalog.day_rows(name, days)
         catalog.commit([(name, d, n) for d, n in per_day.items()], run_id)
-        info = {"days_written": len(days), "rows": sum(per_day.values())}
-        return name, info, time.perf_counter() - t0
+        return {"days_written": len(days), "rows": sum(per_day.values())}
 
-    with ThreadPoolExecutor(max_workers=len(sinks)) as ex:
-        for name, info, dt in ex.map(_run_sink, sinks.items()):
-            summary["sinks"][name] = info
-            timings[f"sink_{name}"] = round(dt, 2)
+    summary["sinks"] = dict(zip(sinks, fan_out(spark, sinks, _route)))
     # steady-state maintenance: fold the commit log once it accumulates
     # (one tiny driver-side parquet rewrite; no-op below the threshold —
     # without this, thousands of incremental runs leave committed()
@@ -371,8 +359,6 @@ def run_pipeline(
     # lineage table via rewrite_data_files out-of-band instead.
     if not catalog.use_iceberg:
         summary["lineage_compaction"] = catalog.compact_lineage(max_files=512)
-    timings["total"] = round(time.perf_counter() - t_start, 2)
-    summary["timings"] = timings
     return summary
 
 
@@ -405,12 +391,15 @@ def duration_percentiles_global_sketch(catalog: SinkCatalog) -> DataFrame:
     return A.percentiles_from_histogram(catalog.read("duration_hist_daily"))
 
 
-def duration_percentiles_global(catalog: SinkCatalog, approx: bool = False) -> DataFrame:
+def duration_percentiles_global(catalog: SinkCatalog) -> DataFrame:
+    """Exact (interpolated) global per-op percentiles over the routed
+    request_durations raw sink — the exact twin of
+    duration_percentiles_global_sketch, which is the mergeable path at
+    scale."""
     durs = catalog.read("request_durations")
     pcts = [0.5, 0.9, 0.95, 0.99]
     names = ["p50", "p90", "p95", "p99"]
-    fn = F.percentile_approx if approx else F.percentile
-    agg = fn(F.col("duration_ms"), F.array(*[F.lit(p) for p in pcts]))
+    agg = F.percentile(F.col("duration_ms"), F.array(*[F.lit(p) for p in pcts]))
     exploded = [F.get(F.col("_p"), i).cast("double").alias(n) for i, n in enumerate(names)]
     return (
         durs.groupBy("op_type")

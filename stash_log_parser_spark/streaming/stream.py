@@ -467,8 +467,11 @@ def streaming_ingest(
     """Route a STREAM of tokenized sequences into the same per-analysis
     sinks as plans/routing.run_pipeline, via foreachBatch.
 
-    Each micro-batch runs the identical parse → enrich → fan-out, but
-    writes land under ``batch=<id>/day=<d>`` partitions
+    Each micro-batch runs the batch pipeline's own core: routing's
+    ``parse_stage`` builds the stage (cached for the batch instead of
+    written as the parsed_stage table) and ``fan_out`` runs every sink
+    on its own thread and scheduler pool. Writes land under
+    ``batch=<id>/day=<d>`` partitions
     (SinkCatalog.write_batch_partitions): a replayed batch (crash after
     data write, before the checkpoint commit) overwrites ONLY its own
     partitions, giving exactly-once sink contents without a
@@ -496,15 +499,10 @@ def streaming_ingest(
     drained; returns {"batches": n, "rows": total,
     "order_sensitive_skipped": {sink: [days]}}.
     """
-    from ..operators.enrich import enrich
-    from ..plans.routing import SINKS
+    from ..plans.routing import SINKS, fan_out, parse_stage
     from ..sources.catalog import SinkCatalog
-    from ..sources.logfiles import FILENAME_DATE_RE
 
     sinks = sinks or SINKS
-    # same defence as run_pipeline: small Arrow batches for the
-    # tokens-through parse (callers may bring their own session)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
     catalog = SinkCatalog(spark, output)
     progress = {"batches": 0, "rows": 0, "order_sensitive_skipped": {}}
     order_sensitive = ORDER_SENSITIVE_SINKS & set(sinks)
@@ -547,18 +545,13 @@ def streaming_ingest(
                 shutil.rmtree(os.path.join(root, bdir, f"day={day}"), ignore_errors=True)
 
     def handle(raw_batch: DataFrame, batch_id: int) -> None:
-        raw_batch = raw_batch.withColumn(
-            "file_day", F.regexp_extract("source", FILENAME_DATE_RE, 1)
-        )
         raw_batch.persist()
-        stage = None
+        stage = parse_stage(raw_batch).persist()
         try:
             run_id = f"stream-batch-{batch_id}"
             spanning: set[str] = set()
             if order_sensitive:
-                batch_days = {
-                    r.file_day for r in raw_batch.select("file_day").distinct().collect()
-                }
+                batch_days = {r.day for r in stage.select("day").distinct().collect()}
                 spanning = batch_days & _days_committed_by_other_runs(run_id)
                 if spanning:
                     import warnings
@@ -571,17 +564,8 @@ def streaming_ingest(
                         "(additive sinks are unaffected)",
                         stacklevel=2,
                     )
-            parsed = enrich(parse_corpus(raw_batch)).withColumn(
-                "file_day", F.regexp_extract("source", FILENAME_DATE_RE, 1)
-            )
-            # the stage contract routing sinks expect: day = file_day
-            stage = parsed.drop("day").withColumn("day", F.col("file_day"))
-            stage.persist()
 
-            # same concurrent fan-out + FAIR pools as the batch pipeline
-            def _write(item):
-                name, fn = item
-                spark.sparkContext.setLocalProperty("spark.scheduler.pool", name)
+            def _write(name, fn):
                 out_df = fn(stage, raw_batch)
                 if name in order_sensitive and spanning:
                     out_df = out_df.filter(
@@ -593,16 +577,15 @@ def streaming_ingest(
                 catalog.write_batch_partitions(out_df, name, batch_id)
                 # every day this batch wrote; none when, e.g., every day
                 # was purged as spanning
-                return name, catalog.day_rows(name, batch_id=batch_id)
+                return catalog.day_rows(name, batch_id=batch_id)
 
-            from concurrent.futures import ThreadPoolExecutor
-
-            entries = []
-            with ThreadPoolExecutor(max_workers=len(sinks)) as ex:
-                for name, per_day in ex.map(_write, sinks.items()):
-                    entries += [(name, d, n) for d, n in sorted(per_day.items())]
+            entries = [
+                (name, d, n)
+                for name, per_day in zip(sinks, fan_out(spark, sinks, _write))
+                for d, n in sorted(per_day.items())
+            ]
             if spanning:
-                # retract AFTER the pool (it rewrites the whole commit
+                # retract AFTER the fan-out (it rewrites the whole commit
                 # log — concurrent retractions would clobber each
                 # other) and BEFORE this batch's commit: purged
                 # (sink, day) pairs must stop counting as committed so
@@ -611,12 +594,11 @@ def streaming_ingest(
                 catalog.retract(
                     {(n, d) for n in order_sensitive for d in spanning}
                 )
-            catalog.commit(entries, f"stream-batch-{batch_id}")
+            catalog.commit(entries, run_id)
             progress["batches"] += 1
             progress["rows"] += raw_batch.count()
         finally:
-            if stage is not None:
-                stage.unpersist()
+            stage.unpersist()
             raw_batch.unpersist()
 
     stream = spark.readStream.schema(CORPUS_SCHEMA)

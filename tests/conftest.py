@@ -2,10 +2,21 @@
 
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 from pyspark.sql import types as T
 
-from stash_log_parser_spark.session import build_session
+# Import the package from this checkout whatever the working directory:
+# first on this process's path, and through PYTHONPATH for the Python
+# workers the JVM forks (they do not see this process's sys.path).
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+_old = os.environ.get("PYTHONPATH")
+os.environ["PYTHONPATH"] = ROOT + (os.pathsep + _old if _old else "")
+
+from stash_log_parser_spark.session import build_session  # noqa: E402
 
 # The 14-line hand-derived fixture corpus (FIXTURES.md §2): 6 request pairs,
 # 1 unmatched incoming (L14), 1 malformed (L13).

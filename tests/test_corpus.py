@@ -68,19 +68,6 @@ def test_window_gauge_matches_embedded_gauge(gen_parsed):
     assert peak == embedded_peak
 
 
-def test_two_level_scan_equals_single_window(gen_parsed):
-    """The parallel (per-hour-block) prefix scan reproduces the
-    day-window gauge on every event."""
-    _, parsed = gen_parsed
-    a = A.concurrency_timeline(parsed).select("doc_id", "concurrent")
-    b = A.concurrency_timeline(parsed, two_level=True).select("doc_id", "concurrent")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert (
-        A.max_concurrent(parsed, two_level=True).collect()
-        == A.max_concurrent(parsed).collect()
-    )
-
-
 def test_pairing_latency_equals_duration(gen_parsed):
     _, parsed = gen_parsed
     pairs = A.pair_requests(parsed).filter(

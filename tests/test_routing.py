@@ -315,7 +315,7 @@ def test_fanout_scans_are_column_pruned(spark, corpus_path, tmp_path):
     out = str(tmp_path / "prune_sinks")
     run_pipeline(spark, corpus_path, out, run_id="prune")
     cat = SinkCatalog(spark, out)
-    stage = cat.read("parsed_stage").withColumn("file_day", F.col("day"))
+    stage = cat.read("parsed_stage")
     n_stage_cols = len(stage.columns)
     raw = (
         spark.read.parquet(corpus_path)

@@ -245,6 +245,30 @@ def test_streaming_ingest_equals_batch_pipeline(spark, day_aligned_dir, tmp_path
         assert _sink_rows(spark, sout, name) == _sink_rows(spark, bout, name), name
 
 
+def test_batch_and_streaming_sinks_see_one_stage_schema(spark, day_aligned_dir, tmp_path):
+    """Both front doors hand every sink the same stage: the columns a
+    sink receives from run_pipeline and from streaming_ingest match."""
+    from stash_log_parser_spark.plans.routing import SINKS, run_pipeline
+    from stash_log_parser_spark.streaming.stream import streaming_ingest
+
+    seen = {}
+
+    def recording(tag):
+        def sink(stage, raw):
+            seen.setdefault(tag, stage.columns)
+            return SINKS["metrics"](stage, raw)
+
+        return {"metrics": sink}
+
+    run_pipeline(spark, day_aligned_dir, str(tmp_path / "b"), sinks=recording("batch"))
+    streaming_ingest(
+        spark, day_aligned_dir, str(tmp_path / "s"), str(tmp_path / "cp"),
+        sinks=recording("stream"),
+    )
+    assert seen["batch"] == seen["stream"]
+    assert seen["batch"][-1] == "day" and "file_day" not in seen["batch"]
+
+
 def test_streaming_ingest_replay_is_idempotent(spark, day_aligned_dir, tmp_path):
     """Crash-replay: drop the last checkpoint commit so restart re-runs
     the final micro-batch — sink contents must not change (per-batch
