@@ -84,18 +84,36 @@ def concurrency_timeline(parsed: DataFrame) -> DataFrame:
     resets at day boundaries — one log file per day) and ordered by
     ``(ts, req_dir, req_counter)``; ``'i' < 'o'`` lexically, so at equal
     timestamps the incoming event is counted first (zero-duration
-    requests still register — SURVEY.md §8.3 tie-break).
+    requests still register — SURVEY.md §8.3 tie-break). The result
+    equals the server's own embedded gauge (tests/test_corpus.py).
 
-    The scan is the classic two-level parallel scan, because a single
-    day's window would be ONE task: (1) sum the deltas per (day, hour)
-    block, (2) prefix-scan the per-block sums over the tiny blocks
-    frame, (3) broadcast the block offsets back and prefix-scan WITHIN
-    each block. The heavy windows parallelize over days × 24 blocks
-    instead of days; the result equals the server's own embedded gauge
-    (tests/test_corpus.py).
+    A single day's window is ONE task, so past one advisory shuffle
+    partition of events (``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
+    Spark's target for one task's data, against the optimizer's size
+    estimate) the scan runs as the classic two-level parallel scan:
+    (1) sum the deltas per (day, hour) block, (2) prefix-scan the
+    per-block sums over the tiny blocks frame, (3) broadcast the block
+    offsets back and prefix-scan WITHIN each block, so the heavy windows
+    parallelize over days × 24 blocks instead of days. Below that size
+    the day window is no straggler, while the block sums and the event
+    rows are two consumers of the input: over a ``parse_corpus`` frame
+    the parse then runs twice (+60 % on the three gauge queries over the
+    12k-line corpus), so the single window runs instead.
     """
     events = _parsed(parsed).filter(F.col("req_dir").isin("i", "o"))
     delta = F.when(F.col("req_dir") == "i", 1).otherwise(-1)
+    spark = events.sparkSession
+    advisory = spark._jsparkSession.sessionState().conf().getConf(
+        spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
+    if events._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= advisory:
+        w = (
+            Window.partitionBy("day")
+            .orderBy("ts", "req_dir", "req_counter")
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        return events.withColumn("concurrent", F.sum(delta).over(w))
+
     events = events.withColumn("_blk", F.date_trunc("hour", "ts"))
     block_sums = events.groupBy("day", "_blk").agg(F.sum(delta).alias("_bsum"))
     w_blocks = (

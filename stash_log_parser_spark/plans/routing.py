@@ -230,7 +230,7 @@ def _sink_duration_hist(p: DataFrame, _raw: DataFrame) -> DataFrame:
 def _sink_pairing_daily(p: DataFrame, _raw: DataFrame) -> DataFrame:
     pairs = A.pair_requests(p)
     return (
-        pairs.groupBy(F.col("day").cast("string").alias("day"))
+        pairs.groupBy("day")
         .agg(
             F.sum((F.col("ts_in").isNotNull() & F.col("ts_out").isNotNull()).cast("long")).alias("matched_pairs"),
             F.sum(F.col("ts_out").isNull().cast("long")).alias("unmatched_incoming"),
@@ -326,7 +326,9 @@ def run_pipeline(
         )
     summary["stage_days_written"] = len(stage_days)
 
-    stage = catalog.read("parsed_stage")
+    # partition inference reads ``day=YYYY-MM-DD`` back as a date; the
+    # cast gives the sinks parse_stage's string day, as in streaming
+    stage = catalog.read("parsed_stage").withColumn("day", F.col("day").cast("string"))
 
     # ---- phase 2: fan-out over pruned stage scans ------------------------
     # Every sink frame is day-partitioned, so the concurrent sink jobs

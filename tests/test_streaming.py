@@ -246,8 +246,10 @@ def test_streaming_ingest_equals_batch_pipeline(spark, day_aligned_dir, tmp_path
 
 
 def test_batch_and_streaming_sinks_see_one_stage_schema(spark, day_aligned_dir, tmp_path):
-    """Both front doors hand every sink the same stage: the columns a
-    sink receives from run_pipeline and from streaming_ingest match."""
+    """Both front doors hand every sink the same stage: the column names
+    and types a sink receives from run_pipeline and from streaming_ingest
+    match, ``day`` included (a string, not the date partition inference
+    would make of the read-back stage's directory names)."""
     from stash_log_parser_spark.plans.routing import SINKS, run_pipeline
     from stash_log_parser_spark.streaming.stream import streaming_ingest
 
@@ -255,7 +257,7 @@ def test_batch_and_streaming_sinks_see_one_stage_schema(spark, day_aligned_dir, 
 
     def recording(tag):
         def sink(stage, raw):
-            seen.setdefault(tag, stage.columns)
+            seen.setdefault(tag, stage.dtypes)
             return SINKS["metrics"](stage, raw)
 
         return {"metrics": sink}
@@ -266,7 +268,8 @@ def test_batch_and_streaming_sinks_see_one_stage_schema(spark, day_aligned_dir, 
         sinks=recording("stream"),
     )
     assert seen["batch"] == seen["stream"]
-    assert seen["batch"][-1] == "day" and "file_day" not in seen["batch"]
+    assert seen["batch"][-1] == ("day", "string")
+    assert "file_day" not in dict(seen["batch"])
 
 
 def test_streaming_ingest_replay_is_idempotent(spark, day_aligned_dir, tmp_path):
