@@ -26,8 +26,7 @@ Scale notes (the 100 TB design):
   can't save you (kept for parity with BASELINE.json:14).
 * The ONLY ordered analysis (A2/A3) uses a window partitioned by ``day``
   — never a global single-partition window. Days are independent because
-  the gauge resets daily (reference processes one day-file at a time);
-  at 10^12 rows each day partition is further bounded by hour if needed.
+  the gauge resets daily (reference processes one day-file at a time).
 * Pairing (J1) is expressed as ONE hash aggregation on
   ``(day, req_counter)`` instead of a self-join: half the shuffles, no
   skewed build side. A join formulation is kept for comparison.
@@ -87,53 +86,25 @@ def concurrency_timeline(parsed: DataFrame) -> DataFrame:
     requests still register — SURVEY.md §8.3 tie-break). The result
     equals the server's own embedded gauge (tests/test_corpus.py).
 
-    A single day's window is ONE task, so past one advisory shuffle
-    partition of events (``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
-    Spark's target for one task's data, against the optimizer's size
-    estimate) the scan runs as the classic two-level parallel scan:
-    (1) sum the deltas per (day, hour) block, (2) prefix-scan the
-    per-block sums over the tiny blocks frame, (3) broadcast the block
-    offsets back and prefix-scan WITHIN each block, so the heavy windows
-    parallelize over days × 24 blocks instead of days. Below that size
-    the day window is no straggler, while the block sums and the event
-    rows are two consumers of the input: over a ``parse_corpus`` frame
-    the parse then runs twice (+60 % on the three gauge queries over the
-    12k-line corpus), so the single window runs instead.
+    Each day's window is one task. A two-level scan (per-hour block
+    sums, their prefix, then the scan within each block) spreads a day
+    over 24 tasks, but its block sums and its event rows are two
+    consumers of the input, which is then evaluated twice. Measured on
+    4 cores (max_concurrent, one-day corpus, median of 3): over a
+    ``parse_corpus`` frame, where the parse runs twice, it took twice
+    as long (1.4M events: 35.6 s against 18.3 s); over the parsed stage
+    parquet it was 0.5 s slower at 1.4M events and 0.24 s (7 %) faster
+    at 4M, under 1 % of the 41.8 s that day's stage took to parse and
+    write.
     """
     events = _parsed(parsed).filter(F.col("req_dir").isin("i", "o"))
     delta = F.when(F.col("req_dir") == "i", 1).otherwise(-1)
-    spark = events.sparkSession
-    advisory = spark._jsparkSession.sessionState().conf().getConf(
-        spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()
-    )
-    if events._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= advisory:
-        w = (
-            Window.partitionBy("day")
-            .orderBy("ts", "req_dir", "req_counter")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return events.withColumn("concurrent", F.sum(delta).over(w))
-
-    events = events.withColumn("_blk", F.date_trunc("hour", "ts"))
-    block_sums = events.groupBy("day", "_blk").agg(F.sum(delta).alias("_bsum"))
-    w_blocks = (
+    w = (
         Window.partitionBy("day")
-        .orderBy("_blk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = block_sums.select(
-        "day", "_blk", F.coalesce(F.sum("_bsum").over(w_blocks), F.lit(0)).alias("_off")
-    )
-    w_in = (
-        Window.partitionBy("day", "_blk")
         .orderBy("ts", "req_dir", "req_counter")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return (
-        events.join(F.broadcast(offsets), ["day", "_blk"])
-        .withColumn("concurrent", F.col("_off") + F.sum(delta).over(w_in))
-        .drop("_blk", "_off")
-    )
+    return events.withColumn("concurrent", F.sum(delta).over(w))
 
 
 def max_concurrent(parsed: DataFrame) -> DataFrame:

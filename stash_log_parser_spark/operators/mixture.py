@@ -320,10 +320,10 @@ def select_token_budget(
 
     The global prefix sum over a TOTAL order is the scale hazard: a
     naive ``Window.orderBy(...)`` with no partition key collapses to
-    one task. This runs the same two-level parallel scan as
-    concurrency_timeline: (1) block key = the score
-    quantized into ``n_blocks`` descending strata (score is already
-    round6-quantized upstream, so block membership is engine-exact);
+    one task. This runs the classic two-level parallel scan: (1) block
+    key = the score quantized into ``n_blocks`` descending strata
+    (score is already round6-quantized upstream, so block membership
+    is engine-exact);
     (2) per-block totals -> a <= n_blocks-row dimension whose own
     prefix scan is a trivially small window; (3) the per-doc scan runs
     WITHIN each block, partitioned by block key. Result is identical

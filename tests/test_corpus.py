@@ -6,8 +6,6 @@ must equal the embedded one row-for-row — a much stronger check than the
 14-line golden.
 """
 
-from contextlib import contextmanager
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -48,23 +46,9 @@ def test_all_wellformed_lines_parse(gen_parsed):
     assert garbage > 0
 
 
-@contextmanager
-def _block_scan(spark):
-    """Plan the gauge as the two-level block scan: every input is larger
-    than a 1-byte advisory partition."""
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    before = spark.conf.get(key)
-    spark.conf.set(key, "1")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, before)
-
-
-def test_window_gauge_matches_embedded_gauge(spark, gen_parsed):
+def test_window_gauge_matches_embedded_gauge(gen_parsed):
     """A2's day-partitioned prefix sum reproduces the server's own gauge
-    on every single event — ordering semantics are exactly the fold's —
-    in both the single-window and the two-level block scan.
+    on every single event — ordering semantics are exactly the fold's.
 
     The server records the gauge BEFORE decrementing on an ``o`` event,
     while the fold's −1 applies at the event, so on ``o`` rows
@@ -72,34 +56,18 @@ def test_window_gauge_matches_embedded_gauge(spark, gen_parsed):
     (fixture A2 timeline, FIXTURES.md §4).
     """
     _, parsed = gen_parsed
-    n_events = parsed.filter(F.col("is_parsed") & F.col("req_dir").isin("i", "o")).count()
-    single = A.concurrency_timeline(parsed)
-    with _block_scan(spark):
-        blocked = A.concurrency_timeline(parsed)
+    tl = A.concurrency_timeline(parsed)
+    # every event comes out, each with the embedded gauge
+    assert tl.count() == parsed.filter(F.col("is_parsed") & F.col("req_dir").isin("i", "o")).count()
     expected = F.when(F.col("req_dir") == "o", F.col("req_concurrent") - 1).otherwise(
         F.col("req_concurrent")
     )
+    mismatches = tl.filter(F.col("concurrent") != expected).count()
+    assert mismatches == 0
+    # and therefore the PEAK (attained on an i event) matches exactly
+    peak = tl.agg(F.max("concurrent")).collect()[0][0]
     embedded_peak = parsed.agg(F.max("req_concurrent")).collect()[0][0]
-    for tl in (single, blocked):
-        # every event comes out, each with the embedded gauge
-        assert tl.count() == n_events
-        assert tl.filter(F.col("concurrent") != expected).count() == 0
-        # and therefore the PEAK (attained on an i event) matches exactly
-        assert tl.agg(F.max("concurrent")).collect()[0][0] == embedded_peak
-
-
-def test_two_level_scan_equals_single_window(spark, gen_parsed):
-    """The parallel (per-hour-block) prefix scan reproduces the
-    day-window gauge on every event; the input size picks the body."""
-    _, parsed = gen_parsed
-    a = A.concurrency_timeline(parsed).select("doc_id", "concurrent")
-    with _block_scan(spark):
-        b = A.concurrency_timeline(parsed).select("doc_id", "concurrent")
-        b_max = A.max_concurrent(parsed)
-    assert "BroadcastHashJoin" not in a._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in b._jdf.queryExecution().executedPlan().toString()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert b_max.collect() == A.max_concurrent(parsed).collect()
+    assert peak == embedded_peak
 
 
 def test_pairing_latency_equals_duration(gen_parsed):
