@@ -203,17 +203,18 @@ def write_corpus(
     seed: int = 42,
     **kw,
 ) -> str:
-    """Write the tokenized corpus as parquet (single process, exact)."""
+    """Write the tokenized corpus as parquet (single process, exact).
+    Each day is built and written on its own, so memory holds one day,
+    not the corpus."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     schema = _arrow_schema()
-    tables = []
-    for d in range(n_days):
-        cols = _day_rows(d, n_requests_per_day, seed, **kw)
-        tables.append(pa.table(cols, schema=schema))
-    pq.write_table(pa.concat_tables(tables), path)
+    with pq.ParquetWriter(path, schema) as writer:
+        for d in range(n_days):
+            cols = _day_rows(d, n_requests_per_day, seed, **kw)
+            writer.write_table(pa.table(cols, schema=schema))
     return path
 
 

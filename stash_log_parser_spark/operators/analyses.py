@@ -30,6 +30,10 @@ Scale notes (the 100 TB design):
 * Pairing (J1) is expressed as ONE hash aggregation on
   ``(day, req_counter)`` instead of a self-join: half the shuffles, no
   skewed build side. A join formulation is kept for comparison.
+* The mergeable analyses (A1, A4, A5, A6, J2 and the duration
+  histogram) take ``by``: extra leading group keys. ``by=("day",)`` turns
+  the global report into the per-day partial the routed sinks store
+  (plans/routing.py), so a sink and the analysis are one definition.
 """
 
 from __future__ import annotations
@@ -54,15 +58,22 @@ def _parsed(df: DataFrame) -> DataFrame:
     return df.filter(F.col("is_parsed"))
 
 
+def _report(df: DataFrame, by: tuple, *order) -> DataFrame:
+    """The global report sorted by ``order``; a ``by``-grouped partial
+    unsorted. A partial is written partitioned, and a global sort before
+    that write costs a range exchange plus a sampling job per sink."""
+    return df if by else df.orderBy(*order)
+
+
 # ---------------------------------------------------------------------------
 # A1
 # ---------------------------------------------------------------------------
 
 
-def count_requests(parsed: DataFrame) -> DataFrame:
-    """Total / parsed / malformed line counts (malformed lines are counted,
-    never silently dropped — SURVEY.md §3.3 F5)."""
-    return parsed.agg(
+def count_requests(parsed: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
+    """Total / parsed / malformed line counts per ``by`` group (malformed
+    lines are counted, never silently dropped — SURVEY.md §3.3 F5)."""
+    return parsed.groupBy(*by).agg(
         F.count("*").alias("total_lines"),
         F.sum(F.col("is_parsed").cast("long")).alias("parsed_lines"),
         F.sum((~F.col("is_parsed")).cast("long")).alias("malformed_lines"),
@@ -130,23 +141,21 @@ def concurrency_by_hour(parsed: DataFrame, bucket: str = "hour") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def protocol_counts(parsed: DataFrame) -> DataFrame:
+def protocol_counts(parsed: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
     """Counts per raw protocol value over all parsed lines."""
-    return _parsed(parsed).groupBy("protocol").agg(F.count("*").alias("n")).orderBy("protocol")
+    counts = _parsed(parsed).groupBy(*by, "protocol").agg(F.count("*").alias("n"))
+    return _report(counts, by, "protocol")
 
 
-def protocol_by_hour(parsed: DataFrame) -> DataFrame:
+def protocol_by_hour(parsed: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
     """Per-hour ssh-vs-http split of classified git-op responses
     (GitOpsAnalyser.hs:~150 protocolStatsByHour [K]; http ∪ https → http)."""
     ops = _parsed(parsed).filter(F.col("op_type").isNotNull())
-    return (
-        ops.groupBy(F.date_format("hour", "yyyy-MM-dd HH").alias("hour"))
-        .agg(
-            F.sum((F.col("protocol") == "ssh").cast("long")).alias("ssh"),
-            F.sum(F.col("protocol").isin("http", "https").cast("long")).alias("http"),
-        )
-        .orderBy("hour")
+    split = ops.groupBy(*by, F.date_format("hour", "yyyy-MM-dd HH").alias("hour")).agg(
+        F.sum((F.col("protocol") == "ssh").cast("long")).alias("ssh"),
+        F.sum(F.col("protocol").isin("http", "https").cast("long")).alias("http"),
     )
+    return _report(split, by, "hour")
 
 
 # ---------------------------------------------------------------------------
@@ -154,7 +163,7 @@ def protocol_by_hour(parsed: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def git_operations(parsed: DataFrame) -> DataFrame:
+def git_operations(parsed: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
     """Per-hour counts of the five git-op types split cache-hit / cache-miss.
 
     Fixed op set → ten conditional sums, NOT ``pivot`` (pivot launches an
@@ -168,11 +177,8 @@ def git_operations(parsed: DataFrame) -> DataFrame:
         is_op = F.col("op_type") == op
         aggs.append(F.sum((is_op & F.col("cache_hit")).cast("long")).alias(f"{op}_hit"))
         aggs.append(F.sum((is_op & ~F.col("cache_hit")).cast("long")).alias(f"{op}_miss"))
-    return (
-        ops.groupBy(F.date_format("hour", "yyyy-MM-dd HH").alias("hour"))
-        .agg(*aggs)
-        .orderBy("hour")
-    )
+    counts = ops.groupBy(*by, F.date_format("hour", "yyyy-MM-dd HH").alias("hour")).agg(*aggs)
+    return _report(counts, by, "hour")
 
 
 # ---------------------------------------------------------------------------
@@ -180,7 +186,9 @@ def git_operations(parsed: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def repository_stats(parsed: DataFrame, salt_partitions: int = 0) -> DataFrame:
+def repository_stats(
+    parsed: DataFrame, salt_partitions: int = 0, by: tuple[str, ...] = ()
+) -> DataFrame:
     """Per-repository op counts sorted by clones desc (then slug asc).
 
     ``salt_partitions > 0`` demonstrates the explicit two-phase salted
@@ -205,13 +213,13 @@ def repository_stats(parsed: DataFrame, salt_partitions: int = 0) -> DataFrame:
             else F.xxhash64("ts_raw", "req_counter")  # slim frames lack doc_id
         )
         salt = F.pmod(salt_src, F.lit(salt_partitions)).alias("_salt")
-        partial = ops.groupBy(F.col("repo_slug"), salt).agg(*aggs)
-        merged = partial.groupBy("repo_slug").agg(
+        partial = ops.groupBy(*by, "repo_slug", salt).agg(*aggs)
+        merged = partial.groupBy(*by, "repo_slug").agg(
             *[F.sum(p).alias(p) for p in _OP_PLURAL.values()]
         )
     else:
-        merged = ops.groupBy("repo_slug").agg(*aggs)
-    return merged.orderBy(F.desc("clones"), F.asc("repo_slug"))
+        merged = ops.groupBy(*by, "repo_slug").agg(*aggs)
+    return _report(merged, by, F.desc("clones"), F.asc("repo_slug"))
 
 
 # ---------------------------------------------------------------------------
@@ -306,10 +314,11 @@ def pair_requests(parsed: DataFrame, use_join: bool = False) -> DataFrame:
     )
 
 
-def pairing_stats(parsed: DataFrame) -> DataFrame:
-    """J2 diagnostics: matched pairs and unmatched in/out counts."""
+def pairing_stats(parsed: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
+    """J2 diagnostics: matched pairs and unmatched in/out counts per
+    ``by`` group (``by`` names pair_requests columns, such as ``day``)."""
     p = pair_requests(parsed)
-    return p.agg(
+    return p.groupBy(*by).agg(
         F.sum((F.col("ts_in").isNotNull() & F.col("ts_out").isNotNull()).cast("long")).alias(
             "matched_pairs"
         ),
@@ -345,8 +354,8 @@ def duration_bucket(col: Column) -> Column:
     return F.when(v < 32, v).otherwise(lo)
 
 
-def duration_histogram(parsed: DataFrame, extra_keys: tuple = ()) -> DataFrame:
-    """Per-(extra_keys, op_type, bucket) duration counts — the MERGEABLE
+def duration_histogram(parsed: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
+    """Per-(by, op_type, bucket) duration counts — the MERGEABLE
     per-day partial the 10^12-row percentile rollup wants: daily sinks
     store a few hundred (op_type, bucket) rows instead of raw durations,
     and the global rollup merges histograms instead of re-scanning raw
@@ -355,7 +364,7 @@ def duration_histogram(parsed: DataFrame, extra_keys: tuple = ()) -> DataFrame:
         F.col("op_type").isNotNull() & F.col("duration_ms").isNotNull()
     )
     return ops.groupBy(
-        *extra_keys, "op_type", duration_bucket(F.col("duration_ms")).alias("bucket")
+        *by, "op_type", duration_bucket(F.col("duration_ms")).alias("bucket")
     ).agg(F.count("*").alias("n"))
 
 

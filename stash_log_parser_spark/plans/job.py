@@ -60,14 +60,10 @@ def main(argv: list[str] | None = None) -> dict:
                          " cold start into the result")
     args = ap.parse_args(argv)
 
-    # make the package importable in separate-JVM executors' Python
-    # workers (local-cluster / standalone without --py-files)
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     spark = build_session(
         app_name="stash-log-pipeline",
         master=args.master,
         shuffle_partitions=args.shuffle_partitions,
-        extra_conf={"spark.executorEnv.PYTHONPATH": repo_root},
     )
 
     if args.gen_requests > 0 and not os.path.exists(args.input):

@@ -27,9 +27,14 @@ lineage commits is repaired by an idempotent rewrite.
 Scale design: per-day aggregates are MERGEABLE partials — global
 repositoryStats / protocolStats roll up from the daily sinks without
 touching raw data; exact global percentiles come from the routed
-request_durations raw sink. Lineage row-counts come from the parquet
-footers of the files each write left behind (SinkCatalog.day_rows),
-read on the driver; an Iceberg backend counts with a Spark aggregate.
+request_durations raw sink. Each daily aggregate sink IS the reference
+analysis (operators/analyses.py) called with ``by=("day",)``, so a
+sink keeps the analysis' filters and a rollup equals the analysis run
+over the same lines; only the hourly gauge (a string hour label) and
+the raw-row sink (the token join) have bodies here. Lineage row-counts
+come from the parquet footers of the files each write left behind
+(SinkCatalog.day_rows), read on the driver; an Iceberg backend counts
+with a Spark aggregate.
 """
 
 from __future__ import annotations
@@ -156,51 +161,22 @@ def fan_out(spark: SparkSession, sinks: dict, route_one) -> list:
         return list(ex.map(_run, sinks.items()))
 
 
-def _sink_git_operations(p: DataFrame, _raw: DataFrame) -> DataFrame:
-    """Per-(day, hour) git-op hit/miss counts (A5, mergeable)."""
-    ops = p.filter(F.col("is_parsed") & F.col("op_type").isNotNull())
-    aggs = []
-    for op in A.OP_TYPES:
-        is_op = F.col("op_type") == op
-        aggs.append(F.sum((is_op & F.col("cache_hit")).cast("long")).alias(f"{op}_hit"))
-        aggs.append(F.sum((is_op & ~F.col("cache_hit")).cast("long")).alias(f"{op}_miss"))
-    return ops.groupBy("day", F.date_format("hour", "yyyy-MM-dd HH").alias("hour")).agg(*aggs)
-
-
-def _sink_protocol_by_hour(p: DataFrame, _raw: DataFrame) -> DataFrame:
-    ops = p.filter(F.col("is_parsed") & F.col("op_type").isNotNull())
-    return ops.groupBy("day", F.date_format("hour", "yyyy-MM-dd HH").alias("hour")).agg(
-        F.sum((F.col("protocol") == "ssh").cast("long")).alias("ssh"),
-        F.sum(F.col("protocol").isin("http", "https").cast("long")).alias("http"),
-    )
-
-
 def _sink_concurrency_by_hour(p: DataFrame, _raw: DataFrame) -> DataFrame:
-    """Per-hour peak of the running gauge. The gauge itself is windowed
-    by the stage's ``day`` (the file day: one file sequence per day, the
-    reference's reset boundary), so spill rows extend their own file's
-    gauge and land in that file's partition."""
+    """Per-hour peak of the running gauge, with the hour stored as a
+    ``yyyy-MM-dd HH`` label like the other hourly sinks
+    (A.concurrency_by_hour returns the hour as a timestamp). The gauge
+    itself is windowed by the stage's ``day`` (the file day: one file
+    sequence per day, the reference's reset boundary), so spill rows
+    extend their own file's gauge and land in that file's partition."""
     tl = A.concurrency_timeline(p)
     return tl.groupBy(
         "day", F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH").alias("hour")
     ).agg(F.max("concurrent").alias("max_concurrent"))
 
 
-def _sink_protocol_counts_daily(p: DataFrame, _raw: DataFrame) -> DataFrame:
-    return p.filter(F.col("is_parsed")).groupBy("day", "protocol").agg(F.count("*").alias("n"))
-
-
-def _sink_repository_stats_daily(p: DataFrame, _raw: DataFrame) -> DataFrame:
-    ops = p.filter(F.col("op_type").isNotNull() & F.col("repo_slug").isNotNull())
-    aggs = [
-        F.sum((F.col("op_type") == op).cast("long")).alias(plural)
-        for op, plural in A._OP_PLURAL.items()
-    ]
-    return ops.groupBy("day", "repo_slug").agg(*aggs)
-
-
 def _sink_request_durations(p: DataFrame, raw: DataFrame) -> DataFrame:
-    """Routed RAW rows — carries the original tokens (BASELINE.json:15).
+    """Routed RAW rows — A.request_durations' rows, carrying the original
+    tokens (BASELINE.json:15).
 
     Tokens re-attach by a doc_id join against the RAW input rather than
     riding in the stage table: the payload is then written exactly once
@@ -210,7 +186,7 @@ def _sink_request_durations(p: DataFrame, raw: DataFrame) -> DataFrame:
     join is narrow; co-bucketing both tables on doc_id makes the join
     exchange-free at scale (see SinkCatalog.write_bucketed)."""
     ops = p.filter(
-        F.col("op_type").isNotNull() & F.col("duration_ms").isNotNull()
+        F.col("is_parsed") & F.col("op_type").isNotNull() & F.col("duration_ms").isNotNull()
     ).select(
         "doc_id", "op_type", "duration_ms", "username", "client_ip",
         "project_key", "datacenter", "ts_raw", "day",
@@ -218,50 +194,22 @@ def _sink_request_durations(p: DataFrame, raw: DataFrame) -> DataFrame:
     return ops.join(raw.select("doc_id", "tokens"), "doc_id")
 
 
-def _sink_duration_hist(p: DataFrame, _raw: DataFrame) -> DataFrame:
-    """Per-(day, op_type, bucket) duration histogram — the
-    MERGEABLE percentile partial: a few hundred rows per day replace
-    re-scanning the raw durations sink for global percentiles
-    (duration_percentiles_global_sketch; error ≤ 1/16 by bucket
-    construction, see analyses.duration_bucket)."""
-    return A.duration_histogram(p, extra_keys=("day",))
-
-
-def _sink_pairing_daily(p: DataFrame, _raw: DataFrame) -> DataFrame:
-    pairs = A.pair_requests(p)
-    return (
-        pairs.groupBy("day")
-        .agg(
-            F.sum((F.col("ts_in").isNotNull() & F.col("ts_out").isNotNull()).cast("long")).alias("matched_pairs"),
-            F.sum(F.col("ts_out").isNull().cast("long")).alias("unmatched_incoming"),
-            F.sum(F.col("ts_in").isNull().cast("long")).alias("unmatched_outgoing"),
-        )
-    )
-
-
-def _sink_metrics(p: DataFrame, _raw: DataFrame) -> DataFrame:
-    """Per-(day, source) parse metrics — malformed lines are counted here,
-    never silently dropped (SURVEY.md §3.3 F5)."""
-    return (
-        p.groupBy("day", "source")
-        .agg(
-            F.count("*").alias("total_lines"),
-            F.sum(F.col("is_parsed").cast("long")).alias("parsed_lines"),
-            F.sum((~F.col("is_parsed")).cast("long")).alias("malformed_lines"),
-        )
-    )
-
-
+# Every other sink is a reference analysis grouped by day: the mergeable
+# per-day partial that a global rollup below sums back.
+# ``duration_hist_daily`` is the percentile partial (error <= 1/16 by
+# bucket construction, see analyses.duration_bucket); ``metrics`` counts
+# malformed lines per source, never silently dropping them
+# (SURVEY.md §3.3 F5).
 SINKS: dict[str, callable] = {
-    "git_operations": _sink_git_operations,
-    "protocol_by_hour": _sink_protocol_by_hour,
+    "git_operations": lambda p, _raw: A.git_operations(p, by=("day",)),
+    "protocol_by_hour": lambda p, _raw: A.protocol_by_hour(p, by=("day",)),
     "concurrency_by_hour": _sink_concurrency_by_hour,
-    "protocol_counts_daily": _sink_protocol_counts_daily,
-    "repository_stats_daily": _sink_repository_stats_daily,
+    "protocol_counts_daily": lambda p, _raw: A.protocol_counts(p, by=("day",)),
+    "repository_stats_daily": lambda p, _raw: A.repository_stats(p, by=("day",)),
     "request_durations": _sink_request_durations,
-    "duration_hist_daily": _sink_duration_hist,
-    "pairing_daily": _sink_pairing_daily,
-    "metrics": _sink_metrics,
+    "duration_hist_daily": lambda p, _raw: A.duration_histogram(p, by=("day",)),
+    "pairing_daily": lambda p, _raw: A.pairing_stats(p, by=("day",)),
+    "metrics": lambda p, _raw: A.count_requests(p, by=("day", "source")),
 }
 
 

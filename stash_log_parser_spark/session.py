@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def build_session(
     app_name: str = "stash-log-parser-spark",
@@ -73,7 +75,12 @@ def build_session(
         # wedged mid-write on its data socket after repeated pipeline runs,
         # deadlocking the next AQE stage. Fork-per-task (COW from the
         # daemon) costs little and removes the shared-state failure mode.
-        .config("spark.python.worker.reuse", os.environ.get("SPARK_GRAFT_WORKER_REUSE", "false"))
+        .config("spark.python.worker.reuse", "false")
+        # Python workers are forked by the JVM and do not see this
+        # process's sys.path: put the package's parent directory (the
+        # checkout, or the --py-files zip) on theirs, so the package
+        # imports whatever directory the driver runs from.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     if shuffle_partitions is None:

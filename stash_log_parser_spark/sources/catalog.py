@@ -57,9 +57,15 @@ class SinkCatalog:
         self.spark = spark
         self.base = base.rstrip("/")
         if use_iceberg is None:
-            # Iceberg only when a spark catalog is actually configured.
-            confs = spark.sparkContext.getConf().getAll()
-            use_iceberg = any(k.startswith("spark.sql.catalog.") for k, _ in confs)
+            # Iceberg only when an Iceberg catalog is configured: any
+            # other catalog (JDBC, Hive, ...) keeps the parquet backend.
+            prefix = "spark.sql.catalog."
+            use_iceberg = any(
+                k.startswith(prefix)
+                and "." not in k[len(prefix):]  # the class, not an option
+                and v.startswith("org.apache.iceberg.")
+                for k, v in spark.sparkContext.getConf().getAll()
+            )
         self.use_iceberg = use_iceberg
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 

@@ -682,50 +682,6 @@ def streaming_enrich_by_project(
     )
 
 
-def probe_transform_with_state() -> str | None:
-    """transformWithStateInPandas (Spark 4's successor to
-    applyInPandasWithState: typed ValueState/ListState/MapState,
-    timers, TTL, RocksDB-backed) needs a working ``google.protobuf``
-    for its driver-side state-server protocol — absent/broken in this
-    container. Returns None when usable, else the blocking reason."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except Exception as e:  # pragma: no cover - env-specific
-        return f"google.protobuf unavailable: {e}"
-    return None
-
-
-def streaming_user_stats_tws(events: DataFrame):
-    """GUARDED SEAM (same discipline as the Iceberg branches in
-    sources/catalog.py): the transformWithStateInPandas form of the
-    running per-user census. On an environment with protobuf +
-    RocksDB state store this is exactly:
-
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state"
-            ".RocksDBStateStoreProvider")
-        events.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=<StatefulProcessor with one ValueState
-                               (n BIGINT, cents BIGINT), updated per
-                               batch, one emission per key>,
-            outputStructType="user_id long, n_events long, cents long",
-            outputMode="Update", timeMode="None")
-
-    The applyInPandasWithState twins (streaming_pair_requests,
-    streaming_exact_dedup) cover the semantics on THIS container;
-    this seam names the production call so the migration is a
-    mechanical swap."""
-    reason = probe_transform_with_state()
-    if reason is not None:
-        raise NotImplementedError(
-            "transformWithStateInPandas is unavailable here — " + reason
-        )
-    raise NotImplementedError(
-        "wire the StatefulProcessor per the docstring once the "
-        "environment provides protobuf"
-    )
-
-
 def streaming_scd2_enrich(events_stream: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream–static SCD2 AS-OF enrichment: each streamed event picks
     the dimension version ACTIVE AT ITS EVENT TIME — the "campaign /

@@ -8,13 +8,10 @@ import sys
 import pytest
 from pyspark.sql import types as T
 
-# Import the package from this checkout whatever the working directory:
-# first on this process's path, and through PYTHONPATH for the Python
-# workers the JVM forks (they do not see this process's sys.path).
+# Import the package from this checkout whatever the working directory
+# (build_session puts the same checkout on the Python workers' path).
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
-_old = os.environ.get("PYTHONPATH")
-os.environ["PYTHONPATH"] = ROOT + (os.pathsep + _old if _old else "")
 
 from stash_log_parser_spark.session import build_session  # noqa: E402
 

@@ -98,24 +98,42 @@ def test_routed_raw_sink_token_equality(spark, corpus_path, tmp_path):
 
 
 def test_global_rollups_match_direct_aggregation(spark, corpus_path, tmp_path):
-    """Daily partials merge to exactly the single-pass global answers."""
+    """Daily partials merge to exactly the single-pass global answers, also
+    when a git-op response line has an unparseable timestamp: every sink
+    drops it, as the analyses do, so the exact and sketch percentile
+    rollups count the same responses."""
+    from conftest import CORPUS_SCHEMA, FIXTURE_LINES, lines_to_rows
+
     from stash_log_parser_spark.functions.parse import parse_corpus
     from stash_log_parser_spark.operators import analyses as A
+    from stash_log_parser_spark.plans.routing import duration_percentiles_global_sketch
 
-    out = str(tmp_path / "sinks")
-    run_pipeline(spark, corpus_path, out, run_id="r1")
-    cat = SinkCatalog(spark, out)
-    parsed = parse_corpus(spark.read.parquet(corpus_path))
+    src = spark.read.parquet(corpus_path).select("doc_id", "tokens", "n_tok", "source")
+    # an `o` clone response, its hour and minute out of range
+    bad = FIXTURE_LINES[4].replace("2012-09-08 00:02:05,500", "2012-09-08 25:61:01,500")
+    assert bad != FIXTURE_LINES[4]
+    bad_rows = spark.createDataFrame(lines_to_rows([bad], source=src.first().source), CORPUS_SCHEMA)
+    with_bad = str(tmp_path / "with_bad.parquet")
+    src.unionByName(bad_rows).write.parquet(with_bad)
 
-    assert sorted(map(tuple, repository_stats_global(cat).collect())) == sorted(
-        map(tuple, A.repository_stats(parsed).collect())
-    )
-    assert sorted(map(tuple, protocol_counts_global(cat).collect())) == sorted(
-        map(tuple, A.protocol_counts(parsed).collect())
-    )
-    got = {r.op_type: (r.n, r.p50, r.p99) for r in duration_percentiles_global(cat).collect()}
-    want = {r.op_type: (r.n, r.p50, r.p99) for r in A.duration_percentiles(parsed).collect()}
-    assert got == want
+    for i, path in enumerate([corpus_path, with_bad]):
+        out = str(tmp_path / f"sinks{i}")
+        run_pipeline(spark, path, out, run_id="r1")
+        cat = SinkCatalog(spark, out)
+        parsed = parse_corpus(spark.read.parquet(path))
+
+        assert sorted(map(tuple, repository_stats_global(cat).collect())) == sorted(
+            map(tuple, A.repository_stats(parsed).collect())
+        ), path
+        assert sorted(map(tuple, protocol_counts_global(cat).collect())) == sorted(
+            map(tuple, A.protocol_counts(parsed).collect())
+        ), path
+        exact = duration_percentiles_global(cat).collect()
+        got = {r.op_type: (r.n, r.p50, r.p99) for r in exact}
+        want = {r.op_type: (r.n, r.p50, r.p99) for r in A.duration_percentiles(parsed).collect()}
+        assert got == want, path
+        sketch_n = {r.op_type: r.n for r in duration_percentiles_global_sketch(cat).collect()}
+        assert {r.op_type: r.n for r in exact} == sketch_n, path
 
 
 def test_resume_reuses_stage_without_reparse(spark, corpus_path, tmp_path):
@@ -655,6 +673,31 @@ def test_write_partitions_batch_layout_purges_stale_days_without_days_arg(
     cat.write_partitions(new, "s")  # days=None: derived from new
     got = sorted(r.id for r in cat.read("s").collect())
     assert got == list(range(100, 110))
+
+
+def test_iceberg_autodetect_needs_an_iceberg_catalog_class():
+    """Only a configured Iceberg catalog class selects the Iceberg
+    backend: a session whose only catalog is a JDBC catalog keeps the
+    parquet backend."""
+    from types import SimpleNamespace
+
+    def session(confs):
+        return SimpleNamespace(
+            sparkContext=SimpleNamespace(getConf=lambda: SimpleNamespace(getAll=lambda: confs)),
+            conf=SimpleNamespace(set=lambda k, v: None),
+        )
+
+    jdbc = [
+        ("spark.sql.catalog.pg", "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog"),
+        ("spark.sql.catalog.pg.url", "jdbc:postgresql://db/logs"),
+    ]
+    iceberg = [
+        ("spark.sql.catalog.lake", "org.apache.iceberg.spark.SparkCatalog"),
+        ("spark.sql.catalog.lake.type", "hadoop"),
+    ]
+    assert SinkCatalog(session(jdbc), "/sinks").use_iceberg is False
+    assert SinkCatalog(session(iceberg), "/sinks").use_iceberg is True
+    assert SinkCatalog(session([]), "/sinks").use_iceberg is False
 
 
 def test_median_rep_time_parity_rule():

@@ -64,3 +64,32 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     sinks = set(os.listdir(out_dir))
     assert "metrics" in sinks and "_lineage" in sinks
     assert "git_operations" in sinks and "request_durations" in sinks
+
+
+def test_workers_import_the_package_from_any_directory(tmp_path):
+    """A driver that finds the package only through its own sys.path, run
+    from another directory with PYTHONPATH unset, still runs the parse's
+    Python tasks: build_session puts the checkout on the workers' path."""
+    script = tmp_path / "drive.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {REPO!r})\n"
+        "from stash_log_parser_spark.functions.parse import parse_corpus\n"
+        "from stash_log_parser_spark.session import build_session\n"
+        "spark = build_session(master='local[2]', shuffle_partitions=2)\n"
+        f"df = spark.read.parquet({os.path.join(REPO, 'data', 'log_corpus_small.parquet')!r})\n"
+        "print('rows', parse_corpus(df).count(), flush=True)\n"
+        "spark.stop()\n"
+    )
+    env = dict(os.environ)
+    env.pop("PYTHONPATH", None)
+    r = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert any(ln.startswith("rows ") and int(ln.split()[1]) > 0 for ln in r.stdout.splitlines()), r.stdout

@@ -672,26 +672,6 @@ def test_streaming_enrich_equals_batch(spark, corpus_dir):
     assert got == want and len(want) > 1
 
 
-def test_transform_with_state_seam_is_guarded(spark):
-    """The transformWithStateInPandas seam must fail loudly with the
-    blocking reason (this container ships a broken google.protobuf),
-    never crash a query at runtime."""
-    import pytest
-
-    from stash_log_parser_spark.streaming.stream import (
-        probe_transform_with_state,
-        streaming_user_stats_tws,
-    )
-
-    reason = probe_transform_with_state()
-    ev = spark.createDataFrame([(1, 1)], "event_id long, user_id long")
-    with pytest.raises(NotImplementedError):
-        streaming_user_stats_tws(ev)
-    # on THIS container the probe names the protobuf breakage
-    if reason is not None:
-        assert "protobuf" in reason
-
-
 def test_streaming_scd2_enrich_asof_semantics(spark, tmp_path):
     """As-of boundary rules: an event AT a version's valid_from joins
     that version (half-open intervals); events before the key's first
