@@ -27,7 +27,6 @@ SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf
 
 
 def main() -> None:
-    os.environ.setdefault("PYTHONPATH", _REPO)
     from stash_log_parser_spark.session import build_session
 
     spark = build_session(master="local[8]")
