@@ -30,8 +30,8 @@ classification precedence (shallow clone before clone) per
 GitOpsAnalyser.hs:~70–135 [K].
 
 A pure-JVM decode (``decode_tokens_sql``) and a pure-JVM line grok
-(:func:`parse_lines`) are kept as cross-check paths; tests assert all
-paths agree field-for-field.
+(:func:`parse_lines`) are kept as references: tests build the JVM path
+from the two and assert it agrees with ``parse_corpus`` field-for-field.
 """
 
 from __future__ import annotations
@@ -282,11 +282,7 @@ def parse_lines(df: DataFrame, line_col: str = "line") -> DataFrame:
     return out.drop("_f")
 
 
-def parse_corpus(
-    df: DataFrame,
-    use_sql_decode: bool = False,
-    slim: bool = False,
-) -> DataFrame:
+def parse_corpus(df: DataFrame, slim: bool = False) -> DataFrame:
     """Full P-layer: tokenized corpus → parsed LogEntry DataFrame.
 
     Reads ONLY the contract columns (doc_id, tokens, n_tok, source);
@@ -303,11 +299,6 @@ def parse_corpus(
     socket stall observed when streaming multi-MB array batches both
     directions at high core counts.
     """
-    if use_sql_decode:
-        df = df.select("doc_id", "tokens", "n_tok", "source")
-        return parse_lines(df.withColumn("line", decode_tokens_sql(F.col("tokens")))).drop(
-            "line"
-        )
     keep = ("source",) if slim else ("doc_id", "n_tok", "source")
     in_cols = list(dict.fromkeys(keep + ("tokens",)))
     schema = T.StructType(

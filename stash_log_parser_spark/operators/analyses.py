@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from stash_log_parser_spark.session import materialize
+
 OP_TYPES = ["clone", "fetch", "shallow_clone", "push", "ref_advertisement"]
 
 # Plural column names used by repositoryStats output (reference prints
@@ -2949,16 +2951,11 @@ def _dense_hourly(events: DataFrame) -> DataFrame:
     is a distinct on the tiny census, and the zero-fill left join runs
     on |types|·|hours| rows."""
     hour = F.expr("unix_micros(date_trunc('hour', ts)) div 3600000000")
-    # r6 (ADVICE item): the census used to be .cache()d for its three
-    # consumers — which both leaked a CacheManager entry per query for
-    # the rest of the session AND silently served repeat executions of
-    # the same query from the cache (a measurement hazard under this
-    # round's no-result-caching rule).  Instead the census is consumed
-    # exactly ONCE (the zero-fill join); bounds and types are computed
-    # directly from the events table with column-pruned scans — min/max
-    # of the hour expression over events equals min/max of the census
-    # hours, and distinct event_type equals the census's distinct t, so
-    # nothing needs sharing at all.
+    # The census is consumed exactly ONCE (the zero-fill join); bounds
+    # and types are computed directly from the events table with
+    # column-pruned scans — min/max of the hour expression over events
+    # equals min/max of the census hours, and distinct event_type equals
+    # the census's distinct t, so nothing needs sharing.
     hc = (
         events.select(F.col("event_type").alias("t"), hour.alias("h"))
         .groupBy("t", "h")
@@ -4762,10 +4759,10 @@ def ks_two_sample(
     # two consumers (cumulatives + totals) branch off the census —
     # materialize once so the corpus is scanned once (census is
     # value-domain-sized).
-    census = d.groupBy("v").agg(
+    census = materialize(d.groupBy("v").agg(
         F.sum("ia").cast("long").alias("ca"),
         F.sum(F.lit(1) - F.col("ia")).cast("long").alias("cb"),
-    ).cache()
+    ))
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     cum = census.select(
         F.sum("ca").over(w).cast("long").alias("cuma"),
@@ -4903,9 +4900,9 @@ def arrival_dispersion(parsed: DataFrame) -> DataFrame:
     )
     # two consumers (global bounds + per-protocol sums) branch off the
     # census — materialize once so the parsed log is scanned once.
-    census = base.groupBy("protocol", "m").agg(
+    census = materialize(base.groupBy("protocol", "m").agg(
         F.count("*").cast("long").alias("c")
-    ).cache()
+    ))
     bounds = census.agg(
         F.min("m").alias("m0"), F.max("m").alias("m1")
     )
@@ -5122,12 +5119,12 @@ def xcorr_lead_lag(
     from stash_log_parser_spark.operators.textstats import round6
 
     hour = F.expr("unix_micros(date_trunc('hour', ts)) div 3600000000")
-    hc = (
+    hc = materialize(
         events.filter(F.col("event_type").isin(type_x, type_y))
         .select(F.col("event_type").alias("t"), hour.alias("h"))
         .groupBy("t", "h")
         .agg(F.count("*").cast("long").alias("c"))
-    ).cache()
+    )
     bounds = hc.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
     spine = bounds.select(
         F.explode(F.sequence(F.col("h0"), F.col("h1"))).alias("h")

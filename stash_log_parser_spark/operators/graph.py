@@ -12,9 +12,9 @@ Design for scale
 * PageRank is the textbook bulk-synchronous iteration: ranks live in a
   (node, rank) table co-partitioned with the edge list on ``src``;
   every iteration is ONE co-partitioned join (ranks ⋈ edges) plus ONE
-  shuffle (groupBy dst). The edge list is hash-partitioned once and
-  cached — iterations reuse the same partitioning, so only the rank
-  table (|V| rows, tiny next to |E|) moves per round.
+  shuffle (groupBy dst). The edge list is hash-partitioned and
+  materialized once — iterations reuse the same partitioning, so only
+  the rank table (|V| rows, tiny next to |E|) moves per round.
 * The iterate is re-quantized to 1e-6 after every update on BOTH
   engines (`floor(x*1e6+0.5)/1e6`) — the same engine-exact trajectory
   discipline as the PCA power iteration and k-means oracles — so a
@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stash_log_parser_spark.session import materialize
+
 
 def _q6(col):
     """Quantize to 1e-6 — identical to the round6 oracle discipline."""
@@ -46,20 +48,6 @@ def undirect(edges: DataFrame, src: str = "repo_a", dst: str = "repo_b") -> Data
     return fwd.unionByName(rev)
 
 
-def _iter_checkpointer(df: DataFrame, checkpoint_dir: str | None):
-    """Shared lineage-truncation seam for the iterative graph ops (the
-    near_dup_clusters treatment): default ``localCheckpoint`` (executor
-    -memory blocks — fine in local mode and short jobs); with
-    ``checkpoint_dir`` a RELIABLE ``checkpoint(eager=True)`` instead —
-    at 10^12-edge scale a lost executor takes its localCheckpoint
-    blocks with it and kills the job, while reliable checkpoints replay
-    from the checkpoint store."""
-    if checkpoint_dir is not None:
-        df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
 def pagerank(
     edges: DataFrame,
     iters: int = 3,
@@ -67,7 +55,6 @@ def pagerank(
     src: str = "repo_a",
     dst: str = "repo_b",
     checkpoint_every: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Unweighted PageRank over the undirected edge list ``edges``
     (columns src/dst with src < dst per row).
@@ -79,20 +66,21 @@ def pagerank(
     no dangling mass.
 
     The unrolled lineage is fine at the oracle's 3–5 iterations; a
-    20-iteration production run wants ``checkpoint_every=5`` (and a
-    ``checkpoint_dir`` for executor-loss-reliable checkpoints) — the
-    rank table's lineage is truncated every N rounds, which cannot
-    change values (the trajectory is already 1e-6-quantized per round).
+    20-iteration production run wants ``checkpoint_every=5`` — the rank
+    table is materialized every N rounds (reliably when
+    ``spark.checkpoint.dir`` is set), which cannot change values (the
+    trajectory is already 1e-6-quantized per round).
 
     Returns (node, degree, pagerank) ordered by rank desc, node asc.
     """
     both = undirect(edges, src, dst)
-    # Partition the (static) adjacency once on the join key; cache so
-    # each iteration reuses the same co-partitioned build side.
-    adj = both.repartition("src").persist()
+    # Partition the (static) adjacency once on the join key and
+    # materialize it, so each iteration reuses the same co-partitioned
+    # build side; every iteration also joins the node degrees.
+    adj = materialize(both.repartition("src"))
     deg = adj.groupBy("src").agg(F.count("*").alias("deg"))
-    nodes = deg.select(F.col("src").alias("node"), "deg").persist()
-    n_nodes = nodes.count()  # one tiny job; also materializes the cache
+    nodes = materialize(deg.select(F.col("src").alias("node"), "deg"))
+    n_nodes = nodes.count()
 
     base = (1.0 - damping) / n_nodes
     ranks = nodes.select(
@@ -113,7 +101,7 @@ def pagerank(
             "node", _q6(F.lit(base) + F.lit(damping) * F.col("s")).alias("rank")
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            ranks = _iter_checkpointer(ranks, checkpoint_dir)
+            ranks = materialize(ranks)
     out = ranks.join(nodes, "node").select(
         "node",
         F.col("deg").cast("long").alias("degree"),
@@ -193,7 +181,6 @@ def kcore(
     rounds: int = 4,
     src: str = "repo_a",
     dst: str = "repo_b",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """k-core decomposition by synchronous peeling: repeatedly drop
     every node whose degree in the surviving subgraph is < k. The
@@ -207,7 +194,7 @@ def kcore(
     an unconverged result can never be silently reported as the core.
     All arithmetic is integer degree counting — no float anywhere.
 
-    Scale shape: each round is one join of the (static, cached)
+    Scale shape: each round is one join of the (static, materialized)
     bidirectional edge list against the shrinking alive-node set plus
     one degree hash-agg — only (node) and (src,dst) keys shuffle; at
     a 10^12-edge scale each round is a semi-join the optimizer can
@@ -216,7 +203,7 @@ def kcore(
     Returns (node, degree, core_degree, in_core) for every node of
     the input graph, core_degree = degree inside the k-core (0 when
     peeled)."""
-    both = undirect(edges, src, dst).persist()
+    both = materialize(undirect(edges, src, dst))
     deg0 = both.groupBy("src").agg(F.count("*").alias("degree"))
     alive = deg0.filter(F.col("degree") >= k).select(F.col("src").alias("node"))
     prev_n = None
@@ -226,8 +213,8 @@ def kcore(
         ).join(alive.withColumnRenamed("node", "dst"), "dst")
         d = e.groupBy("src").agg(F.count("*").alias("dg"))
         alive = d.filter(F.col("dg") >= k).select(F.col("src").alias("node"))
-        # per-round lineage truncation; reliable when checkpoint_dir set
-        alive = _iter_checkpointer(alive, checkpoint_dir)
+        # per-round lineage truncation; the count below reads it too
+        alive = materialize(alive)
         n = alive.count()
         if prev_n == n:
             break
@@ -332,7 +319,7 @@ def hits(
     is a plain SUM both engines compute the same way.
 
     Scale shape: the incidence is hash-partitioned once on the hub key
-    and cached; each half-step is ONE co-partitioned join against a
+    and materialized; each half-step is ONE co-partitioned join against a
     score table (|U| or |R| rows — tiny next to |E|) plus one
     hash-agg; the L1 total re-enters as a 1-row broadcast cross join
     (broadcast by construction, never scale-growing).  Feed it the
@@ -344,7 +331,7 @@ def hits(
     edges = incidence.select(
         F.col(hub_col).alias("hub"), F.col(auth_col).alias("auth")
     )
-    edges = edges.repartition("hub").persist()
+    edges = materialize(edges.repartition("hub"))
     auth_deg = edges.groupBy("auth").agg(F.count("*").alias("ad"))
     hubs = edges.select("hub").distinct().select("hub", F.lit(1.0).alias("h"))
     auths = None

@@ -21,6 +21,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from stash_log_parser_spark.session import materialize
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -1729,34 +1731,32 @@ def kcenter_coreset(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("v"),
     ).withColumn("n2", round6(_dot(F.col("v"), F.col("v"))))
-    base = base.persist()
-    try:
-        seed = base.orderBy(F.desc("n2"), F.asc("vid")).limit(1).collect()[0]
-        picked = [(1, int(seed.vid), None)]
+    # every round's argmax scan re-reads the projected corpus
+    base = materialize(base)
+    seed = base.orderBy(F.desc("n2"), F.asc("vid")).limit(1).collect()[0]
+    picked = [(1, int(seed.vid), None)]
 
-        def d2_to(center_vec, center_n2):
-            lit_vec = F.array(*[F.lit(float(x)) for x in center_vec])
-            return round6(
-                F.col("n2")
-                + F.lit(float(center_n2))
-                - F.lit(2.0) * _dot(F.col("v"), lit_vec)
-            )
-
-        cur = base.filter(F.col("vid") != int(seed.vid)).withColumn(
-            "min_d", d2_to(seed.v, seed.n2)
+    def d2_to(center_vec, center_n2):
+        lit_vec = F.array(*[F.lit(float(x)) for x in center_vec])
+        return round6(
+            F.col("n2")
+            + F.lit(float(center_n2))
+            - F.lit(2.0) * _dot(F.col("v"), lit_vec)
         )
-        for r in range(2, k + 1):
-            far = cur.orderBy(F.desc("min_d"), F.asc("vid")).limit(1).collect()
-            if not far:
-                break
-            far = far[0]
-            picked.append((r, int(far.vid), float(far.min_d)))
-            if r < k:
-                cur = cur.filter(F.col("vid") != int(far.vid)).withColumn(
-                    "min_d", F.least(F.col("min_d"), d2_to(far.v, far.n2))
-                )
-    finally:
-        base.unpersist()
+
+    cur = base.filter(F.col("vid") != int(seed.vid)).withColumn(
+        "min_d", d2_to(seed.v, seed.n2)
+    )
+    for r in range(2, k + 1):
+        far = cur.orderBy(F.desc("min_d"), F.asc("vid")).limit(1).collect()
+        if not far:
+            break
+        far = far[0]
+        picked.append((r, int(far.vid), float(far.min_d)))
+        if r < k:
+            cur = cur.filter(F.col("vid") != int(far.vid)).withColumn(
+                "min_d", F.least(F.col("min_d"), d2_to(far.v, far.n2))
+            )
     return spark.createDataFrame(
         picked, "sel_round int, vec_id long, min_dist double"
     ).orderBy("sel_round")

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stash_log_parser_spark.session import materialize
+
 _P = 8  # register index bits
 _M = 1 << _P  # 256 registers
 _WBITS = 40  # remaining hash bits ranked by rho
@@ -389,13 +391,10 @@ def heavy_hitters(
         shard.alias("shard"),
         F.explode(_words(F.col(text_col))).alias("word"),
     )
-    # cached: bounded by n_shards x |vocab| rows (the same bounded-
-    # census cache policy as the graph adjacency), consumed twice —
-    # once for the totals collect, once for the candidate filter
-    per_shard = (
-        words.groupBy("shard", "word")
-        .agg(F.count("*").cast("long").alias("n_s"))
-        .cache()
+    # bounded by n_shards x |vocab| rows and consumed twice — once for
+    # the totals collect, once for the candidate filter
+    per_shard = materialize(
+        words.groupBy("shard", "word").agg(F.count("*").cast("long").alias("n_s"))
     )
     # the per-shard totals are an n_shards-row aggregate — collect them
     # (bounded by construction, the repo's dimension-sized-collect

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from stash_log_parser_spark.session import materialize
+
 # BPE-ish pre-tokenizer: letter runs | single digits | single punct.
 # ASCII-only classes keep Spark (Java regex) and DuckDB (RE2) in agreement.
 BPE_RE = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
@@ -622,14 +624,13 @@ def kneser_ney_score(
     # Materialize the gram-type census ONCE (the pmi_collocations
     # device): four consumers branch off it (followers, predecessors,
     # total, the model join) and exchange reuse does not unify them —
-    # without this the corpus is exploded 4×; the cached census is
+    # without this the corpus is exploded 4×; the materialized census is
     # zipf-bounded, not corpus-sized.
-    bi = (
+    bi = materialize(
         doc_grams.groupBy("gram")
         .agg(F.count("*").cast("long").alias("cb"))
         .withColumn("w1", F.split_part(F.col("gram"), F.lit(" "), F.lit(1)))
         .withColumn("w2", F.split_part(F.col("gram"), F.lit(" "), F.lit(2)))
-        .cache()
     )
     fol = bi.groupBy("w1").agg(
         F.sum("cb").cast("long").alias("cw"),
@@ -1056,7 +1057,9 @@ def bpe_learn_merges(
         F.array_join(F.split(F.col("word"), ""), S + S),
         F.lit(S),
     )
-    state = wc.select("word", "n", sym0.alias("sym")).cache()
+    # every merge step's top-pair job re-reads the word table: explode
+    # the corpus once
+    state = materialize(wc.select("word", "n", sym0.alias("sym")))
     spark = docs.sparkSession
     merges = []
     for step in range(1, n_merges + 1):
@@ -2094,10 +2097,8 @@ def signal_spearman(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # three consumers (two marginals + the rank join) branch off the
     # census and exchange reuse does not unify them — materialize once
     # so the corpus is scanned once (census is |X|·|Y|-bounded).
-    census = (
-        base.groupBy("xv", "yv")
-        .agg(F.count("*").cast("long").alias("c"))
-        .cache()
+    census = materialize(
+        base.groupBy("xv", "yv").agg(F.count("*").cast("long").alias("c"))
     )
     wx = Window.orderBy("xv").rowsBetween(Window.unboundedPreceding, -1)
     xm = (
@@ -2173,10 +2174,8 @@ def chi2_independence(
     # four consumers (row/col marginals, totals, the grid left-join)
     # branch off the contingency census — materialize once so the
     # corpus is scanned once (census is |sources|·n_buckets rows).
-    census = (
-        b.groupBy("source", "bucket")
-        .agg(F.count("*").cast("long").alias("o"))
-        .cache()
+    census = materialize(
+        b.groupBy("source", "bucket").agg(F.count("*").cast("long").alias("o"))
     )
     rt = census.groupBy("source").agg(F.sum("o").cast("long").alias("rt"))
     ct = census.groupBy("bucket").agg(F.sum("o").cast("long").alias("ct"))
@@ -2309,11 +2308,9 @@ def pmi_collocations(
     # (marginals ×2, total, candidates) and Spark's exchange reuse does
     # not unify them (verified: 4 corpus scans without this) — at
     # 100 TB the corpus must be scanned and exploded exactly once; the
-    # cached census is vocab²-bounded, not corpus-sized.
-    census = (
-        pairs.groupBy("x", "y")
-        .agg(F.count("*").cast("long").alias("c_xy"))
-        .cache()
+    # materialized census is vocab²-bounded, not corpus-sized.
+    census = materialize(
+        pairs.groupBy("x", "y").agg(F.count("*").cast("long").alias("c_xy"))
     )
     mx = census.groupBy("x").agg(F.sum("c_xy").cast("long").alias("c_x"))
     my = census.groupBy("y").agg(F.sum("c_xy").cast("long").alias("c_y"))
@@ -2441,10 +2438,8 @@ def word_cond_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
     ).select(F.col("p.x").alias("x"), F.col("p.y").alias("y"))
     # one corpus scan: the census feeds both the joint sum and the
     # first-word marginal (same rationale as pmi_collocations).
-    census = (
-        pairs.groupBy("x", "y")
-        .agg(F.count("*").cast("long").alias("c"))
-        .cache()
+    census = materialize(
+        pairs.groupBy("x", "y").agg(F.count("*").cast("long").alias("c"))
     )
     lnq = lambda c: F.floor(  # noqa: E731 — local quantized-ln helper
         F.log(c.cast("double")) * 10_000 + F.lit(0.5)

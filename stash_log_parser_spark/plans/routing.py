@@ -183,8 +183,9 @@ def _sink_request_durations(p: DataFrame, raw: DataFrame) -> DataFrame:
     (in this sink), never stored twice, and moves through one shuffle as
     join VALUE — measured ~5s of the 14s stage build was parquet
     list-encoding the token arrays a second time. The stage side of the
-    join is narrow; co-bucketing both tables on doc_id makes the join
-    exchange-free at scale (see SinkCatalog.write_bucketed)."""
+    join is narrow. The pipeline does not bucket its tables; at scale an
+    Iceberg ``bucket(N, doc_id)`` transform on both would make the join
+    exchange-free."""
     ops = p.filter(
         F.col("is_parsed") & F.col("op_type").isNotNull() & F.col("duration_ms").isNotNull()
     ).select(

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -104,3 +104,27 @@ def build_session(
     except Exception:  # pragma: no cover - never block session creation
         pass
     return spark
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` now and cut its lineage: the one way an operator
+    reuses a relation that several consumers of one query read.
+
+    A reliable ``checkpoint(eager=True)`` when the context has a
+    checkpoint directory (``spark.checkpoint.dir``), otherwise
+    ``localCheckpoint(eager=True)``. Why not ``cache``/``persist``:
+
+    * no CacheManager entry is made, so a repeat of the query recomputes
+      instead of reading the first run's result;
+    * the blocks belong to the returned frame, and the ContextCleaner
+      frees them once it is garbage-collected (nothing to unpersist);
+    * the caller runs one job now, while its plan is being built.
+
+    The trade: a cached partition that is lost is recomputed from
+    lineage, but a checkpoint has none. Local blocks die with their
+    executor and fail the query, so a deployment that must survive
+    executor loss sets ``spark.checkpoint.dir``.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

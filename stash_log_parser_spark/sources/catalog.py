@@ -154,26 +154,6 @@ class SinkCatalog:
                 .parquet(self._path(sink))
             )
 
-    def write_bucketed(
-        self, df: DataFrame, sink: str, col: str = "doc_id", buckets: int = 64
-    ) -> None:
-        """Bucketed stage layout (SURVEY.md §8.1): co-locate a table by
-        ``col`` so id-keyed joins between co-bucketed tables (e.g. the
-        routed raw-row token re-attach) are EXCHANGE-FREE — each join
-        task reads matching buckets from both sides. Bucket metadata
-        lives in the session catalog (parquet alone can't carry it), so
-        read back with :meth:`read_bucketed`, not a path read. Under
-        Iceberg the equivalent is a ``bucket(N, col)`` partition
-        transform + storage-partitioned joins."""
-        (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .option("path", self._path(sink))
-            .bucketBy(buckets, col)
-            .sortBy(col)
-            .saveAsTable(self._table_name(sink))
-        )
-
     def compact_partitions(
         self,
         sink: str,
@@ -294,14 +274,6 @@ class SinkCatalog:
                     shutil.rmtree(os.path.join(path, name))
                     actions.setdefault(part, "dropped_stale_staging")
         return actions
-
-    def read_bucketed(self, sink: str) -> DataFrame:
-        return self.spark.table(self._table_name(sink))
-
-    def _table_name(self, sink: str) -> str:
-        import re
-
-        return "slp_" + re.sub(r"[^A-Za-z0-9_]", "_", f"{self.base}_{sink}").strip("_")
 
     def read(self, sink: str) -> DataFrame:
         if self.use_iceberg:

@@ -58,6 +58,18 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """Give the context a checkpoint directory for one test, so
+    ``session.materialize`` takes the reliable-checkpoint path; restore
+    "no directory" afterwards."""
+    sc = spark.sparkContext
+    path = str(tmp_path / "checkpoints")
+    sc.setCheckpointDir(path)
+    yield path
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+
+
 @pytest.fixture(scope="session")
 def fixture_corpus(spark):
     return spark.createDataFrame(lines_to_rows(FIXTURE_LINES), CORPUS_SCHEMA).cache()

@@ -92,6 +92,37 @@ def test_query_matches_oracle(spark, duck, name):
     assert sr == orr
 
 
+# every query whose operators read a relation more than once
+SHARES_A_RELATION = [
+    "docs_kneser_ney",
+    "docs_bpe_merges",
+    "docs_signal_spearman",
+    "docs_chi2_independence",
+    "docs_pmi_collocations",
+    "docs_word_cond_entropy",
+    "docs_heavy_hitters",
+    "events_ks_two_sample",
+    "events_xcorr_lag",
+    "log_arrival_dispersion",
+    "log_repo_pagerank",
+    "log_repo_kcore",
+    "log_repo_hits",
+    "emb_kcenter_coreset",
+    "docs_curate_corpus_clustered",
+]
+
+
+def test_queries_leave_no_cache_manager_entry(spark):
+    """Operators share a relation through ``session.materialize``, never
+    the CacheManager: a forced query leaves no cache entry behind, so a
+    repeat of it recomputes instead of reading the first run's result."""
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for name in SHARES_A_RELATION:
+        E.queries()[name](spark, SF).write.format("noop").mode("overwrite").save()
+        assert cache.isEmpty(), f"{name} left a CacheManager entry"
+
+
 @pytest.mark.parametrize(
     "name", ["tpch_shipping_priority", "tpch_top_customers", "tpch_local_supplier_volume"]
 )

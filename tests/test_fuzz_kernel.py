@@ -88,7 +88,14 @@ def test_arrow_and_jvm_parse_paths_agree_on_nasty_lines(spark):
     covers the happy path; this covers the weird tail.)"""
     import random
 
-    from stash_log_parser_spark.functions.parse import PARSED_COLUMNS, parse_corpus
+    from pyspark.sql import functions as F
+
+    from stash_log_parser_spark.functions.parse import (
+        PARSED_COLUMNS,
+        decode_tokens_sql,
+        parse_corpus,
+        parse_lines,
+    )
 
     rng = random.Random(1234)
     frags = [
@@ -112,5 +119,6 @@ def test_arrow_and_jvm_parse_paths_agree_on_nasty_lines(spark):
     )
     cols = [c for c in PARSED_COLUMNS if c != "tokens"]
     a = sorted(map(tuple, parse_corpus(df).select(*cols).collect()))
-    b = sorted(map(tuple, parse_corpus(df, use_sql_decode=True).select(*cols).collect()))
+    jvm = parse_lines(df.withColumn("line", decode_tokens_sql(F.col("tokens"))))
+    b = sorted(map(tuple, jvm.select(*cols).collect()))
     assert a == b

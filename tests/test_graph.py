@@ -204,38 +204,41 @@ class TestLabelPropagation:
         assert out == labels
 
 
-def test_pagerank_15_iters_with_reliable_checkpoint(spark, tmp_path):
-    from stash_log_parser_spark.operators import graph as G
-
+def test_pagerank_15_iters_with_reliable_checkpoint(spark, request):
     """A deep (15-iteration) run with checkpointing on completes and is
     value-identical to the unrolled-lineage run: checkpointing only
     truncates lineage — the 1e-6-quantized trajectory cannot change."""
+    import os
+
+    from stash_log_parser_spark.operators import graph as G
+
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d"), ("a", "d"), ("a", "c"), ("d", "e")],
         "repo_a string, repo_b string",
     )
     plain = G.pagerank(edges, iters=15).collect()
-    ck = G.pagerank(
-        edges,
-        iters=15,
-        checkpoint_every=5,
-        checkpoint_dir=str(tmp_path / "ck"),
-    ).collect()
+    ckpt = request.getfixturevalue("checkpoint_dir")
+    ck = G.pagerank(edges, iters=15, checkpoint_every=5).collect()
     assert [tuple(r) for r in ck] == [tuple(r) for r in plain]
+    assert any(os.scandir(ckpt))
 
 
-def test_kcore_reliable_checkpoint_dir(spark, tmp_path):
-    from stash_log_parser_spark.operators import graph as G
-
+def test_kcore_reliable_checkpoint_dir(spark, request):
     """kcore with a reliable checkpoint dir peels identically; 15
     rounds on an already-converged graph still terminates early."""
+    import os
+
+    from stash_log_parser_spark.operators import graph as G
+
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")],
         "repo_a string, repo_b string",
     )
     plain = G.kcore(edges, k=2, rounds=15).collect()
-    ck = G.kcore(edges, k=2, rounds=15, checkpoint_dir=str(tmp_path / "ck")).collect()
+    ckpt = request.getfixturevalue("checkpoint_dir")
+    ck = G.kcore(edges, k=2, rounds=15).collect()
     assert [tuple(r) for r in ck] == [tuple(r) for r in plain]
+    assert any(os.scandir(ckpt))
 
 
 def _inc_df(spark, pairs):

@@ -9,7 +9,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from stash_log_parser_spark.functions.parse import parse_corpus
+from stash_log_parser_spark.functions.parse import decode_tokens_sql, parse_corpus, parse_lines
 
 
 def row(parsed, doc_id):
@@ -86,9 +86,12 @@ def test_parse_preserves_keys_for_token_reattach(parsed, fixture_corpus):
 
 
 def test_sql_decode_path_matches_udf_path(fixture_corpus):
-    """The pure-JVM unhex decode and the Arrow pandas-UDF decode agree."""
+    """The pure-JVM path (unhex decode + Catalyst grok) and the Arrow
+    parse agree."""
     a = parse_corpus(fixture_corpus).orderBy("doc_id")
-    b = parse_corpus(fixture_corpus, use_sql_decode=True).orderBy("doc_id")
+    b = parse_lines(
+        fixture_corpus.withColumn("line", decode_tokens_sql(F.col("tokens")))
+    ).orderBy("doc_id")
     cols = ["doc_id", "protocol", "req_dir", "req_counter", "username",
             "ts", "method", "path", "repo_slug", "labels", "duration_ms",
             "is_parsed", "op_type"]

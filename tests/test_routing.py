@@ -214,6 +214,44 @@ def test_unforced_append_reads_only_the_stage(spark, corpus_path, tmp_path, monk
     assert s["stage_rows"] == df.filter(day == last).count()
 
 
+def _jobs_started(spark, fn):
+    """Run ``fn``; return its result and the number of Spark jobs it
+    started (the status tracker's new job ids, read once the listener
+    bus has delivered every event)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    out = fn()
+    bus.waitUntilEmpty()
+    return out, len(set(sc.statusTracker().getJobIdsForGroup()) - before)
+
+
+def test_append_and_rollup_job_counts(spark, corpus_path, tmp_path):
+    """Pin the measured job counts: a change that re-adds a count-back,
+    a sort or a footer-inference read to the append or to a global
+    rollup fails here, not only in a traced benchmark run."""
+    df = spark.read.parquet(corpus_path)
+    day = F.regexp_extract("source", r"(\d{4}-\d{2}-\d{2})", 1)
+    last = max(r.d for r in df.select(day.alias("d")).distinct().collect())
+    inp = str(tmp_path / "input")
+    df.filter(day != last).write.parquet(inp)
+    out = str(tmp_path / "sinks")
+    run_pipeline(spark, inp, out, run_id="history")
+    df.filter(day == last).write.mode("append").parquet(inp)
+
+    s, append_jobs = _jobs_started(
+        spark, lambda: run_pipeline(spark, inp, out, run_id="append")
+    )
+    assert s["days_parsed"] == 1
+    rows, rollup_jobs = _jobs_started(
+        spark, lambda: repository_stats_global(SinkCatalog(spark, out)).collect()
+    )
+    assert rows
+    # 26 is perfbench's traced routing.jobs for its one-day append
+    assert (append_jobs, rollup_jobs) == (26, 5)
+
+
 def test_cross_midnight_rows_route_to_file_day(spark, tmp_path):
     """A response logged in day-0's file with a day-1 timestamp
     (log-rotation spill) must be WRITTEN — under the file's day
@@ -255,34 +293,6 @@ def test_cross_midnight_rows_route_to_file_day(spark, tmp_path):
         (F.col("req_counter") == 9001) & F.col("is_parsed")
     ).count()
     assert unmatched == 2 and pairing.matched_pairs >= 1
-
-
-def test_bucketed_stage_join_is_shuffle_free(spark, corpus_path, tmp_path):
-    """The bucketed stage layout (SURVEY.md §8.1): parsed stage and raw
-    tokens co-bucketed on doc_id join WITHOUT any Exchange — the plan
-    the token re-attach would run at 100 TB."""
-    from stash_log_parser_spark.functions.parse import parse_corpus
-
-    raw = spark.read.parquet(corpus_path).select("doc_id", "tokens", "n_tok", "source")
-    parsed = parse_corpus(raw).select("doc_id", "op_type", "duration_ms")
-    cat = SinkCatalog(spark, str(tmp_path / "bucketed"))
-    cat.write_bucketed(parsed, "parsed_bucketed", col="doc_id", buckets=8)
-    cat.write_bucketed(raw.select("doc_id", "tokens"), "tokens_bucketed", col="doc_id", buckets=8)
-
-    # at 100 TB neither side is broadcastable — force the large-large
-    # join shape the bucketing exists for
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = cat.read_bucketed("parsed_bucketed").join(
-            cat.read_bucketed("tokens_bucketed"), "doc_id"
-        )
-        assert j.count() == raw.count()
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_estimate_scan_splits_matches_spark_packing(spark, tmp_path):

@@ -11,7 +11,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 QUERIES = [
     (
@@ -344,7 +345,7 @@ def main() -> None:
             mark = ">> " if INVARIANT_RE.search(ln) else "   "
             lines.append(mark + ln.rstrip())
         out += [f"## {name}", "", why, "", "```", *lines[:120], "```", ""]
-    with open("PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 

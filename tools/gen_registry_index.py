@@ -9,10 +9,13 @@ REGISTRY-INDEX markers.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+COVERAGE = os.path.join(ROOT, "COVERAGE.md")
 
 BEGIN = "<!-- REGISTRY-INDEX:BEGIN (generated by tools/gen_registry_index.py) -->"
 END = "<!-- REGISTRY-INDEX:END -->"
@@ -46,7 +49,7 @@ def main() -> None:
     lines += ["", END]
     block = "\n".join(lines)
 
-    with open("COVERAGE.md") as f:
+    with open(COVERAGE) as f:
         text = f.read()
     if BEGIN in text:
         text = re.sub(
@@ -57,7 +60,7 @@ def main() -> None:
         )
     else:
         text = text.rstrip() + "\n\n" + block + "\n"
-    with open("COVERAGE.md", "w") as f:
+    with open(COVERAGE, "w") as f:
         f.write(text)
     print(f"wrote registry index: {len(qs)} queries")
 
