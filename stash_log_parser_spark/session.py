@@ -3,6 +3,8 @@
 The same profile is used by tests (small core counts) and the bench /
 scaling runs (local[8] vs local[32]); on a real cluster the identical
 config ships through ``spark-submit --py-files`` (see plans/job.py).
+:func:`materialize` is how operators reuse a relation within a query;
+it reads the deployment's ``spark.checkpoint.dir``.
 """
 
 from __future__ import annotations
@@ -117,13 +119,15 @@ def materialize(df: DataFrame) -> DataFrame:
     * no CacheManager entry is made, so a repeat of the query recomputes
       instead of reading the first run's result;
     * the blocks belong to the returned frame, and the ContextCleaner
-      frees them once it is garbage-collected (nothing to unpersist);
-    * the caller runs one job now, while its plan is being built.
+      frees them once it is garbage-collected (nothing to unpersist;
+      reliable checkpoint files go too only when the deployment sets
+      ``spark.cleaner.referenceTracking.cleanCheckpoints``).
 
-    The trade: a cached partition that is lost is recomputed from
-    lineage, but a checkpoint has none. Local blocks die with their
-    executor and fail the query, so a deployment that must survive
-    executor loss sets ``spark.checkpoint.dir``.
+    The costs: the caller runs one job now, while its plan is being
+    built; and a lost cached partition is recomputed from lineage, but
+    a checkpoint has none. Local blocks die with their executor and
+    fail the query, so a deployment that must survive executor loss
+    sets ``spark.checkpoint.dir``.
     """
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
