@@ -190,10 +190,9 @@ def test_lineage_rows_are_true_per_day_counts(spark, corpus_path, tmp_path):
         assert cat.day_rows(name) == actual, name
 
 
-def test_unforced_append_reads_only_the_stage(spark, corpus_path, tmp_path, monkeypatch):
-    """A one-day append takes its lineage counts from the written files'
-    footers: the only sink it reads through Spark is the parsed stage
-    its sinks fan out from, never a sink it has just written."""
+def _history_then_last_day(spark, corpus_path, tmp_path):
+    """Commit every day of the corpus but the last, then add the last
+    day's input; returns (input dir, sink root, the last day's rows)."""
     df = spark.read.parquet(corpus_path)
     day = F.regexp_extract("source", r"(\d{4}-\d{2}-\d{2})", 1)
     last = max(r.d for r in df.select(day.alias("d")).distinct().collect())
@@ -202,7 +201,14 @@ def test_unforced_append_reads_only_the_stage(spark, corpus_path, tmp_path, monk
     out = str(tmp_path / "sinks")
     run_pipeline(spark, inp, out, run_id="history")
     df.filter(day == last).write.mode("append").parquet(inp)
+    return inp, out, df.filter(day == last)
 
+
+def test_unforced_append_reads_only_the_stage(spark, corpus_path, tmp_path, monkeypatch):
+    """A one-day append takes its lineage counts from the written files'
+    footers: the only sink it reads through Spark is the parsed stage
+    its sinks fan out from, never a sink it has just written."""
+    inp, out, new_day = _history_then_last_day(spark, corpus_path, tmp_path)
     reads = []
     read = SinkCatalog.read
     monkeypatch.setattr(
@@ -211,7 +217,7 @@ def test_unforced_append_reads_only_the_stage(spark, corpus_path, tmp_path, monk
     s = run_pipeline(spark, inp, out, run_id="append")
     assert s["days_parsed"] == 1
     assert reads == ["parsed_stage"]
-    assert s["stage_rows"] == df.filter(day == last).count()
+    assert s["stage_rows"] == new_day.count()
 
 
 def _jobs_started(spark, fn):
@@ -231,15 +237,7 @@ def test_append_and_rollup_job_counts(spark, corpus_path, tmp_path):
     """Pin the measured job counts: a change that re-adds a count-back,
     a sort or a footer-inference read to the append or to a global
     rollup fails here, not only in a traced benchmark run."""
-    df = spark.read.parquet(corpus_path)
-    day = F.regexp_extract("source", r"(\d{4}-\d{2}-\d{2})", 1)
-    last = max(r.d for r in df.select(day.alias("d")).distinct().collect())
-    inp = str(tmp_path / "input")
-    df.filter(day != last).write.parquet(inp)
-    out = str(tmp_path / "sinks")
-    run_pipeline(spark, inp, out, run_id="history")
-    df.filter(day == last).write.mode("append").parquet(inp)
-
+    inp, out, _ = _history_then_last_day(spark, corpus_path, tmp_path)
     s, append_jobs = _jobs_started(
         spark, lambda: run_pipeline(spark, inp, out, run_id="append")
     )
