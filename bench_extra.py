@@ -7,7 +7,8 @@ times rounds with the round-start bench.py; numbers from here are only
 cited as before/after evidence in OPTIMIZATION_r06.md.
 
 Usage:
-    python bench_extra.py q1 q2 ...            # time queries (median of reps)
+    python bench_extra.py q1 q2 ...            # time queries (one untimed
+                                               # warm-up, then median of reps)
     python bench_extra.py --explain TAG q1 ... # also write plans/r06/<q>_<TAG>.txt
     SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 SPARK_GRAFT_REPS=3 python bench_extra.py ...
 """
@@ -65,9 +66,12 @@ def main() -> None:
             )
             with open(os.path.join(PLANS_DIR, f"{name}_{tag}.txt"), "w") as f:
                 f.write(plan)
+        spark.sparkContext.setJobDescription(f"bench_extra: {name}")
+        # one untimed run first, so the timed reps leave out the
+        # process's first-run costs (JIT, worker start-up, file cache)
+        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         samples = []
         for _ in range(reps):
-            spark.sparkContext.setJobDescription(f"bench_extra: {name}")
             t0 = time.perf_counter()
             qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples.append(time.perf_counter() - t0)

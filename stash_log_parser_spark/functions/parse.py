@@ -38,9 +38,12 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..sources.catalog import first_data_file
 
 # ---------------------------------------------------------------------------
 # P1: token decode — Arrow buffer surgery
@@ -105,12 +108,44 @@ def decode_tokens_sql(tokens: Column) -> Column:
 
 N_FIELDS = 10
 
-_CONTRACT_FIELDS = [
-    T.StructField("doc_id", T.StringType()),
-    T.StructField("tokens", T.ArrayType(T.IntegerType())),
-    T.StructField("n_tok", T.IntegerType()),
-    T.StructField("source", T.StringType()),
-]
+# The input contract (BASELINE.json:15): the only columns the pipeline
+# reads from a tokenized corpus.
+CORPUS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.StringType()),
+        T.StructField("tokens", T.ArrayType(T.IntegerType())),
+        T.StructField("n_tok", T.IntegerType()),
+        T.StructField("source", T.StringType()),
+    ]
+)
+
+
+def read_corpus(spark: SparkSession, path: str) -> DataFrame:
+    """Read the tokenized corpus at ``path`` (one parquet file or a
+    directory) as exactly the :data:`CORPUS_SCHEMA` columns, with no
+    schema-inference job.
+
+    With a given schema, Spark reads a column the files lack as silent
+    nulls, so the footer of the first data file is checked on the
+    driver first and a missing contract column raises, naming it. A
+    column of another type (``tokens`` as ``list<int64>``) fails in the
+    scan with Spark's type-mismatch error. When no local data file is
+    found (an empty directory, a remote path), the read falls back to
+    inference, which keeps Spark's own errors."""
+    reader = spark.read
+    first = first_data_file(path)
+    if first is not None:
+        have = set(pq.read_schema(first).names)
+        missing = [c for c in CORPUS_SCHEMA.names if c not in have]
+        if missing:
+            raise ValueError(
+                f"corpus file {first} lacks the input contract column(s) "
+                f"{', '.join(missing)} (expected {CORPUS_SCHEMA.simpleString()})"
+            )
+        reader = reader.schema(CORPUS_SCHEMA)
+    # drops the partition columns Spark adds from a partitioned input's paths
+    return reader.parquet(path).select(*CORPUS_SCHEMA.names)
+
 
 def _split_record_batch(batch: pa.RecordBatch, keep: tuple[str, ...]) -> pa.RecordBatch:
     """decode + split one Arrow batch with pyarrow.compute kernels only —
@@ -302,7 +337,7 @@ def parse_corpus(df: DataFrame, slim: bool = False) -> DataFrame:
     keep = ("source",) if slim else ("doc_id", "n_tok", "source")
     in_cols = list(dict.fromkeys(keep + ("tokens",)))
     schema = T.StructType(
-        [f for f in _CONTRACT_FIELDS if f.name in keep]
+        [CORPUS_SCHEMA[c] for c in keep]
         + [T.StructField("nf", T.IntegerType())]
         + [T.StructField(f"f{i}", T.StringType()) for i in range(N_FIELDS)]
     )

@@ -97,12 +97,10 @@ def _load_parsed(spark, inputs: list[str], since, until, via: str = "auto") -> D
     if len(inputs) == 1 and _is_parquet(inputs[0]):
         from pyspark.sql import functions as F
 
-        from ..functions.parse import parse_corpus
-
-        raw = spark.read.parquet(inputs[0])
+        from ..functions.parse import parse_corpus, read_corpus
         from ..sources.logfiles import FILENAME_DATE_RE
 
-        raw = raw.withColumn(
+        raw = read_corpus(spark, inputs[0]).withColumn(
             "file_day", F.regexp_extract("source", FILENAME_DATE_RE, 1)
         )
         if since:

@@ -41,7 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from ..functions.parse import parse_corpus
+from ..functions.parse import parse_corpus, read_corpus
 from ..operators import analyses as A
 from ..operators.enrich import enrich
 from ..sources.catalog import SinkCatalog
@@ -233,7 +233,7 @@ def run_pipeline(
     catalog = SinkCatalog(spark, output)
     committed = set() if force else catalog.committed()
 
-    raw = spark.read.parquet(input_path).select("doc_id", "tokens", "n_tok", "source")
+    raw = read_corpus(spark, input_path)
     raw = raw.withColumn("file_day", F.regexp_extract("source", FILENAME_DATE_RE, 1))
     all_days = sorted(r.file_day for r in raw.select("file_day").distinct().collect())
 

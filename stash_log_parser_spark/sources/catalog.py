@@ -17,16 +17,43 @@ overwrite-one-day semantics. Both backends share the lineage protocol:
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # reserved batch id for batch-pipeline writes into a sink that already
 # carries the streaming batch=<id>/day=<d> layout (see write_partitions)
 BACKFILL_BATCH_ID = -1
 
 LINEAGE_SCHEMA = "sink string, day string, rows long, run_id string, seq long"
+
+# the footer key under which Spark's parquet writer stores the row schema
+# of the data columns (partition columns live in the paths)
+SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def first_data_file(path: str) -> str | None:
+    """The first data file of a parquet read of ``path``: ``path``
+    itself when it is a file, else the first file of a sorted walk that
+    skips ``_``/``.``-prefixed files and directories (``_SUCCESS``,
+    ``.crc``, compaction staging), as Spark's listing does. None when
+    there is no such file or ``path`` is not a local path."""
+    if os.path.isfile(path):
+        return path
+    if not os.path.isdir(path):
+        return None
+    for entry in sorted(os.scandir(path), key=lambda e: e.name):
+        if entry.name.startswith(("_", ".")):
+            continue
+        if entry.is_file():
+            return entry.path
+        found = first_data_file(entry.path)
+        if found is not None:
+            return found
+    return None
 
 
 def _live_lineage(rows: list[tuple[str, str, str]]) -> list[bool]:
@@ -276,6 +303,15 @@ class SinkCatalog:
         return actions
 
     def read(self, sink: str) -> DataFrame:
+        """The sink as a DataFrame. The parquet backend reads with the
+        row schema Spark's writer left in the footer of the sink's first
+        data file, read on the driver: no schema-inference job, and the
+        same schema inference would give, since that footer is all it
+        reads. The partition columns (``day``, ``batch``) are not in
+        that schema, so Spark still infers them from the paths (``day``
+        as a date). A sink whose footer has no Spark schema (the
+        pyarrow-written ``_lineage``) or that has no data file is read
+        with inference, which keeps Spark's error for an empty sink."""
         if self.use_iceberg:
             return self.spark.read.table(f"{self.base}.{sink}")
         # a compaction crash between its two renames leaves the day
@@ -283,7 +319,16 @@ class SinkCatalog:
         # repair BEFORE every read, not only on the next maintenance
         # run (round-3 review; one listdir when nothing is pending)
         self.recover_compactions(sink)
-        return self.spark.read.parquet(self._path(sink))
+        path = self._path(sink)
+        first = first_data_file(path)
+        if first is not None:
+            import pyarrow.parquet as pq
+
+            row_schema = (pq.read_schema(first).metadata or {}).get(SPARK_ROW_SCHEMA_KEY)
+            if row_schema is not None:
+                schema = T.StructType.fromJson(json.loads(row_schema))
+                return self.spark.read.schema(schema).parquet(path)
+        return self.spark.read.parquet(path)
 
     def day_rows(
         self, sink: str, days: list | None = None, batch_id: int | None = None

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.parse import parse_corpus
+from ..functions.parse import CORPUS_SCHEMA, parse_corpus
 
 # Routed sinks whose per-day rows are NOT mergeable partials: the
 # concurrency gauge (a running count — per-batch maxima under-count when
@@ -34,16 +34,6 @@ from ..functions.parse import parse_corpus
 # across batches). streaming_ingest refuses to commit these for a
 # file_day that spans micro-batches.
 ORDER_SENSITIVE_SINKS = {"concurrency_by_hour", "pairing_daily"}
-
-CORPUS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("tokens", T.ArrayType(T.IntegerType())),
-        T.StructField("n_tok", T.IntegerType()),
-        T.StructField("source", T.StringType()),
-    ]
-)
-
 
 def stream_corpus(spark: SparkSession, input_dir: str) -> DataFrame:
     """File-source stream over a tokenized-corpus parquet directory."""

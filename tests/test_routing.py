@@ -246,8 +246,73 @@ def test_append_and_rollup_job_counts(spark, corpus_path, tmp_path):
         spark, lambda: repository_stats_global(SinkCatalog(spark, out)).collect()
     )
     assert rows
-    # 26 is perfbench's traced routing.jobs for its one-day append
-    assert (append_jobs, rollup_jobs) == (26, 5)
+    # 24 is perfbench's traced routing.jobs for its one-day append
+    assert (append_jobs, rollup_jobs) == (24, 4)
+
+
+def test_catalog_read_schema_equals_inferred_without_a_job(spark, corpus_path, tmp_path):
+    """SinkCatalog.read takes the schema from the first data file's
+    footer: the same schema Spark's inference gives (partition columns
+    included, ``day`` as a date), for the stage, every sink, the
+    pyarrow-written lineage and a streaming ``batch=<id>/day=<d>``
+    sink, and no Spark job for a sink Spark wrote."""
+    out = str(tmp_path / "sinks")
+    run_pipeline(spark, corpus_path, out, run_id="r1")
+    cat = SinkCatalog(spark, out)
+    stage = cat.read("parsed_stage").withColumn("day", F.col("day").cast("string"))
+    cat.write_batch_partitions(stage.limit(5), "streamed", batch_id=3)
+    for name in ["parsed_stage", *SINKS, "streamed"]:
+        df, jobs = _jobs_started(spark, lambda: cat.read(name))
+        assert df.schema == spark.read.parquet(f"{out}/{name}").schema, name
+        assert jobs == 0, name
+    assert "batch" in cat.read("streamed").columns
+    assert cat.read("_lineage").schema == spark.read.parquet(f"{out}/_lineage").schema
+
+
+def _one_line_corpus(**cols):
+    """A one-row corpus table in the contract's columns and types, with
+    ``cols`` replacing or adding columns."""
+    import pyarrow as pa
+
+    line = b"GARBAGE LINE"
+    return pa.table(
+        {
+            "doc_id": ["a"],
+            "tokens": pa.array([list(line)], pa.list_(pa.int32())),
+            "n_tok": pa.array([len(line)], pa.int32()),
+            "source": ["atlassian-stash-access-2012-09-08.0.log"],
+            **cols,
+        }
+    )
+
+
+def test_corpus_missing_a_contract_column_fails_naming_it(spark, tmp_path):
+    """The input is read with the contract schema, under which Spark
+    returns nulls for a column the files lack; the footer check turns
+    that into an error naming the column."""
+    import pyarrow.parquet as pq
+
+    inp = tmp_path / "input"
+    inp.mkdir()
+    pq.write_table(_one_line_corpus().drop(["n_tok"]), str(inp / "part-0.parquet"))
+    pq.write_table(_one_line_corpus(), str(inp / "part-1.parquet"))
+    with pytest.raises(ValueError, match="n_tok"):
+        run_pipeline(spark, str(inp), str(tmp_path / "sinks"))
+
+
+def test_corpus_with_int64_tokens_fails_loudly(spark, tmp_path):
+    """``tokens`` as list<int64> is not the contract's array<int>: the
+    scan fails with Spark's type-mismatch error, nothing is committed."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "corpus.parquet")
+    tokens = pa.array([list(b"GARBAGE LINE")], pa.list_(pa.int64()))
+    pq.write_table(_one_line_corpus(tokens=tokens), path)
+    out = str(tmp_path / "sinks")
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        run_pipeline(spark, path, out)
+    assert SinkCatalog(spark, out).committed() == set()
 
 
 def test_cross_midnight_rows_route_to_file_day(spark, tmp_path):
@@ -412,7 +477,9 @@ def test_compact_partitions_preserves_rows(spark, corpus_path, tmp_path):
     out = str(tmp_path / "sinks")
     run_pipeline(spark, corpus_path, out, run_id="r1")
     cat = SinkCatalog(spark, out)
-    sink = "request_durations"
+    # the stage is written by one task per core, each holding rows of
+    # every day, so its day partitions hold several files
+    sink = "parsed_stage"
     before_rows = sorted(map(tuple, cat.read(sink).collect()))
 
     def files_per_day():
