@@ -43,7 +43,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.catalog import first_data_file
+from ..sources.catalog import data_files
 
 # ---------------------------------------------------------------------------
 # P1: token decode — Arrow buffer surgery
@@ -126,23 +126,23 @@ def read_corpus(spark: SparkSession, path: str) -> DataFrame:
     schema-inference job.
 
     With a given schema, Spark reads a column the files lack as silent
-    nulls, so the footer of the first data file is checked on the
-    driver first and a missing contract column raises, naming it. A
-    column of another type (``tokens`` as ``list<int64>``) fails in the
-    scan with Spark's type-mismatch error. When no local data file is
-    found (an empty directory, a remote path), the read falls back to
-    inference, which keeps Spark's own errors."""
-    reader = spark.read
-    first = first_data_file(path)
-    if first is not None:
-        have = set(pq.read_schema(first).names)
+    nulls, so the footer of every local data file is checked on the
+    driver first and a file that lacks a contract column raises, naming
+    the file and the column. A column of another type (``tokens`` as
+    ``list<int64>``) fails in the scan with Spark's type-mismatch error.
+    When no local data file is found (an empty directory, a remote
+    path), the read falls back to inference, which keeps Spark's own
+    errors."""
+    files = list(data_files(path))
+    for f in files:
+        have = set(pq.read_schema(f).names)
         missing = [c for c in CORPUS_SCHEMA.names if c not in have]
         if missing:
             raise ValueError(
-                f"corpus file {first} lacks the input contract column(s) "
+                f"corpus file {f} lacks the input contract column(s) "
                 f"{', '.join(missing)} (expected {CORPUS_SCHEMA.simpleString()})"
             )
-        reader = reader.schema(CORPUS_SCHEMA)
+    reader = spark.read.schema(CORPUS_SCHEMA) if files else spark.read
     # drops the partition columns Spark adds from a partitioned input's paths
     return reader.parquet(path).select(*CORPUS_SCHEMA.names)
 

@@ -11,9 +11,9 @@ queryable artifact (the "parsed logs" table a log platform would keep).
 Batch and streaming share one core: ``parse_stage`` builds the stage
 frame (parse → enrich → project, ``day`` = the filename day) and
 ``fan_out`` runs every sink on its own thread and scheduler pool.
-``run_pipeline`` writes the stage to parquet and fans out over pruned
-scans of it; streaming_ingest (streaming/stream.py) fans out over each
-micro-batch's cached stage.
+Both write the stage as the ``parsed_stage`` table and fan out over
+pruned scans of it: ``run_pipeline`` in ``day=`` partitions,
+streaming_ingest (streaming/stream.py) in ``batch=<id>/day=`` ones.
 
 Incremental / resumable semantics mirror the reference's "progressive"
 file-level resume (File.hs:~50 createPredicate [K]) at day granularity:

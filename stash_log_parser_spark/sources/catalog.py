@@ -35,46 +35,29 @@ LINEAGE_SCHEMA = "sink string, day string, rows long, run_id string, seq long"
 SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def first_data_file(path: str) -> str | None:
-    """The first data file of a parquet read of ``path``: ``path``
-    itself when it is a file, else the first file of a sorted walk that
-    skips ``_``/``.``-prefixed files and directories (``_SUCCESS``,
-    ``.crc``, compaction staging), as Spark's listing does. None when
-    there is no such file or ``path`` is not a local path."""
+def data_files(path: str):
+    """The data files of a parquet read of ``path``, in a sorted walk:
+    ``path`` itself when it is a file, else every file under it except
+    ``_``/``.``-prefixed files and directories (``_SUCCESS``, ``.crc``,
+    compaction staging), which Spark's listing skips too. Yields
+    nothing when ``path`` is not a local path."""
     if os.path.isfile(path):
-        return path
+        yield path
+        return
     if not os.path.isdir(path):
-        return None
+        return
     for entry in sorted(os.scandir(path), key=lambda e: e.name):
         if entry.name.startswith(("_", ".")):
             continue
         if entry.is_file():
-            return entry.path
-        found = first_data_file(entry.path)
-        if found is not None:
-            return found
-    return None
+            yield entry.path
+        else:
+            yield from data_files(entry.path)
 
 
-def _live_lineage(rows: list[tuple[str, str, str]]) -> list[bool]:
-    """Per (sink, day, run_id) lineage row: False where the row is an
-    original superseded by its ``retracted:`` twin, else True (retracted
-    rows themselves stay live — they record that the day was written).
-
-    A retraction SUPERSEDES its original even if the original row is
-    still on disk: :meth:`SinkCatalog.retract` writes the rewritten log
-    before deleting the old files, so a crash in between leaves both the
-    (sink, day, run_id) original and its "retracted:"+run_id twin.
-    Without this rule that crash window was PERMANENT (round-3 advice):
-    the full-key lineage dedup keeps both rows forever and the purged day
-    counted as committed, re-enabling the silent-skip-on-backfill bug
-    retraction exists to prevent."""
-    retracted = {
-        (s, d, r[len("retracted:"):]) for s, d, r in rows if r.startswith("retracted:")
-    }
-    return [
-        r.startswith("retracted:") or (s, d, r) not in retracted for s, d, r in rows
-    ]
+def first_data_file(path: str) -> str | None:
+    """The first of :func:`data_files`, or None."""
+    return next(data_files(path), None)
 
 
 class SinkCatalog:
@@ -124,17 +107,15 @@ class SinkCatalog:
         partitioned ``batch=<id>/day=<d>``; writing a flat ``day=`` dir
         next to those would leave parquet files at two partition depths
         and the next read would fail with conflicting directory
-        structures (round-3 advice — hit when a batch run backfills the
-        purged order-sensitive days of a PARTIALLY batch-spanning
-        ingest, where other days' ``batch=`` dirs still hold data). Such
-        sinks are written under the reserved ``batch=-1`` backfill
-        partition instead, and any stale ``batch=N/day=D`` leftovers for
-        the days being written are dropped so the overwrite stays
-        whole-day idempotent. When the caller does not name the ``days``
-        they are derived from ``df`` (one distinct over the partition
-        column — day-count-sized); skipping the purge would leave the
-        old rows alongside the backfill and every later read would
-        silently double-count those days (round-4 advice)."""
+        structures (hit when a batch run writes new days into an output
+        the stream wrote). Such sinks are written under the reserved
+        ``batch=-1`` partition instead, and any stale ``batch=N/day=D``
+        leftovers for the days being written are dropped so the
+        overwrite stays whole-day idempotent. When the caller does not
+        name the ``days`` they are derived from ``df`` (one distinct
+        over the partition column — day-count-sized); skipping the drop
+        would leave the old rows alongside the new ones and every later
+        read would silently double-count those days."""
         if self.use_iceberg:
             df.writeTo(f"{self.base}.{sink}").overwritePartitions()
             return
@@ -399,105 +380,20 @@ class SinkCatalog:
     # load it as a normal parquet directory (``read("_lineage")``).
 
     def committed(self) -> set[tuple[str, str]]:
-        """(sink, day) pairs already committed by previous runs.
-
-        Rows whose run_id carries the ``retracted:`` prefix (see
-        :meth:`retract`) do NOT count — their data was deliberately
-        removed and a resume must rebuild them."""
+        """(sink, day) pairs already committed by previous runs."""
         if self.use_iceberg:
             tbl = f"{self.base}._lineage"
             if not self.spark.catalog.tableExists(tbl):
                 return set()
-            recs = (
-                self.spark.read.table(tbl)
-                .select("sink", "day", "run_id")
-                .distinct()
-                .collect()
-            )
-            rows = [(r.sink, r.day, str(r.run_id)) for r in recs]
-        else:
-            path = self._path("_lineage")
-            if not os.path.isdir(path):
-                return set()
-            import pyarrow.dataset as ds
-
-            t = ds.dataset(path, format="parquet").to_table(
-                columns=["sink", "day", "run_id"]
-            )
-            rows = list(
-                zip(
-                    t.column("sink").to_pylist(),
-                    t.column("day").to_pylist(),
-                    (str(r) for r in t.column("run_id").to_pylist()),
-                )
-            )
-        return {
-            (s, d)
-            for (s, d, r), live in zip(rows, _live_lineage(rows))
-            if live and not r.startswith("retracted:")
-        }
-
-    def retract(self, pairs: set[tuple[str, str]]) -> int:
-        """Mark (sink, day) lineage rows RETRACTED — the inverse of
-        :meth:`commit`, used when committed data is deliberately
-        removed (e.g. streaming_ingest purging an order-sensitive
-        sink's batch-spanning day). The whole commit log is rewritten
-        with matching rows' run_id prefixed ``retracted:`` (the row
-        stays — later runs still see the day was once written, but
-        ``committed()`` excludes it so a batch backfill rebuilds the
-        partition instead of silently skipping it; a NEW commit for
-        the pair simply re-commits). Crash window: new file written
-        before old files are deleted — leftover originals temporarily
-        resurrect the un-retracted row until the next retract/compact
-        pass; the data-side purge is idempotent either way. Returns
-        the number of rows retracted."""
-        if not pairs:
-            return 0
-        if self.use_iceberg:
-            raise NotImplementedError(
-                "Iceberg backend: retract lineage rows with a MERGE/"
-                f"UPDATE on {self.base}._lineage"
-            )
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.dataset as ds
-        import pyarrow.parquet as pq
-
+            recs = self.spark.read.table(tbl).select("sink", "day").distinct().collect()
+            return {(r.sink, r.day) for r in recs}
         path = self._path("_lineage")
         if not os.path.isdir(path):
-            return 0
-        old = [f for f in os.listdir(path) if f.endswith(".parquet")]
-        if not old:
-            return 0
-        t = ds.dataset(
-            [os.path.join(path, f) for f in old], format="parquet"
-        ).to_table()
-        sinks = t.column("sink").to_pylist()
-        days = t.column("day").to_pylist()
-        runs = t.column("run_id").to_pylist()
-        n_hit = 0
-        new_runs = []
-        for s, d, r in zip(sinks, days, runs):
-            r = str(r)
-            if (s, d) in pairs and not r.startswith("retracted:"):
-                new_runs.append("retracted:" + r)
-                n_hit += 1
-            else:
-                new_runs.append(r)
-        if n_hit:
-            t = t.set_column(
-                t.schema.get_field_index("run_id"), "run_id", pa.array(new_runs)
-            )
-            pq.write_table(
-                t, os.path.join(path, f"commit-retract-{uuid.uuid4().hex}.parquet")
-            )
-            for f in old:
-                try:
-                    os.remove(os.path.join(path, f))
-                except FileNotFoundError:
-                    pass
-        return n_hit
+            return set()
+        import pyarrow.dataset as ds
+
+        t = ds.dataset(path, format="parquet").to_table(columns=["sink", "day"])
+        return set(zip(t.column("sink").to_pylist(), t.column("day").to_pylist()))
 
     def commit(self, entries: list[tuple[str, str, int]], run_id: str) -> None:
         """Append lineage rows for freshly written (sink, day, rows)."""
@@ -560,18 +456,6 @@ class SinkCatalog:
             .group_by(["sink", "day", "rows", "run_id", "seq"])
             .aggregate([])
         )
-        # drop originals superseded by a retracted twin (the leftover of
-        # a crash inside retract()'s write-then-delete window) so the
-        # inconsistency heals permanently instead of relying on every
-        # reader to re-apply the supersede rule
-        runs = (str(r) for r in t.column("run_id").to_pylist())
-        live = _live_lineage(
-            list(zip(t.column("sink").to_pylist(), t.column("day").to_pylist(), runs))
-        )
-        if not all(live):
-            import pyarrow as pa
-
-            t = t.filter(pa.array(live))
         pq.write_table(
             t, os.path.join(path, f"commit-compact-{uuid.uuid4().hex}.parquet")
         )

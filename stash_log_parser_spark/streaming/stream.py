@@ -20,8 +20,6 @@ streaming results equal the batch results exactly.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -31,8 +29,7 @@ from ..functions.parse import CORPUS_SCHEMA, parse_corpus
 # Routed sinks whose per-day rows are NOT mergeable partials: the
 # concurrency gauge (a running count — per-batch maxima under-count when
 # a day splits) and the pairing summary (in|out partials don't pair
-# across batches). streaming_ingest refuses to commit these for a
-# file_day that spans micro-batches.
+# across batches). streaming_ingest recomputes these over whole days.
 ORDER_SENSITIVE_SINKS = {"concurrency_by_hour", "pairing_daily"}
 
 def stream_corpus(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -452,144 +449,78 @@ def streaming_ingest(
     checkpoint: str,
     sinks: dict | None = None,
     max_files_per_trigger: int | None = None,
-    backfill: bool = True,
 ) -> dict:
     """Route a STREAM of tokenized sequences into the same per-analysis
     sinks as plans/routing.run_pipeline, via foreachBatch.
 
     Each micro-batch runs the batch pipeline's own core: routing's
-    ``parse_stage`` builds the stage (cached for the batch instead of
-    written as the parsed_stage table) and ``fan_out`` runs every sink
-    on its own thread and scheduler pool. Writes land under
-    ``batch=<id>/day=<d>`` partitions
-    (SinkCatalog.write_batch_partitions): a replayed batch (crash after
-    data write, before the checkpoint commit) overwrites ONLY its own
-    partitions, giving exactly-once sink contents without a
-    transactional store. Sink rows are the same mergeable per-day
-    partials as the batch pipeline, so global rollups just also sum
-    over ``batch``. Lineage rows are committed per (sink, day) with
-    ``run_id = stream-batch-<id>``.
+    ``parse_stage`` builds the stage, which is written as the
+    ``parsed_stage`` table under ``batch=<id>/day=<d>`` partitions
+    (SinkCatalog.write_batch_partitions), and ``fan_out`` runs every
+    sink over column-pruned scans of that table on its own thread and
+    scheduler pool. The stage, like every sink, is lineage-committed per
+    day with ``run_id = stream-batch-<id>``.
 
-    Order-sensitivity guard: the additive sinks merge across arbitrary
-    batch boundaries, but the ORDER-SENSITIVE ones (concurrency gauge,
-    in|out pairing) are only exact when a file_day is fully contained
-    in one micro-batch — per-batch gauge maxima / pair partials do not
-    merge. This is enforced, not assumed: each batch checks the lineage
-    log for days already committed by an EARLIER batch (or a prior
-    batch-pipeline run into the same output); a spanning day's
-    order-sensitive partitions are PURGED from every batch dir, skipped
-    for this batch, recorded in the returned
-    ``order_sensitive_skipped`` map, and warned about — misaligned
-    ingest can no longer silently commit wrong gauge/pairing rows
-    (round-2 advice). Day-aligned layouts (the ingest-shard layout a
-    production table has) are unaffected. Cross-batch pairing is the
-    stateful operator's job (streaming_pair_requests).
+    The additive sinks read the batch's own stage partition and write
+    ``batch=<id>/day=<d>`` partials: the same mergeable per-day partials
+    as the batch pipeline, so global rollups just also sum over
+    ``batch``. The ORDER-SENSITIVE sinks (concurrency gauge, in|out
+    pairing) do not merge across batches, so they read every stage row
+    of the batch's days, from all batches so far, and overwrite whole
+    flat ``day=<d>`` partitions (SinkCatalog.write_partitions): a day
+    that spans micro-batches is recomputed by each batch that touches
+    it and is exact after the last one. The raw frame a sink gets is
+    the batch's own input rows.
+
+    A replayed batch (crash after data write, before the checkpoint
+    commit) overwrites exactly the partitions it wrote before, giving
+    exactly-once sink contents without a transactional store.
 
     Runs with trigger(availableNow) and blocks until the backlog is
     drained; returns {"batches": n, "rows": total,
-    "order_sensitive_skipped": {sink: [days]}}.
+    "lineage_compaction": {...}}, ``rows`` summed from the stage's
+    parquet footers.
     """
     from ..plans.routing import SINKS, fan_out, parse_stage
     from ..sources.catalog import SinkCatalog
 
     sinks = sinks or SINKS
     catalog = SinkCatalog(spark, output)
-    progress = {"batches": 0, "rows": 0, "order_sensitive_skipped": {}}
-    order_sensitive = ORDER_SENSITIVE_SINKS & set(sinks)
-
-    def _days_committed_by_other_runs(run_id: str) -> set[str]:
-        """Days any sink already committed under a DIFFERENT run id —
-        lineage-backed, so the check survives restarts (an in-memory
-        seen-set would forget pre-crash batches). Driver-side pyarrow,
-        like the lineage appends."""
-        import pyarrow.dataset as ds
-
-        path = catalog._path("_lineage")
-        if not os.path.isdir(path):
-            return set()
-        t = ds.dataset(path, format="parquet").to_table(columns=["day", "run_id"])
-        return {
-            d
-            for d, r in zip(t.column("day").to_pylist(), t.column("run_id").to_pylist())
-            if r != run_id
-        }
-
-    def _purge_order_sensitive(name: str, days: set[str]) -> None:
-        """Drop (batch=*, day∈days) partitions of an order-sensitive
-        sink — the partials committed before the day was known to span
-        batches are wrong and must not survive. The matching lineage
-        rows are RETRACTED too: without that, a later batch-pipeline
-        backfill into the same output would see the (sink, day) as
-        committed and permanently skip rebuilding the purged partition
-        (round-3 review). Retracted rows still count as 'seen' for the
-        spanning detection, so the guard stays armed."""
-        import shutil
-
-        root = catalog._path(name)
-        if not os.path.isdir(root):
-            return
-        for bdir in os.listdir(root):
-            if not bdir.startswith("batch="):
-                continue
-            for day in days:
-                shutil.rmtree(os.path.join(root, bdir, f"day={day}"), ignore_errors=True)
+    progress = {"batches": 0, "rows": 0}
 
     def handle(raw_batch: DataFrame, batch_id: int) -> None:
-        raw_batch.persist()
-        stage = parse_stage(raw_batch).persist()
-        try:
-            run_id = f"stream-batch-{batch_id}"
-            spanning: set[str] = set()
-            if order_sensitive:
-                batch_days = {r.day for r in stage.select("day").distinct().collect()}
-                spanning = batch_days & _days_committed_by_other_runs(run_id)
-                if spanning:
-                    import warnings
-
-                    warnings.warn(
-                        f"streaming_ingest batch {batch_id}: file_day(s) "
-                        f"{sorted(spanning)} span micro-batches; the "
-                        f"order-sensitive sinks {sorted(order_sensitive)} do not "
-                        "merge across batches — purging and skipping those days "
-                        "(additive sinks are unaffected)",
-                        stacklevel=2,
-                    )
+        run_id = f"stream-batch-{batch_id}"
+        catalog.write_batch_partitions(parse_stage(raw_batch), "parsed_stage", batch_id)
+        stage_rows = catalog.day_rows("parsed_stage", batch_id=batch_id)
+        days = sorted(stage_rows)
+        if days:
+            # partition inference reads ``day=YYYY-MM-DD`` back as a
+            # date; the cast gives the sinks parse_stage's string day
+            stage = catalog.read("parsed_stage").withColumn(
+                "day", F.col("day").cast("string")
+            )
+            own = stage.filter(F.col("batch") == batch_id).drop("batch")
+            whole_days = stage.filter(F.col("day").isin(days)).drop("batch")
 
             def _write(name, fn):
-                out_df = fn(stage, raw_batch)
-                if name in order_sensitive and spanning:
-                    out_df = out_df.filter(
-                        ~F.col("day").cast("string").isin(sorted(spanning))
-                    )
-                    _purge_order_sensitive(name, spanning)
-                    skipped = progress["order_sensitive_skipped"].setdefault(name, [])
-                    skipped[:] = sorted(set(skipped) | spanning)
-                catalog.write_batch_partitions(out_df, name, batch_id)
-                # every day this batch wrote; none when, e.g., every day
-                # was purged as spanning
+                if name in ORDER_SENSITIVE_SINKS:
+                    catalog.write_partitions(fn(whole_days, raw_batch), name, days=days)
+                    return catalog.day_rows(name, days)
+                catalog.write_batch_partitions(fn(own, raw_batch), name, batch_id)
                 return catalog.day_rows(name, batch_id=batch_id)
 
-            entries = [
-                (name, d, n)
-                for name, per_day in zip(sinks, fan_out(spark, sinks, _write))
-                for d, n in sorted(per_day.items())
-            ]
-            if spanning:
-                # retract AFTER the fan-out (it rewrites the whole commit
-                # log — concurrent retractions would clobber each
-                # other) and BEFORE this batch's commit: purged
-                # (sink, day) pairs must stop counting as committed so
-                # a batch backfill rebuilds them, while still counting
-                # as 'seen' for the spanning detection.
-                catalog.retract(
-                    {(n, d) for n in order_sensitive for d in spanning}
-                )
-            catalog.commit(entries, run_id)
-            progress["batches"] += 1
-            progress["rows"] += raw_batch.count()
-        finally:
-            stage.unpersist()
-            raw_batch.unpersist()
+            per_sink = dict(zip(sinks, fan_out(spark, sinks, _write)))
+            per_sink["parsed_stage"] = stage_rows
+            catalog.commit(
+                [
+                    (name, d, n)
+                    for name, per_day in per_sink.items()
+                    for d, n in sorted(per_day.items())
+                ],
+                run_id,
+            )
+        progress["batches"] += 1
+        progress["rows"] += sum(stage_rows.values())
 
     stream = spark.readStream.schema(CORPUS_SCHEMA)
     if max_files_per_trigger:
@@ -606,24 +537,6 @@ def streaming_ingest(
     # a long-lived stream appends lineage every batch
     if not catalog.use_iceberg:
         progress["lineage_compaction"] = catalog.compact_lineage(max_files=512)
-    # Auto-backfill (round-3 verdict item): the guard purged + RETRACTED
-    # every order-sensitive (sink, day) that spanned micro-batches, so a
-    # batch-pipeline pass over the same input sees exactly those pairs as
-    # pending and rebuilds them with whole-day (order-exact) semantics.
-    # Scoped to the affected sinks — additive sinks stay committed and
-    # are skipped by lineage. After this, a misaligned ingest ends
-    # sink-for-sink equal to the batch pipeline on ALL sinks, not just
-    # the additive ones. Writes into the streaming batch= layout nest
-    # under the reserved batch=-1 partition (SinkCatalog.write_partitions).
-    if backfill and progress["order_sensitive_skipped"]:
-        from ..plans.routing import run_pipeline
-
-        affected = {
-            n: sinks[n] for n in sorted(progress["order_sensitive_skipped"])
-        }
-        progress["backfill"] = run_pipeline(
-            spark, input_dir, output, run_id="stream-backfill", sinks=affected
-        )
     return progress
 
 

@@ -298,6 +298,13 @@ def test_corpus_missing_a_contract_column_fails_naming_it(spark, tmp_path):
     pq.write_table(_one_line_corpus(), str(inp / "part-1.parquet"))
     with pytest.raises(ValueError, match="n_tok"):
         run_pipeline(spark, str(inp), str(tmp_path / "sinks"))
+    # a LATER file without the column is caught too, named with it
+    later = tmp_path / "later"
+    later.mkdir()
+    pq.write_table(_one_line_corpus(), str(later / "part-0.parquet"))
+    pq.write_table(_one_line_corpus().drop(["n_tok"]), str(later / "part-1.parquet"))
+    with pytest.raises(ValueError, match=r"part-1\.parquet lacks .* n_tok"):
+        run_pipeline(spark, str(later), str(tmp_path / "sinks_later"))
 
 
 def test_corpus_with_int64_tokens_fails_loudly(spark, tmp_path):
@@ -593,42 +600,6 @@ def test_compaction_recovery_is_partition_col_generic(spark, tmp_path):
     os.rename(part_dir, aside)
     assert sorted(r.id for r in cat.read("h").collect()) == truth  # plain read repairs
     assert os.path.isdir(part_dir) and not os.path.exists(aside)
-
-
-def test_retract_crash_window_is_superseded_not_permanent(spark, tmp_path):
-    """Round-3 advice: retract() writes the rewritten log BEFORE deleting
-    the old files. If it crashes in between, the surviving original row
-    and its 'retracted:'-run_id twin coexist — committed() must treat the
-    retraction as superseding the original (else the purged day counts as
-    committed and a backfill silently skips it forever), and
-    compact_lineage must drop the stale original so the log heals."""
-    import os
-    import shutil
-
-    out = str(tmp_path / "sinks")
-    cat = SinkCatalog(spark, out)
-    cat.commit([("s", "2012-09-08", 10), ("s", "2012-09-09", 11)], run_id="r1")
-    lineage = f"{out}/_lineage"
-    pre = [f for f in os.listdir(lineage) if f.endswith(".parquet")]
-    # snapshot the pre-retract files, retract, then put the old files
-    # back — exactly the state a crash between write and delete leaves
-    for f in pre:
-        shutil.copy(os.path.join(lineage, f), os.path.join(lineage, f) + ".bak")
-    assert cat.retract({("s", "2012-09-08")}) == 1
-    for f in pre:
-        os.rename(os.path.join(lineage, f) + ".bak", os.path.join(lineage, f))
-    # both the original and the retracted twin are now on disk...
-    runs = sorted(r.run_id for r in cat.read("_lineage").collect())
-    assert "r1" in runs and "retracted:r1" in runs
-    # ...but the retraction supersedes: the day is NOT committed
-    assert cat.committed() == {("s", "2012-09-09")}
-    # and compaction permanently removes the stale original
-    rep = cat.compact_lineage(max_files=0)
-    assert rep["files_after"] == 1
-    rows = [(r.sink, r.day, r.run_id) for r in cat.read("_lineage").collect()]
-    assert ("s", "2012-09-08", "r1") not in rows
-    assert ("s", "2012-09-08", "retracted:r1") in rows  # guard stays armed
-    assert cat.committed() == {("s", "2012-09-09")}
 
 
 def test_lineage_self_compaction(spark, tmp_path):

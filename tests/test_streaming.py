@@ -298,31 +298,24 @@ def test_streaming_ingest_replay_is_idempotent(spark, day_aligned_dir, tmp_path)
     assert after == before  # batch column included: replay overwrote in place
 
 
-def test_streaming_ingest_guards_order_sensitive_sinks(spark, day_aligned_dir, tmp_path):
-    """Misaligned layout (each day split across micro-batches): the
-    additive sinks still equal the batch pipeline, while the
-    order-sensitive gauge/pairing partitions are purged + recorded —
-    never silently committed wrong (round-2 advice)."""
-    import os
-    import warnings as W
-
-    from stash_log_parser_spark.plans.routing import run_pipeline
-    from stash_log_parser_spark.streaming.stream import (
-        ORDER_SENSITIVE_SINKS,
-        streaming_ingest,
-    )
-
-    # two files per day → every day spans two single-file micro-batches
-    src = str(tmp_path / "misaligned")
-    df = spark.read.parquet(day_aligned_dir)
-    days = sorted(
+def _file_days(df):
+    return sorted(
         r.d
         for r in df.select(
             F.regexp_extract("source", r"(\d{4}-\d{2}-\d{2})", 1).alias("d")
         ).distinct().collect()
     )
-    for day in days:
+
+
+def _write_split_days(df, src, split_days):
+    """Write ``df`` one parquet file per day in day order, except that
+    each of ``split_days`` goes out as two hash halves: with
+    maxFilesPerTrigger=1 such a day spans two micro-batches."""
+    for day in _file_days(df):
         part = df.filter(F.col("source").contains(day))
+        if day not in split_days:
+            part.coalesce(1).write.mode("append").parquet(src)
+            continue
         for half in (0, 1):
             (
                 part.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == half)
@@ -330,66 +323,32 @@ def test_streaming_ingest_guards_order_sensitive_sinks(spark, day_aligned_dir, t
                 .write.mode("append")
                 .parquet(src)
             )
-    sout = str(tmp_path / "sinks")
-    with W.catch_warnings(record=True) as caught:
-        W.simplefilter("always")
-        prog = streaming_ingest(
-            spark, src, sout, str(tmp_path / "cp"), max_files_per_trigger=1,
-            backfill=False,
-        )
-    assert any("span micro-batches" in str(w.message) for w in caught)
-    # every day hit the guard in at least one sink
-    skipped = prog["order_sensitive_skipped"]
-    assert set(skipped) == ORDER_SENSITIVE_SINKS
-    assert all(set(v) == set(days) for v in skipped.values())
-    # order-sensitive sinks carry NO day partitions for spanning days
-    for name in ORDER_SENSITIVE_SINKS:
-        root = os.path.join(sout, name)
-        leftover = [
-            d
-            for b, ds_, _ in os.walk(root)
-            for d in ds_
-            if d.startswith("day=") and d.split("=", 1)[1] in days
-        ] if os.path.isdir(root) else []
-        assert leftover == [], (name, leftover)
-    # additive sinks still equal the batch pipeline — after the rollup
-    # their contract prescribes (sum the per-batch partials; the raw
-    # request_durations rows union directly)
-    bout = str(tmp_path / "batch_sinks")
-    run_pipeline(spark, day_aligned_dir, bout, run_id="twin")
-
-    def rollup(root, name):
-        df = spark.read.parquet(f"{root}/{name}")
-        if "batch" in df.columns:
-            df = df.drop("batch")
-        if name == "request_durations":
-            return _sink_rows(spark, root, name)
-        keys = [c for c, t in df.dtypes if t == "string" or c in ("day",)]
-        nums = [c for c in df.columns if c not in keys]
-        agg = df.groupBy(*keys).agg(
-            *[F.sum(c).cast("long").alias(c) for c in nums]
-        )
-        return sorted(
-            tuple(str(v) for v in r)
-            for r in agg.select(*sorted(agg.columns)).collect()
-        )
-
-    for name in ("metrics", "protocol_counts_daily", "repository_stats_daily",
-                 "git_operations", "protocol_by_hour", "request_durations"):
-        assert rollup(sout, name) == rollup(bout, name), name
 
 
-def test_auto_backfill_on_partially_spanning_days(spark, day_aligned_dir, tmp_path):
-    """Partial mix (round-3 advice + verdict item): ONE day spans two
-    micro-batches while the other days are batch-aligned. The guard
-    purges only the spanning day; the surviving days keep their data
-    under batch=N/day=D. The automatic post-drain backfill must then
-    (a) write the purged day under the streaming layout's reserved
-    batch=-1 partition — a flat day= dir next to batch= dirs would make
-    every subsequent read fail with conflicting partition depths — and
-    (b) leave EVERY sink, order-sensitive included, sink-for-sink equal
-    to the uninterrupted batch pipeline after the per-batch rollup."""
+def _rollup(spark, root, name):
+    """A sink's rows with the per-batch partials of an additive sink
+    summed over ``batch`` (a no-op for a flat batch-pipeline sink)."""
+    df = spark.read.parquet(f"{root}/{name}")
+    if "batch" in df.columns:
+        df = df.drop("batch")
+    keys = [
+        c for c, t in df.dtypes if t == "string" or c in ("day", "hour", "bucket")
+    ]
+    nums = [c for c in df.columns if c not in keys]
+    agg = df.groupBy(*keys).agg(*[F.sum(c).cast("long").alias(c) for c in nums])
+    return sorted(
+        tuple(str(v) for v in r) for r in agg.select(*sorted(agg.columns)).collect()
+    )
+
+
+def _assert_misaligned_ingest_equals_batch(spark, src, batch_input, tmp_path, n_batches):
+    """Stream ``src`` one file per micro-batch and check the whole-day
+    rule: every sink equals run_pipeline's over ``batch_input``, the
+    order-sensitive ones exactly and as flat ``day=`` partitions; no
+    warning; the stage parsed each row once, committed only by
+    stream batches; a later batch run into the root has nothing to do."""
     import os
+    import warnings as W
 
     from stash_log_parser_spark.plans.routing import SINKS, run_pipeline
     from stash_log_parser_spark.sources.catalog import SinkCatalog
@@ -398,140 +357,69 @@ def test_auto_backfill_on_partially_spanning_days(spark, day_aligned_dir, tmp_pa
         streaming_ingest,
     )
 
-    df = spark.read.parquet(day_aligned_dir)
-    days = sorted(
-        r.d
-        for r in df.select(
-            F.regexp_extract("source", r"(\d{4}-\d{2}-\d{2})", 1).alias("d")
-        ).distinct().collect()
-    )
-    split_day, aligned_days = days[0], days[1:]
-    src = str(tmp_path / "partial")
-    part = df.filter(F.col("source").contains(split_day))
-    for half in (0, 1):  # the split day spans two single-file batches
-        (
-            part.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == half)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-    for day in aligned_days:  # the others stay batch-aligned
-        df.filter(F.col("source").contains(day)).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
     sout = str(tmp_path / "sinks")
-    prog = streaming_ingest(
-        spark, src, sout, str(tmp_path / "cp"), max_files_per_trigger=1
-    )
-    assert prog["order_sensitive_skipped"] == {
-        n: [split_day] for n in sorted(ORDER_SENSITIVE_SINKS)
-    }
-    assert prog["backfill"]["sinks"].keys() == ORDER_SENSITIVE_SINKS
-    # the backfill landed under batch=-1, next to the surviving batch dirs
-    for name in ORDER_SENSITIVE_SINKS:
-        root = os.path.join(sout, name)
-        assert os.path.isdir(os.path.join(root, "batch=-1", f"day={split_day}"))
-        assert any(
-            b.startswith("batch=") and b != "batch=-1" for b in os.listdir(root)
+    with W.catch_warnings(record=True) as caught:
+        W.simplefilter("always")
+        prog = streaming_ingest(
+            spark, src, sout, str(tmp_path / "cp"), max_files_per_trigger=1
         )
-    # lineage: the purged day is committed again (by the backfill run)
-    committed = SinkCatalog(spark, sout).committed()
-    for n in ORDER_SENSITIVE_SINKS:
-        assert (n, split_day) in committed
-    # footer row counts sum each day over batch=N and the batch=-1 backfill
-    for name in SINKS:
-        want = {
-            r.day: r["count"]
-            for r in spark.read.parquet(f"{sout}/{name}")
-            .groupBy(F.col("day").cast("string").alias("day"))
-            .count()
-            .collect()
-        }
-        assert SinkCatalog(spark, sout).day_rows(name) == want, name
+    assert [str(w.message) for w in caught] == []
+    assert prog["batches"] == n_batches
 
     bout = str(tmp_path / "batch_twin")
-    run_pipeline(spark, day_aligned_dir, bout, run_id="twin")
+    run_pipeline(spark, batch_input, bout, run_id="twin")
     for name in SINKS:
-        if name in (
-            "metrics", "protocol_counts_daily", "repository_stats_daily",
-            "git_operations", "protocol_by_hour", "duration_hist_daily",
-        ):
-            # additive partials: roll up across batch before comparing
-            sdf = spark.read.parquet(f"{sout}/{name}").drop("batch")
-            keys = [
-                c for c, t in sdf.dtypes
-                if t == "string" or c in ("day", "hour", "bucket")
-            ]
-            nums = [c for c in sdf.columns if c not in keys]
-            agg = sdf.groupBy(*keys).agg(
-                *[F.sum(c).cast("long").alias(c) for c in nums]
-            )
-            got = sorted(
-                tuple(str(v) for v in r)
-                for r in agg.select(*sorted(agg.columns)).collect()
-            )
-            bdf = spark.read.parquet(f"{bout}/{name}")
-            bagg = bdf.groupBy(*keys).agg(
-                *[F.sum(c).cast("long").alias(c) for c in nums]
-            )
-            want = sorted(
-                tuple(str(v) for v in r)
-                for r in bagg.select(*sorted(bagg.columns)).collect()
-            )
+        if name in ORDER_SENSITIVE_SINKS:
+            root = os.path.join(sout, name)
+            assert all(d.startswith("day=") for d in os.listdir(root)
+                       if not d.startswith(("_", "."))), name
+            assert _sink_rows(spark, sout, name) == _sink_rows(spark, bout, name), name
+        elif name == "request_durations":
+            # raw rows: the per-batch partials union directly
+            assert _sink_rows(spark, sout, name) == _sink_rows(spark, bout, name), name
         else:
-            # request_durations rows union directly; the order-sensitive
-            # sinks hold whole-day rows (one writer per day: a single
-            # batch or the backfill) so they compare exactly too
-            got = _sink_rows(spark, sout, name)
-            want = _sink_rows(spark, bout, name)
-        assert got == want, name
+            assert _rollup(spark, sout, name) == _rollup(spark, bout, name), name
+
+    cat = SinkCatalog(spark, sout)
+    lineage = cat.read("_lineage").filter(F.col("sink") == "parsed_stage")
+    runs = {r.run_id for r in lineage.select("run_id").distinct().collect()}
+    assert runs and all(r.startswith("stream-batch-") for r in runs), runs
+    n_input = spark.read.parquet(src).count()
+    assert sum(cat.day_rows("parsed_stage").values()) == n_input
+    assert prog["rows"] == n_input
+
+    s = run_pipeline(spark, src, sout, run_id="after")
+    assert s["days_parsed"] == 0
+    for name in SINKS:
+        assert s["sinks"].get(name, {"days_written": 0})["days_written"] == 0, name
 
 
-def test_purged_days_are_retracted_and_backfillable(spark, day_aligned_dir, tmp_path):
-    """After the guard purges an order-sensitive sink's spanning days,
-    the lineage rows are RETRACTED: committed() no longer claims them,
-    so a batch-pipeline backfill into the same output rebuilds the
-    partitions to exactly the batch answer (round-3 review: without
-    retraction the backfill silently skipped the purged days forever).
-    The detection marker survives retraction (runs stay guarded)."""
-    from stash_log_parser_spark.plans.routing import run_pipeline
-    from stash_log_parser_spark.sources.catalog import SinkCatalog
-    from stash_log_parser_spark.streaming.stream import (
-        ORDER_SENSITIVE_SINKS,
-        streaming_ingest,
-    )
-
+def test_streaming_ingest_recomputes_days_split_over_every_batch(
+    spark, day_aligned_dir, tmp_path
+):
+    """Misaligned layout: every day is split over two single-file
+    micro-batches. The second batch of each day recomputes the
+    order-sensitive sinks over the whole day, so every sink ends equal
+    to the batch pipeline's."""
     src = str(tmp_path / "misaligned")
     df = spark.read.parquet(day_aligned_dir)
-    for half in (0, 1):
-        (
-            df.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == half)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-    sout = str(tmp_path / "sinks")
-    streaming_ingest(
-        spark, src, sout, str(tmp_path / "cp"), max_files_per_trigger=1,
-        backfill=False,
+    days = _file_days(df)
+    _write_split_days(df, src, split_days=set(days))
+    _assert_misaligned_ingest_equals_batch(
+        spark, src, day_aligned_dir, tmp_path, n_batches=2 * len(days)
     )
-    cat = SinkCatalog(spark, sout)
-    committed = cat.committed()
-    assert not any(s in ORDER_SENSITIVE_SINKS for s, _ in committed)
-    assert any(s == "metrics" for s, _ in committed)  # additive intact
 
-    # batch backfill rebuilds ONLY the retracted partitions...
-    s = run_pipeline(spark, day_aligned_dir, sout, run_id="backfill")
-    assert s["sinks"]["metrics"]["days_written"] == 0  # still committed
-    for name in ORDER_SENSITIVE_SINKS:
-        assert s["sinks"][name]["days_written"] == 3
 
-    # ...to exactly the uninterrupted batch pipeline's answer
-    bout = str(tmp_path / "batch_twin")
-    run_pipeline(spark, day_aligned_dir, bout, run_id="twin")
-    for name in ORDER_SENSITIVE_SINKS:
-        assert _sink_rows(spark, sout, name) == _sink_rows(spark, bout, name), name
+def test_streaming_ingest_recomputes_one_split_day(spark, day_aligned_dir, tmp_path):
+    """Partial mix: ONE day spans two micro-batches while the other days
+    are batch-aligned; every sink still equals the batch pipeline's."""
+    src = str(tmp_path / "partial")
+    df = spark.read.parquet(day_aligned_dir)
+    days = _file_days(df)
+    _write_split_days(df, src, split_days={days[0]})
+    _assert_misaligned_ingest_equals_batch(
+        spark, src, day_aligned_dir, tmp_path, n_batches=len(days) + 1
+    )
 
 
 def test_streaming_exact_dedup_suppresses_across_batches(spark, tmp_path):
