@@ -33,12 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stash_log_parser_spark.operators.textstats import round6
 from stash_log_parser_spark.session import materialize
-
-
-def _q6(col):
-    """Quantize to 1e-6 — identical to the round6 oracle discipline."""
-    return F.floor(col * 1000000.0 + F.lit(0.5)) / 1000000.0
 
 
 def undirect(edges: DataFrame, src: str = "repo_a", dst: str = "repo_b") -> DataFrame:
@@ -84,7 +80,7 @@ def pagerank(
 
     base = (1.0 - damping) / n_nodes
     ranks = nodes.select(
-        "node", _q6(F.lit(1.0) / F.lit(float(n_nodes))).alias("rank")
+        "node", round6(F.lit(1.0) / F.lit(float(n_nodes))).alias("rank")
     )
     for i in range(iters):
         contrib = (
@@ -98,7 +94,7 @@ def pagerank(
             .agg(F.sum("w").alias("s"))
         )
         ranks = contrib.select(
-            "node", _q6(F.lit(base) + F.lit(damping) * F.col("s")).alias("rank")
+            "node", round6(F.lit(base) + F.lit(damping) * F.col("s")).alias("rank")
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iters:
             ranks = materialize(ranks)
@@ -339,12 +335,12 @@ def hits(
         raw_a = edges.join(hubs, "hub").groupBy("auth").agg(F.sum("h").alias("ra"))
         tot_a = raw_a.agg(F.sum("ra").alias("ta"))
         auths = raw_a.crossJoin(F.broadcast(tot_a)).select(
-            "auth", _q6(F.col("ra") / F.col("ta")).alias("a")
+            "auth", round6(F.col("ra") / F.col("ta")).alias("a")
         )
         raw_h = edges.join(auths, "auth").groupBy("hub").agg(F.sum("a").alias("rh"))
         tot_h = raw_h.agg(F.sum("rh").alias("th"))
         hubs = raw_h.crossJoin(F.broadcast(tot_h)).select(
-            "hub", _q6(F.col("rh") / F.col("th")).alias("h")
+            "hub", round6(F.col("rh") / F.col("th")).alias("h")
         )
     out = auths.join(auth_deg, "auth").select(
         F.col("auth").alias(auth_col),
@@ -397,7 +393,7 @@ def adamic_adar(
         )
         .agg(
             F.count("*").cast("long").alias("common_users"),
-            _q6(F.sum(F.col("a.w"))).alias("aa_score"),
+            round6(F.sum(F.col("a.w"))).alias("aa_score"),
         )
     )
     return pairs.orderBy(

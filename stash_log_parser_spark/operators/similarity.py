@@ -21,6 +21,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from stash_log_parser_spark.operators.textstats import round6
 from stash_log_parser_spark.session import materialize
 
 
@@ -589,15 +590,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def _q6(col: Column) -> Column:
-    """floor(x·1e6 + 0.5)/1e6 — the repo's cross-engine-exact 6-decimal
-    quantization (see textstats.round6). For negative inputs the formula
-    rounds halves toward +∞; that is still ENGINE-CONSISTENT (both
-    engines evaluate the identical IEEE ops), which is all the oracle
-    compare needs."""
-    return F.floor(col * 1e6 + F.lit(0.5)) / 1e6
-
-
 def label_centroids(
     emb: DataFrame, label_col: str = "label", vec_col: str = "embedding"
 ) -> DataFrame:
@@ -616,7 +608,7 @@ def label_centroids(
     ex = emb.select(label_col, F.posexplode(vec_col).alias("dim", "v"))
     return ex.groupBy(label_col, "dim").agg(
         F.count("*").alias("n_vecs"),
-        _q6(F.avg("v")).alias("centroid"),
+        round6(F.avg("v")).alias("centroid"),
     )
 
 
@@ -654,7 +646,7 @@ def centroid_similarity(
         .select(
             "label_a",
             "label_b",
-            _q6(F.col("dot") / (F.col("na") * F.col("nb"))).alias("cosine"),
+            round6(F.col("dot") / (F.col("na") * F.col("nb"))).alias("cosine"),
         )
     )
 
@@ -814,7 +806,7 @@ def mmr_topk(
     |queries|·pool_k rows — the greedy rounds are UNROLLED DataFrame
     ops over that tiny relation (pairwise sims: one self-join), so no
     Python, no driver loop over data. Every score is quantized with
-    the JVM-side F.round/_q6 discipline and the per-step argmax
+    the JVM-side F.round/round6 discipline and the per-step argmax
     tie-breaks on (score desc, id asc), so the SQL oracle unrolls the
     identical rounds (k-means trajectory discipline). μ is computed as
     the IEEE value of (1.0 − λ) on BOTH engines — never a Python
@@ -852,7 +844,7 @@ def mmr_topk(
     )
     s1 = (
         cands.select(
-            query_id_col, id_col, _q6(lam_c * F.col("cosine")).alias("score")
+            query_id_col, id_col, round6(lam_c * F.col("cosine")).alias("score")
         )
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -878,7 +870,7 @@ def mmr_topk(
             pen.select(
                 query_id_col,
                 id_col,
-                _q6(lam_c * F.col("cosine") - mu_c * F.col("_pen")).alias("score"),
+                round6(lam_c * F.col("cosine") - mu_c * F.col("_pen")).alias("score"),
             )
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
@@ -937,7 +929,7 @@ def rrf_fusion(
         id_col,
         "rank_full",
         "rank_trunc",
-        _q6(contrib("rank_full") + contrib("rank_trunc")).alias("rrf_score"),
+        round6(contrib("rank_full") + contrib("rank_trunc")).alias("rrf_score"),
     )
     w = Window.partitionBy(query_id_col).orderBy(
         F.desc("rrf_score"), F.asc(id_col)
@@ -977,8 +969,6 @@ def ivf_nprobe_sweep(
     same round-6 cosines the oracled ivf_topk/knn_bruteforce pair
     already pins."""
     from pyspark.sql import Window, types as T
-
-    from stash_log_parser_spark.operators.textstats import round6
 
     qrows = queries.select(query_id_col, query_vec_col).collect()
     cents = (
@@ -1139,8 +1129,6 @@ def knn_outliers(
     break ties by id, so top-k is a total order."""
     from pyspark.sql import Window
 
-    from stash_log_parser_spark.operators.textstats import round6
-
     e = embeddings.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
     )
@@ -1210,7 +1198,7 @@ def cosine_lag_histogram(
     pairs = left.join(
         right, left["id_a"] + left["lag"] == right["id_b"], "inner"
     )
-    cos6 = _q6(cosine_expr(F.col("va"), F.col("vb")))
+    cos6 = round6(cosine_expr(F.col("va"), F.col("vb")))
     return (
         pairs.select("lag", F.floor(cos6 * 10).cast("int").alias("bucket"))
         .groupBy("lag", "bucket")
@@ -1430,7 +1418,7 @@ def pq_codebook_stats(
             F.col("s").cast("int").alias("s"),
             F.col("code").cast("int").alias("code"),
             "n_assigned",
-            _q6(
+            round6(
                 F.col("s_e6").cast("double")
                 / (F.col("n_assigned") * F.lit(1000000.0))
             ).alias("mean_dist"),
@@ -1529,8 +1517,6 @@ def pq_adc_recall(
         F.col("rk") <= topk
     ).select("query_id", "vec_id")
 
-    from stash_log_parser_spark.operators.textstats import round6
-
     hits = pq_top.withColumn("_hit", F.lit(1))
     return (
         exact_top.join(hits, ["query_id", "vec_id"], "left")
@@ -1579,8 +1565,6 @@ def twonn_intrinsic_dim(
     vectors; the all-pairs block is sample_n², driver-bounded, and
     the corpus itself is scanned exactly once."""
     from pyspark.sql import Window
-
-    from stash_log_parser_spark.operators.textstats import round6
 
     ids = (
         embeddings.select(
@@ -1673,8 +1657,6 @@ def kcenter_coreset(
     Returns (sel_round, vec_id, min_dist) — min_dist is the point's
     distance-to-selected-set at the moment it was chosen (NULL for
     the seed), i.e. the running covering radius."""
-    from stash_log_parser_spark.operators.textstats import round6
-
     spark = embeddings.sparkSession
     base = embeddings.select(
         F.col(id_col).alias("vid"),
@@ -1748,8 +1730,6 @@ def silhouette_by_cell(
     cells-sized hash agg — the corpus is scanned, never shuffled; only
     (cell, s_micro) partials move. Returns per-cell rows plus an
     overall cell = -1 row."""
-    from stash_log_parser_spark.operators.textstats import round6
-
     C = kmeans_centroids(
         embeddings, n_cells=n_cells, iters=iters, id_col=id_col, vec_col=vec_col
     )
@@ -1908,8 +1888,8 @@ def class_separability(
     lab_rows = per_l.select(
         F.col("label").cast("long").alias("label"),
         "n_vecs",
-        _q6(F.col("wss_l") / F.col("n_vecs")).alias("within_var"),
-        _q6(F.col("dist2")).alias("between_dist2"),
+        round6(F.col("wss_l") / F.col("n_vecs")).alias("within_var"),
+        round6(F.col("dist2")).alias("between_dist2"),
         F.lit(None).cast("double").alias("fisher_ratio"),
     )
     tot = per_l.agg(
@@ -1921,9 +1901,9 @@ def class_separability(
     ).select(
         F.lit(-1).cast("long").alias("label"),
         "n_vecs",
-        _q6(F.col("w")).alias("within_var"),
-        _q6(F.col("b")).alias("between_dist2"),
-        F.when(F.col("w") > 0, _q6(F.col("b") / F.col("w"))).alias(
+        round6(F.col("w")).alias("within_var"),
+        round6(F.col("b")).alias("between_dist2"),
+        F.when(F.col("w") > 0, round6(F.col("b") / F.col("w"))).alias(
             "fisher_ratio"
         ),
     )
@@ -2164,8 +2144,6 @@ def _mutual_from_scored(scored: DataFrame, k_margin: int) -> DataFrame:
     group-limit prunes exactly the rows the old filtered groupBy
     discarded."""
     from pyspark.sql import Window
-
-    from .textstats import round6
 
     wf = Window.partitionBy("a_id").orderBy(F.desc("c6"), F.asc("b_id"))
     wb = Window.partitionBy("b_id").orderBy(F.desc("c6"), F.asc("a_id"))

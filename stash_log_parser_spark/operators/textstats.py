@@ -50,7 +50,9 @@ def round6(col: Column) -> Column:
     boundary; doc 1210 flipped 0.876262 vs 0.876263). Here every step
     (multiply, add, floor, divide) is one correctly-rounded IEEE op
     both engines compute identically — the same device as the repo's
-    integer-cents policy. Non-negative inputs only."""
+    integer-cents policy. For negative inputs (cosines, MMR scores) the
+    formula rounds halves toward +∞; that is still engine-consistent,
+    which is all the oracle compare needs."""
     return F.floor(col * 1e6 + F.lit(0.5)) / 1e6
 
 

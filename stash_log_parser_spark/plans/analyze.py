@@ -15,6 +15,11 @@ stdout by default.
 ``python -m stash_log_parser_spark.plans.analyze`` is the same command:
 the package's ``__main__`` runs this module's :func:`main`.
 
+Raw logs are read by ``sources.logfiles.read_log_files`` alone: log
+files outside ``--since``/``--until`` are skipped before the scan, as
+the reference's File.hs ``createPredicate`` does. The ``stashlog`` data
+source is only the ``--export-logs`` writer.
+
 The big-corpus path remains plans/job.py (parse once → all sinks); this
 CLI recomputes one analysis per invocation exactly like the reference —
 convenient for ad-hoc queries, quadratically wasteful at 10^12 rows.
@@ -64,53 +69,21 @@ def _is_parquet(path: str) -> bool:
     )
 
 
-def _load_raw_stashlog(spark, inputs: list[str], since, until) -> DataFrame:
-    """Raw lines through the custom Python Data Source
-    (``format("stashlog")``, sources/datasource.py): same
-    (doc_id, line, source, file_day) rows as the text front door, but
-    the date-range predicate reaches ``pushFilters`` and prunes whole
-    FILES before partition planning instead of filtering rows."""
+def _load_corpus(spark, path: str, since, until) -> DataFrame:
+    """Tokenized parquet → parse_corpus, rows filtered by filename date."""
     from pyspark.sql import functions as F
 
-    from ..sources.datasource import StashLogDataSource
+    from ..functions.parse import parse_corpus, read_corpus
+    from ..sources.logfiles import FILENAME_DATE_RE
 
-    if len(inputs) != 1:
-        raise ValueError("--via stashlog takes exactly one log directory")
-    spark.dataSource.register(StashLogDataSource)
-    df = spark.read.format("stashlog").option("path", inputs[0]).load()
+    raw = read_corpus(spark, path).withColumn(
+        "file_day", F.regexp_extract("source", FILENAME_DATE_RE, 1)
+    )
     if since:
-        df = df.filter(F.col("file_day") >= str(since))
+        raw = raw.filter(F.col("file_day") >= str(since))
     if until:
-        df = df.filter(F.col("file_day") <= str(until))
-    return df
-
-
-def _load_parsed(spark, inputs: list[str], since, until, via: str = "auto") -> DataFrame:
-    """Raw log files → parse_lines; tokenized parquet → parse_corpus;
-    ``via='stashlog'`` routes the raw path through the data source."""
-    if via == "stashlog":
-        from ..functions.parse import parse_lines
-
-        return parse_lines(_load_raw_stashlog(spark, inputs, since, until)).drop(
-            "line"
-        )
-    if len(inputs) == 1 and _is_parquet(inputs[0]):
-        from pyspark.sql import functions as F
-
-        from ..functions.parse import parse_corpus, read_corpus
-        from ..sources.logfiles import FILENAME_DATE_RE
-
-        raw = read_corpus(spark, inputs[0]).withColumn(
-            "file_day", F.regexp_extract("source", FILENAME_DATE_RE, 1)
-        )
-        if since:
-            raw = raw.filter(F.col("file_day") >= str(since))
-        if until:
-            raw = raw.filter(F.col("file_day") <= str(until))
-        return parse_corpus(raw)
-    from ..sources.logfiles import parse_log_files
-
-    return parse_log_files(spark, inputs, since, until)
+        raw = raw.filter(F.col("file_day") <= str(until))
+    return parse_corpus(raw)
 
 
 def _emit(df: DataFrame, fmt: str, out_path: str | None = None, sep: str = "|") -> int:
@@ -154,11 +127,6 @@ def main(argv: list[str] | None = None) -> int:
                          "possible '--top N' CLI flag, SURVEY §3.6 O2; applied "
                          "after the mode's own ordering, so e.g. "
                          "repositoryStats --top 10 is the top-10 repos)")
-    ap.add_argument("--via", default="auto", choices=["auto", "text", "stashlog"],
-                    help="raw-log front door: 'text' = spark.read.text glob; "
-                         "'stashlog' = the custom Python Data Source (one log "
-                         "dir; date range prunes files at planning time); "
-                         "'auto' = text, or parse_corpus for a parquet input")
     ap.add_argument("--export-logs", default=None, metavar="DIR",
                     help="also re-emit the date-filtered RAW lines as a "
                          "day-sharded log archive via the stashlog staged-"
@@ -176,28 +144,29 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("--format table renders to stdout and cannot honor "
                  "--output; use --format pipe or csv for file sinks")
 
+    corpus_input = len(args.inputs) == 1 and _is_parquet(args.inputs[0])
+    if corpus_input and args.export_logs is not None:
+        ap.error("--export-logs re-emits RAW lines; raw-log inputs only")
+
     spark = build_session(app_name=f"analyze-{args.mode}", master=args.master)
-    if args.export_logs is not None:
-        if len(args.inputs) == 1 and _is_parquet(args.inputs[0]):
-            ap.error("--export-logs re-emits RAW lines; raw-log inputs only")
-        from ..sources.datasource import StashLogDataSource
+    if corpus_input:
+        parsed = _load_corpus(spark, args.inputs[0], args.since, args.until)
+    else:
+        from ..functions.parse import parse_lines
+        from ..sources.logfiles import read_log_files
 
-        spark.dataSource.register(StashLogDataSource)
-        if args.via == "stashlog":
-            raw = _load_raw_stashlog(spark, args.inputs, args.since, args.until)
-        else:
-            from ..sources.logfiles import read_log_files
-
-            raw = read_log_files(spark, args.inputs, args.since, args.until)
-        (
-            raw.select("line", "file_day")
-            .write.format("stashlog")
-            .option("path", args.export_logs)
-            .option("compression", args.export_compression)
-            .mode("overwrite")
-            .save()
-        )
-    parsed = _load_parsed(spark, args.inputs, args.since, args.until, via=args.via)
+        raw = read_log_files(spark, args.inputs, args.since, args.until)
+        if args.export_logs is not None:
+            # format("stashlog") is registered by build_session
+            (
+                raw.select("line", "file_day")
+                .write.format("stashlog")
+                .option("path", args.export_logs)
+                .option("compression", args.export_compression)
+                .mode("overwrite")
+                .save()
+            )
+        parsed = parse_lines(raw).drop("line")
     result = modes[args.mode](parsed)
     if args.top is not None:
         # limit over the mode's own ordering → TakeOrderedAndProject in

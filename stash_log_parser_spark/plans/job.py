@@ -72,9 +72,10 @@ def main(argv: list[str] | None = None) -> dict:
         gen = generate_spark(spark, args.gen_requests, args.gen_days, seed=args.seed)
         gen.drop("line", "day").write.mode("overwrite").parquet(args.input)
 
+    from ..functions.parse import read_corpus
     from .routing import run_pipeline
 
-    n_rows = spark.read.parquet(args.input).count()
+    n_rows = read_corpus(spark, args.input).count()
     elapsed_all = []
     summary = None
     for rep in range(max(args.reps, 1)):

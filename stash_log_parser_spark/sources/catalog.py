@@ -84,15 +84,27 @@ class SinkCatalog:
     def _path(self, sink: str) -> str:
         return f"{self.base}/{sink}"
 
-    def _has_batch_layout(self, sink: str) -> bool:
-        """True when a sink already carries the streaming-ingest
-        ``batch=<id>/day=<d>`` two-level layout."""
+    def _has_layout(self, sink: str, prefix: str) -> bool:
+        """True when a sink has a top-level ``<prefix>`` partition dir:
+        ``batch=`` for streaming_ingest's ``batch=<id>/day=<d>`` layout,
+        ``day=`` for run_pipeline's flat one."""
         p = self._path(sink)
         return (
             not self.use_iceberg
             and os.path.isdir(p)
-            and any(n.startswith("batch=") for n in os.listdir(p))
+            and any(n.startswith(prefix) for n in os.listdir(p))
         )
+
+    def check_stream_layout(self, sink: str) -> None:
+        """Raise ValueError when ``sink`` has run_pipeline's flat layout: a
+        stream's ``batch=`` dirs next to it would make every read fail
+        with CONFLICTING_PARTITION_COLUMN_NAMES."""
+        if self._has_layout(sink, "day="):
+            raise ValueError(
+                f"{self.base}: {sink} holds flat day= partitions written by "
+                "the batch pipeline; a stream cannot write batch= "
+                "partitions next to them. Stream into a fresh output root."
+            )
 
     def write_partitions(
         self,
@@ -119,7 +131,7 @@ class SinkCatalog:
         if self.use_iceberg:
             df.writeTo(f"{self.base}.{sink}").overwritePartitions()
             return
-        if self._has_batch_layout(sink):
+        if self._has_layout(sink, "batch="):
             if days is None:
                 days = [r[0] for r in df.select(partition_col).distinct().collect()]
             self.write_batch_partitions(df, sink, BACKFILL_BATCH_ID, partition_col)

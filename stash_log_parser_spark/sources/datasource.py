@@ -1,26 +1,28 @@
 """Custom Python Data Source (Spark 4 ``pyspark.sql.datasource``) for
 raw access-log files: format ``"stashlog"`` — batch AND streaming.
 
-The built-in front door (:mod:`.logfiles`) reads log files through
-``spark.read.text``; this connector is the DataSource-V2-style sibling
-that owns its own planning, which buys three things the text source
-cannot give:
+The raw-log front door (:mod:`.logfiles`, the CLI's only reader) reads
+log files through ``spark.read.text`` and drops out-of-range files by
+name on the driver before the scan. This connector is the
+DataSource-V2-style sibling that owns its own planning:
 
-* **Planning-time file pruning via filter pushdown** — Catalyst pushes
-  ``file_day`` predicates into :meth:`StashLogBatchReader.pushFilters`;
-  pruned files are never opened, never scheduled, never read. On a
-  10^12-line archive, ``WHERE file_day >= X`` touches only the matching
-  day files — the same partition-pruning contract an Iceberg table
-  gives, expressed through the public Python DS API.
-* **Stable per-file row ids for free** — exactly one reader task owns a
-  file, so ``doc_id = <file>#<line-number>`` is deterministic with NO
+* **Filter pushdown** — Catalyst pushes ``file_day`` predicates written
+  on the loaded frame into :meth:`StashLogBatchReader.pushFilters`;
+  pruned files are never opened, never scheduled, never read.
+* **Stable per-file row ids** — exactly one reader task owns a file,
+  so ``doc_id = <file>#<line-number>`` is deterministic with NO
   occurrence-window shuffle (the text-source path needs one; see
-  logfiles.read_log_files). At web scale that removes the only
-  non-narrow stage of raw-file ingest.
+  logfiles.read_log_files).
 * **A replayable streaming source** — ``spark.readStream.format(
   "stashlog")`` replays the archive one file per micro-batch in
   filename-date order (offset = file index), feeding the streaming
   pipeline without a Kafka stand-in.
+* **A writer** (batch and streaming) that lays lines back down as
+  day-sharded log files; the CLI's ``--export-logs`` uses it.
+
+As a batch reader it is slower than the text source (every line
+crosses the Python/JVM boundary; README "Sources" has the numbers), so
+the CLI does not read through it.
 
 Parallelism = one :class:`InputPartition` per file — the natural grain
 of log archives (day-sharded, ~100 MB each); gzip members are not
@@ -42,7 +44,8 @@ Usage::
 
 Reference parity: S1 multi-file scan, S2 gzip decode, S3 filename-date
 ordering, S4 date-range pruning (SURVEY.md §3.1) — re-expressed through
-the public connector API instead of reader options.
+the public connector API: the range is a filter on the frame, not a
+reader option.
 """
 
 from __future__ import annotations
@@ -50,7 +53,6 @@ from __future__ import annotations
 import glob
 import gzip
 import os
-import re
 from typing import Iterable, Iterator, List, Tuple
 
 from pyspark.sql.datasource import (
@@ -69,7 +71,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from .logfiles import FILENAME_DATE_RE, sort_log_files
+from .logfiles import file_day, sort_log_files
 
 SCHEMA_DDL = "doc_id string, line string, source string, file_day string"
 
@@ -84,11 +86,6 @@ def _discover(path: str) -> List[str]:
     return sort_log_files(names)
 
 
-def _file_day(name: str) -> str:
-    m = re.search(FILENAME_DATE_RE, os.path.basename(name))
-    return m.group(1) if m else ""
-
-
 def _read_lines(path: str) -> Iterator[str]:
     opener = gzip.open if path.endswith(".gz") else open
     with opener(path, "rt", encoding="utf-8", errors="replace") as f:
@@ -98,7 +95,7 @@ def _read_lines(path: str) -> Iterator[str]:
 
 def _rows_for(path: str) -> Iterator[Tuple[str, str, str, str]]:
     source = os.path.basename(path)
-    day = _file_day(path)
+    day = file_day(path)
     for i, line in enumerate(_read_lines(path)):
         yield (f"{source}#{i}", line, source, day)
 
@@ -106,11 +103,6 @@ def _rows_for(path: str) -> Iterator[Tuple[str, str, str, str]]:
 class StashLogBatchReader(DataSourceReader):
     def __init__(self, options):
         self._files = _discover(options.get("path", ""))
-        since, until = options.get("since"), options.get("until")
-        if since:
-            self._files = [f for f in self._files if _file_day(f) >= since]
-        if until:
-            self._files = [f for f in self._files if _file_day(f) <= until]
 
     def pushFilters(self, filters: List[Filter]) -> Iterable[Filter]:
         """Absorb ``file_day`` comparisons as planning-time FILE pruning.
@@ -133,7 +125,7 @@ class StashLogBatchReader(DataSourceReader):
         for f in filters:
             cmp = ops.get(type(f))
             if cmp is not None and getattr(f, "attribute", None) == ("file_day",):
-                self._files = [x for x in self._files if cmp(_file_day(x), f.value)]
+                self._files = [x for x in self._files if cmp(file_day(x), f.value)]
             else:
                 leftover.append(f)
         return leftover

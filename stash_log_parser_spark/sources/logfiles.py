@@ -10,9 +10,10 @@ front door (SURVEY.md §3.1 S1–S4):
 * S3 filename-date order → the date is parsed out of ``input_file_name``
   into a ``file_day`` column; analyses bucket by timestamp anyway, so
   ordering is metadata, not a physical sort
-* S4 date-range file filter → ``file_day`` predicate; with a
-  directory-partitioned layout this prunes whole files before reading
-  (and under Iceberg, partition pruning)
+* S4 date-range file filter → the inputs are listed on the driver and
+  files whose name date is out of range are dropped before the scan
+  (the reference's ``createPredicate``); the ``file_day`` row predicate
+  stays, so an input that cannot be listed locally is still exact
 
 The decoded lines feed the SAME grok (functions.parse.parse_lines) and
 therefore every analysis unchanged.
@@ -21,12 +22,43 @@ therefore every analysis unchanged.
 from __future__ import annotations
 
 import datetime as dt
+import glob
+import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .catalog import data_files
+
 FILENAME_DATE_RE = r"(\d{4}-\d{2}-\d{2})"
+
+
+def file_day(name: str) -> str:
+    """The ISO date in a log file's basename, or "" when it has none."""
+    m = re.search(FILENAME_DATE_RE, os.path.basename(name))
+    return m.group(1) if m else ""
+
+
+def _files_in_range(paths: str | list[str], since, until) -> list[str]:
+    """Expand ``paths`` on the driver (``glob.glob``, then the catalog's
+    listing walk, which skips ``_``/``.`` names as Spark does) and drop
+    the files whose name date is out of range. An input that lists
+    nothing locally (a remote URI, a missing path) is kept as given, so
+    Spark reads it or raises its own error."""
+    lo = None if since is None else str(since)
+    hi = None if until is None else str(until)
+    kept = []
+    for p in [paths] if isinstance(paths, str) else paths:
+        files = [f for m in sorted(glob.glob(p)) for f in data_files(m)]
+        if not files:
+            kept.append(p)
+            continue
+        kept.extend(
+            f for f in files
+            if (lo is None or file_day(f) >= lo) and (hi is None or file_day(f) <= hi)
+        )
+    return kept
 
 
 def read_log_files(
@@ -39,7 +71,8 @@ def read_log_files(
 
     ``since``/``until`` (inclusive ISO dates) filter by the date embedded
     in the file name — the reference's ``sortLogFiles``/``createPredicate``
-    semantics (File.hs:~30/~50 [K]) expressed as a prunable predicate.
+    semantics (File.hs:~30/~50 [K]): out-of-range files are never
+    scanned, and the same range filters rows by ``file_day``.
 
     ``doc_id`` is synthesized as ``<file>#<hash>`` where the hash is
     ``xxhash64(line, occurrence-among-identical-lines)`` — STABLE across
@@ -61,7 +94,7 @@ def read_log_files(
     """
     from pyspark.sql import Window
 
-    df = spark.read.text(paths)
+    df = spark.read.text(_files_in_range(paths, since, until))
     src = F.element_at(F.split(F.input_file_name(), "/"), -1)
     df = (
         df.withColumn("source", src)

@@ -476,6 +476,9 @@ def streaming_ingest(
     commit) overwrites exactly the partitions it wrote before, giving
     exactly-once sink contents without a transactional store.
 
+    An output root that run_pipeline wrote first is refused with a
+    ValueError before the stream starts.
+
     Runs with trigger(availableNow) and blocks until the backlog is
     drained; returns {"batches": n, "rows": total,
     "lineage_compaction": {...}}, ``rows`` summed from the stage's
@@ -486,6 +489,7 @@ def streaming_ingest(
 
     sinks = sinks or SINKS
     catalog = SinkCatalog(spark, output)
+    catalog.check_stream_layout("parsed_stage")
     progress = {"batches": 0, "rows": 0}
 
     def handle(raw_batch: DataFrame, batch_id: int) -> None:

@@ -117,18 +117,6 @@ def test_cli_top_rejects_nonpositive(log_dir):
         analyze.main(["repositoryStats", os.path.join(log_dir, "*"), "--top", "0"])
 
 
-def test_cli_via_stashlog_matches_text_front_door(spark, log_dir, capsys):
-    """The same .log/.log.gz archive read through --via stashlog (the
-    custom Python Data Source) must print EXACTLY what the text front
-    door prints — the reference-UX surface now covers the data source
-    end-to-end (round-4 verdict item)."""
-    analyze.main(["gitOperations", os.path.join(log_dir, "*")])
-    via_text = capsys.readouterr().out
-    analyze.main(["gitOperations", log_dir, "--via", "stashlog"])
-    via_ds = capsys.readouterr().out
-    assert via_ds == via_text and via_text.strip()
-
-
 def test_cli_export_logs_roundtrips_the_archive(spark, log_dir, tmp_path, capsys):
     """--export-logs re-emits the date-filtered raw lines through the
     stashlog staged-rename writer; re-analyzing the exported archive
@@ -152,7 +140,7 @@ def test_cli_export_logs_roundtrips_the_archive(spark, log_dir, tmp_path, capsys
     names = sorted(os.listdir(out_dir))
     assert names and all(n.startswith("stash-access-") for n in names)
     assert all(days[1] in n or n > f"stash-access-{days[1]}" for n in names)
-    # re-analyze the exported archive through the data source
-    analyze.main(["countRequests", out_dir, "--via", "stashlog"])
+    # re-analyze the exported archive
+    analyze.main(["countRequests", out_dir])
     replay = capsys.readouterr().out
     assert replay == direct

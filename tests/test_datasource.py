@@ -126,17 +126,6 @@ def test_streaming_replays_one_file_per_batch(registered, log_dir):
     assert len(batches) == 3  # one file per micro-batch
 
 
-def test_since_until_options(registered, log_dir):
-    df = (
-        registered.read.format("stashlog")
-        .option("path", log_dir)
-        .option("since", "2012-09-09")
-        .option("until", "2012-09-09")
-        .load()
-    )
-    assert {r.file_day for r in df.collect()} == {"2012-09-09"}
-
-
 def test_streaming_source_feeds_the_pipeline(registered, log_dir):
     """stashlog streaming source → grok → per-hour git-op counts equals
     the same computation over the batch read: the connector is a real

@@ -43,6 +43,24 @@ def test_date_range_file_filter(spark, log_dir):
     assert days == {"2012-09-09"}
 
 
+def test_date_range_plans_only_in_range_files(spark, log_dir):
+    """since/until drop out-of-range files before the scan, for a
+    directory input and for a glob; an input that lists nothing locally
+    reaches Spark unchanged."""
+    import os
+
+    from pyspark.errors import AnalysisException
+
+    for inp in (log_dir, os.path.join(log_dir, "*.log*")):
+        df = read_log_files(spark, inp, since="2012-09-09", until="2012-09-09")
+        names = [os.path.basename(f) for f in df.inputFiles()]
+        assert names == ["atlassian-stash-access-2012-09-09.0.log"], inp
+        none = read_log_files(spark, inp, since="2013-01-01")
+        assert none.inputFiles() == [] and none.count() == 0, inp
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_log_files(spark, os.path.join(log_dir, "missing"), since="2012-09-09")
+
+
 def test_parse_and_analyse_from_raw_files(spark, log_dir):
     parsed = parse_log_files(spark, log_dir)
     counts = A.count_requests(parsed).collect()[0]

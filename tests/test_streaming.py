@@ -422,6 +422,50 @@ def test_streaming_ingest_recomputes_one_split_day(spark, day_aligned_dir, tmp_p
     )
 
 
+def test_streaming_ingest_refuses_a_batch_pipeline_root(spark, tmp_path):
+    """A stream into an output root that run_pipeline wrote first fails
+    before it starts, naming the root and ``parsed_stage``: its
+    ``batch=`` partitions next to the batch run's flat ``day=`` ones
+    would leave the root unreadable. The root's files are untouched and
+    a later batch run still appends the next day."""
+    import hashlib
+    import os
+
+    from stash_log_parser_spark.plans.routing import run_pipeline
+    from stash_log_parser_spark.streaming.stream import streaming_ingest
+
+    p = str(tmp_path / "gen.parquet")
+    corpus.write_corpus(p, n_requests_per_day=100, n_days=2, seed=41)
+    df = spark.read.parquet(p).select("doc_id", "tokens", "n_tok", "source")
+    first = _file_days(df)[0]
+    day0 = str(tmp_path / "day0")
+    df.filter(F.col("source").contains(first)).coalesce(1).write.parquet(day0)
+    both = str(tmp_path / "both")
+    _write_split_days(df, both, split_days=set())
+    out = str(tmp_path / "out")
+    run_pipeline(spark, day0, out, run_id="day0")
+
+    def listing():
+        files = {}
+        for d, _, names in os.walk(out):
+            for n in names:
+                with open(os.path.join(d, n), "rb") as f:
+                    files[os.path.relpath(os.path.join(d, n), out)] = (
+                        hashlib.sha256(f.read()).hexdigest()
+                    )
+        return files
+
+    before = listing()
+    with pytest.raises(ValueError, match="parsed_stage") as err:
+        streaming_ingest(
+            spark, both, out, str(tmp_path / "cp"), max_files_per_trigger=1
+        )
+    assert out in str(err.value)
+    assert listing() == before
+    s = run_pipeline(spark, both, out, run_id="day1")
+    assert s["days_parsed"] == 1
+
+
 def test_streaming_exact_dedup_suppresses_across_batches(spark, tmp_path):
     """A re-crawled duplicate arriving BATCHES after its original must be
     suppressed by keyed GroupState (in-batch grouping can't see it), and
